@@ -18,7 +18,8 @@ Subcommands:
     generate      — write a deterministic synthetic change stream
     show          — print snapshot + row count
     changes       — incremental changelog since a snapshot id
-    lookup        — point lookup (driver-side bucket, bloom-pruned)
+    lookup        — point lookup (driver-side bucket, bloom-pruned; small
+                    inputs are read on the driver, with no Spark job)
     feed          — pump the changes feed into another table
                     (durable cursor, exactly-once)
 
@@ -121,7 +122,8 @@ def main(argv: list[str] | None = None) -> int:
 
     lk = sub.add_parser("lookup",
                         help="point lookup (driver-side bucket + "
-                             "bloom-pruned file scan)")
+                             "bloom-pruned file read; no Spark job when "
+                             "the files fit one input split)")
     lk.add_argument("--table", required=True)
     lk.add_argument("--key", required=True)
 
@@ -295,14 +297,12 @@ def main(argv: list[str] | None = None) -> int:
 
         t = LakeTable.load(spark, args.table)
         # argparse delivers a string; the driver-side bucket/bloom hash
-        # is type-sensitive (a bigint key hashes its 8 LE bytes, not
-        # its decimal string) — cast through the table's key type.
+        # is type-sensitive (an integer key hashes its little-endian
+        # bytes, 4 for byte/short/int and 8 for bigint, not its decimal
+        # string) — convert through the table's key type, which
+        # lookup_files also hashes by.
         key_type = t.snapshot.schema[t.key_col].dataType
-        key = (
-            int(args.key)
-            if isinstance(key_type, (T.LongType, T.IntegerType, T.ShortType))
-            else args.key
-        )
+        key = int(args.key) if isinstance(key_type, T.IntegralType) else args.key
         n_files = len(t.lookup_files(key))
         rows = [r.asDict() for r in t.lookup(key).collect()]
         print(

@@ -6,11 +6,11 @@ parquet writer's per-column bloom filter knobs,
 
 * **XXH64** — a pure-Python implementation of the public XXH64
   algorithm (Yann Collet's xxHash, public spec), bit-identical to
-  Spark's ``F.xxhash64`` for string and bigint columns at Spark's
-  fixed seed 42 (pinned by tests/test_lake_table.py bucket-parity
-  over random keys). This lets ``LakeTable.lookup`` compute the
-  key's bucket on the driver — a point lookup must not launch a
-  Spark job before the read.
+  Spark's ``F.xxhash64`` for string, byte/short/int and bigint columns
+  at Spark's fixed seed 42 (pinned by tests/test_lake_table.py
+  bucket-parity over random keys). This lets ``LakeTable.lookup``
+  compute the key's bucket on the driver — a point lookup must not
+  launch a Spark job before the read.
 * **KeyBloom** — a tiny per-data-file bloom over the key column,
   built executor-side during the post-write manifest job and stored
   (base64) in the snapshot's ``FileEntry``. ``lookup`` consults it to
@@ -31,6 +31,7 @@ import struct
 import sys
 
 import numpy as np
+from pyspark.sql import types as T
 
 # The vectorized XXH64 kernel views uint8 row bytes through '<u8'/'<u4'
 # and then does native-order uint64 arithmetic, which matches the
@@ -127,10 +128,17 @@ def xxh64_long(value: int, seed: int = SPARK_SEED) -> int:
     return xxh64(struct.pack("<q", int(value)), seed)
 
 
-def spark_xxhash64(value, seed: int = SPARK_SEED) -> int:
+def spark_xxhash64(value, seed: int = SPARK_SEED, key_type=None) -> int:
     """Spark-compatible xxhash64 of a string or integer key, as a
-    SIGNED 64-bit value (Spark returns LongType)."""
-    if isinstance(value, (int, np.integer)):
+    SIGNED 64-bit value (Spark returns LongType).
+
+    ``key_type`` is the key column's Spark type. Spark hashes byte,
+    short and int columns as 4-byte ints (``XXH64.hashInt``) and bigint
+    columns as 8 bytes; without a type a Python int is taken as bigint.
+    """
+    if isinstance(key_type, (T.ByteType, T.ShortType, T.IntegerType)):
+        h = xxh64(struct.pack("<i", int(value)), seed)
+    elif isinstance(value, (int, np.integer)):
         h = xxh64_long(int(value), seed)
     elif isinstance(value, str):
         h = xxh64(value.encode("utf-8"), seed)
@@ -141,10 +149,11 @@ def spark_xxhash64(value, seed: int = SPARK_SEED) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def bucket_of(value, n_buckets: int) -> int:
+def bucket_of(value, n_buckets: int, key_type=None) -> int:
     """Driver-side mirror of ``LakeTable.bucket_expr``:
-    ``pmod(xxhash64(key), n_buckets)``."""
-    return spark_xxhash64(value) % n_buckets
+    ``pmod(xxhash64(key), n_buckets)`` for a key column of Spark type
+    ``key_type`` (see ``spark_xxhash64``)."""
+    return spark_xxhash64(value, key_type=key_type) % n_buckets
 
 
 # ------------------------------------------------------- vectorized XXH64

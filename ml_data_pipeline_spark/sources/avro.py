@@ -168,12 +168,19 @@ def _decode_value(mv: memoryview, pos: int, dt: T.DataType):
 # ------------------------------------------------------------ container file
 
 
+def _sync_marker(sync: bytes | None) -> bytes:
+    """The container's 16-byte sync marker (random when not given)."""
+    sync = sync or uuid.uuid4().bytes
+    if len(sync) != 16:
+        raise ValueError(f"avro sync marker must be 16 bytes, got {len(sync)}")
+    return sync
+
+
 def write_avro_bytes(
     rows: list[tuple], schema: T.StructType, sync: bytes | None = None
 ) -> bytes:
     """Encode rows as one Avro Object Container File (null codec)."""
-    sync = sync or uuid.uuid4().bytes
-    assert len(sync) == 16
+    sync = _sync_marker(sync)
     buf = bytearray()
     buf += MAGIC
     meta = {
@@ -320,8 +327,7 @@ def write_avro_pandas(
         return write_avro_bytes(
             list(pdf.itertuples(index=False, name=None)), schema, sync
         )
-    sync = sync or uuid.uuid4().bytes
-    assert len(sync) == 16
+    sync = _sync_marker(sync)
     buf = bytearray()
     buf += MAGIC
     meta = {

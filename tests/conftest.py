@@ -7,7 +7,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ml_data_pipeline_spark.session import build_session  # noqa: E402
+from ml_data_pipeline_spark.session import (  # noqa: E402
+    build_session,
+    default_parallelism,
+)
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
@@ -16,7 +19,7 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 def spark():
     s = build_session(
         app_name="mlp-tests",
-        cores=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")),
+        cores=default_parallelism(),
         shuffle_partitions=8,
     )
     yield s

@@ -59,6 +59,20 @@ def test_empty_file_and_corrupt_sync():
         read_avro_bytes(b"PAR1xxxx", SCHEMA)
 
 
+def test_short_sync_marker_rejected():
+    """A sync marker that is not 16 bytes is refused with ValueError by
+    both container encoders (a check ``python -O`` cannot strip)."""
+    import pandas as pd
+
+    from ml_data_pipeline_spark.sources.avro import write_avro_pandas
+
+    with pytest.raises(ValueError, match="16 bytes"):
+        write_avro_bytes([(1, "x", 1.0, True, [1])], SCHEMA, sync=b"\x01" * 15)
+    flat = T.StructType([T.StructField("a", T.LongType())])
+    with pytest.raises(ValueError, match="16 bytes"):
+        write_avro_pandas(pd.DataFrame({"a": [1, 2]}), flat, sync=b"\x01" * 15)
+
+
 def test_numpy_block_encoder_byte_identical_to_row_loop():
     """Round-6: the vectorized block encoder must produce BYTE-FOR-BYTE
     the row loop's container output — nullable unions, zigzag varints,

@@ -253,3 +253,26 @@ def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
         got = t.lookup(r["doc_id"]).collect()
         assert len(got) == 1 and got[0]["n_tok"] == r["n_tok"]
     assert t.lookup("doc-99999999").count() == 0
+
+
+def test_pump_window_holding_only_a_compaction(spark, tmp_path):
+    """A window whose only commit is a compaction carries no net change.
+    Its merge into the replica must record zero events (the observed
+    plan can be pruned to nothing and emit no metrics row) and advance
+    the cursor, leaving the replica as it was."""
+    from ml_data_pipeline_spark.lake.feed import ChangesFeed
+
+    src = create_docs_table(spark, str(tmp_path / "src"), n_buckets=4)
+    replica = create_docs_table(spark, str(tmp_path / "replica"), n_buckets=4)
+    src.merge_batch(change_events_df(spark, 40, 400, seed=9), batch_id=0)
+    feed = ChangesFeed(src, str(tmp_path / "cursor.json"))
+    feed.pump_into(replica)
+    before = sorted(tuple(r) for r in replica.read().collect())
+    compacted = src.compact()["snapshot_id"]
+
+    out = feed.pump_into(replica)
+    assert out["advanced"] and out["cursor"] == compacted
+    assert feed.cursor == compacted
+    assert out["upsert_rows"] == 0
+    assert sorted(tuple(r) for r in replica.read().collect()) == before
+    assert feed.pump_into(replica)["advanced"] is False

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -279,6 +280,23 @@ def test_driver_side_bucket_parity(spark):
     ).collect()
     for r in got:
         assert spark_xxhash64(r["k"]) == r["h"], r["k"]
+        assert spark_xxhash64(r["k"], key_type=T.LongType()) == r["h"], r["k"]
+    # byte/short/int columns hash as 4-byte ints, not as bigint
+    for ddl, key_type, bits in (
+        ("int", T.IntegerType(), 32),
+        ("short", T.ShortType(), 16),
+        ("byte", T.ByteType(), 8),
+    ):
+        lo, hi = -(2 ** (bits - 1)), 2 ** (bits - 1) - 1
+        vals = [lo, hi, 0, -1] + [rng.randint(lo, hi) for _ in range(300)]
+        got = spark.createDataFrame([(v,) for v in vals], f"k {ddl}").select(
+            "k",
+            F.xxhash64("k").alias("h"),
+            F.pmod(F.xxhash64("k"), F.lit(16)).cast("int").alias("b"),
+        ).collect()
+        for r in got:
+            assert spark_xxhash64(r["k"], key_type=key_type) == r["h"], (ddl, r["k"])
+            assert bucket_of(r["k"], 16, key_type) == r["b"], (ddl, r["k"])
 
 
 def test_lookup_correct_without_blooms(spark, tmp_path, monkeypatch):
@@ -339,3 +357,171 @@ def test_point_lookup_bloom_prunes_files(spark, tmp_path):
     assert t.lookup("d3_7").collect()[0]["tokens"] == [9, 9]
     t.merge_batch(_events(spark, [(901, "D", "d3_7", None, None, None, None)]), batch_id=9)
     assert t.lookup("d3_7").count() == 0
+
+
+# ------------------------------------------------------------- lookup paths
+
+
+def _jobs(spark) -> set:
+    sc = spark.sparkContext
+    # Job events reach the status tracker through the asynchronous
+    # listener bus: drain it so every job started so far is counted.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(None))
+
+
+@contextlib.contextmanager
+def _split_bytes(spark, value: str):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _lookup_parity(spark, t, keys) -> set:
+    """For every key, ``lookup`` at the session's split size, ``lookup``
+    forced onto the Spark plan (a split smaller than any data file) and
+    ``read()`` filtered to the key must agree. Returns the keys whose
+    lookup at the session's split size started a Spark job."""
+    snap = t.refresh()
+    assert all(f.bytes > 512 for f in snap.files)
+    state = {r[snap.key_col]: tuple(r) for r in t.read().collect()}
+    with _split_bytes(spark, "512"):
+        via_spark = {k: [tuple(r) for r in t.lookup(k).collect()] for k in keys}
+    started = set()
+    for k in keys:
+        want = [state[k]] if k in state else []
+        before = _jobs(spark)
+        got = [tuple(r) for r in t.lookup(k).collect()]
+        if _jobs(spark) != before:
+            started.add(k)
+        assert got == want, (k, got, want)
+        assert via_spark[k] == want, (k, via_spark[k], want)
+    return started
+
+
+def test_lookup_paths_agree_over_deltas_deletes_and_reinserts(spark, tmp_path):
+    t = _mk_table(spark, tmp_path, n_buckets=2)
+    batches = [
+        [(i, "I", f"d{i}", [i, i], 2, "web", None) for i in range(30)],
+        [(100 + i, "U", f"d{i}", [i, 100], 2, "books", None) for i in range(10)]
+        + [(110 + i, "D", f"d{i}", None, None, None, None) for i in range(10, 15)],
+        [(200 + i, "I", f"d{i}", [i, 200], 2, "code", None) for i in range(10, 13)]
+        + [(210, "D", "d0", None, None, None, None), (211, "D", "d1", None, None, None, None)],
+        # a late lower-seq update loses; a fresh key arrives
+        [(50, "U", "d2", [50], 1, "web", None), (300, "I", "d30", [30], 1, "web", None)],
+    ]
+    for b, rows in enumerate(batches):
+        t.merge_batch(_events(spark, rows), batch_id=b)
+    per_bucket = {}
+    for f in t.refresh().files:
+        per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
+    assert min(per_bucket.values()) >= 3
+    keys = [f"d{i}" for i in range(31)] + ["absent", "d99"]
+    assert _lookup_parity(spark, t, keys) == set()
+
+
+def test_lookup_paths_agree_across_schema_evolution(spark, tmp_path):
+    """Files written before a column was added and ``n_tok`` widened
+    int → long are read aligned to the current schema."""
+    t = _mk_table(spark, tmp_path, n_buckets=2)
+    t.merge_batch(
+        _events(spark, [(i, "I", f"d{i}", [i], 1, "web", None) for i in range(12)]),
+        batch_id=0,
+    )
+    v2 = T.StructType(
+        [
+            f if f.name != "n_tok" else T.StructField("n_tok", T.LongType())
+            for f in CHANGE_SCHEMA.fields
+        ]
+        + [T.StructField("lang", T.StringType())]
+    )
+    ev = spark.createDataFrame(
+        [(100 + i, "U", f"d{i}", [i, 1], 2, "web", None, "en") for i in range(0, 12, 3)]
+        + [(120, "I", "d12", [12], 1, "code", None, "de")],
+        v2,
+    )
+    assert t.merge_batch(ev, batch_id=1)["schema_evolved"]
+    snap = t.refresh()
+    assert isinstance(snap.schema["n_tok"].dataType, T.LongType)
+    assert len({f.schema_fp for f in snap.files}) == 2
+    keys = [f"d{i}" for i in range(13)] + ["absent"]
+    assert _lookup_parity(spark, t, keys) == set()
+    assert tuple(t.lookup("d3").collect()[0]) == ("d3", [3, 1], 2, "web", "en")
+    assert tuple(t.lookup("d4").collect()[0]) == ("d4", [4], 1, "web", None)
+
+
+def test_lookup_tie_on_max_seq(spark, tmp_path):
+    """Rows tied on the max ``_seq`` (the same seq delivered in two
+    batches): identical rows stay on the driver; differing rows take the
+    Spark plan, whose ``max(struct(...))`` breaks the tie."""
+    t = _mk_table(spark, tmp_path, n_buckets=1)
+    t.merge_batch(
+        _events(spark, [(5, "U", "d1", [1], 1, "web", None), (6, "I", "d2", [2], 1, "web", None)]),
+        batch_id=0,
+    )
+    t.merge_batch(
+        _events(spark, [(5, "U", "d1", [2], 1, "web", None), (6, "I", "d2", [2], 1, "web", None)]),
+        batch_id=1,
+    )
+    snap = t.refresh()
+    assert t._lookup_on_driver("d1", t.lookup_files("d1", snap), snap) is None
+    assert t._lookup_on_driver("d2", t.lookup_files("d2", snap), snap) is not None
+    assert _lookup_parity(spark, t, ["d1", "d2"]) == {"d1"}
+
+
+def test_lookup_patch_table_takes_spark_plan(spark, tmp_path):
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "tbl"),
+        DOC_SCHEMA,
+        key_col="doc_id",
+        n_buckets=2,
+        properties={"patch.enabled": "true"},
+    )
+    t.merge_batch(
+        _events(
+            spark,
+            [
+                (1, "I", "a", [1, 2], 2, "web", None),
+                (2, "P", "a", None, None, "books", None),
+                (3, "I", "b", [3], 1, "code", None),
+                (4, "P", "c", [4], 1, None, None),
+            ],
+        ),
+        batch_id=0,
+    )
+    t.merge_batch(
+        _events(
+            spark,
+            [(5, "P", "b", [9], 1, None, None), (6, "I", "c", [6], 1, "web", None)],
+        ),
+        batch_id=1,
+    )
+    assert _lookup_parity(spark, t, ["a", "b", "c"]) == {"a", "b", "c"}
+    assert t.lookup("a").collect()[0]["source"] == "books"
+
+
+def test_int_keyed_lookup(spark, tmp_path):
+    """A table keyed on an IntegerType column: the driver-side bucket
+    must hash the key as Spark hashes an int column (4 bytes)."""
+    schema = T.StructType(
+        [T.StructField("id", T.IntegerType(), False), T.StructField("v", T.StringType())]
+    )
+    events = T.StructType(
+        [
+            T.StructField("seq", T.LongType()),
+            T.StructField("op", T.StringType()),
+            *schema.fields,
+        ]
+    )
+    t = LakeTable.create(spark, str(tmp_path / "tbl"), schema, key_col="id", n_buckets=4)
+    rows = [(i, "I", i, f"v{i}") for i in range(20)] + [(50, "D", 7, None)]
+    t.merge_batch(spark.createDataFrame(rows, events), batch_id=0)
+    assert t.read().where("id = 5").collect()[0]["v"] == "v5"
+    assert [tuple(r) for r in t.lookup(5).collect()] == [(5, "v5")]
+    assert t.lookup(7).collect() == []
+    assert _lookup_parity(spark, t, list(range(21))) == set()

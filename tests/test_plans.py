@@ -173,9 +173,11 @@ def test_spread_skips_already_splittable_inputs(spark, tmp_path):
         spread_partitions,
     )
 
-    # single file, MANY row groups >= any spread width we'd pick
-    n_rg = 200
-    tbl = pa.table({"doc_id": list(range(2000)), "text": ["x" * 2000] * 2000})
+    # single file, MORE row groups than any spread width we'd pick
+    # (spread_partitions caps the width at 3 waves per core)
+    n_rg = 3 * spark.sparkContext.defaultParallelism + 1
+    n_rows = 10 * n_rg
+    tbl = pa.table({"doc_id": list(range(n_rows)), "text": ["x" * 2000] * n_rows})
     p = tmp_path / "documents.parquet"
     pq.write_table(tbl, p, row_group_size=10)
     assert _effective_scan_parallelism(str(tmp_path), "documents") == n_rg
