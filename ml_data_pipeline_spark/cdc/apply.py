@@ -62,7 +62,6 @@ def apply_batch(
     *,
     stream_id: str = "cdc",
     salt: int | None = None,
-    compact_touched: bool = False,
     write_metrics: bool = True,
     collect_input_lineage: bool = False,
 ) -> dict:
@@ -95,7 +94,6 @@ def apply_batch(
         batch_id=batch_id,
         stream_id=stream_id,
         salt=salt,
-        compact_touched=compact_touched,
     )
     wall_ms = (time.monotonic() - t0) * 1000.0
     res["wall_ms"] = wall_ms

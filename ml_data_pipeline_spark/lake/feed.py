@@ -130,8 +130,6 @@ class ChangesFeed:
         )
         res = dest.merge_batch(
             events,
-            seq_col="seq",
-            op_col="op",
             batch_id=target,
             stream_id=stream_id,
             exclude_cols=(),
@@ -208,8 +206,6 @@ class ChangesFeed:
         )
         res = dest.merge_batch(
             events,
-            seq_col="seq",
-            op_col="op",
             batch_id=snap.snapshot_id,
             stream_id=stream_id,
             exclude_cols=(),

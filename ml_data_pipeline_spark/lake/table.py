@@ -60,10 +60,11 @@ import json
 import os
 import uuid
 from dataclasses import dataclass, field
-from typing import Iterable, Sequence
+from typing import Callable, Iterable, Sequence
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ml_data_pipeline_spark.lake.schema_evolution import (
@@ -78,6 +79,9 @@ HIDDEN_COLS = (SEQ_COL, DELETED_COL)
 PS_PREFIX = "_ps_"  # per-column patch-seq columns (patch-enabled tables)
 PATCH_PROP = "patch.enabled"
 CARRIER_SEQ = -(2**62)  # _seq of patch-carrier rows: loses to any full event
+EVENT_SEQ = "seq"  # change-event LSN column (merge_batch input)
+EVENT_OP = "op"  # change-event op column: 'I'|'U'|'D', plus 'P' on patch tables
+COMMIT_ATTEMPTS = 5  # consecutive lost commit races before a writer gives up
 
 
 class CommitConflict(Exception):
@@ -179,6 +183,22 @@ class Snapshot:
             ]
         return T.StructType(fields)
 
+    def child(self, schema_json: dict | None = None) -> "Snapshot":
+        """The uncommitted next snapshot on top of this one: same files,
+        schemas, watermarks and properties (copies the caller may
+        mutate), an empty summary, and ``schema_json`` if given."""
+        return Snapshot(
+            snapshot_id=self.snapshot_id + 1,
+            parent_id=self.snapshot_id,
+            schema_json=self.schema_json if schema_json is None else schema_json,
+            key_col=self.key_col,
+            n_buckets=self.n_buckets,
+            files=list(self.files),
+            schemas=dict(self.schemas),
+            watermarks=dict(self.watermarks),
+            properties=dict(self.properties),
+        )
+
     def to_json(self) -> dict:
         return {
             "snapshot_id": self.snapshot_id,
@@ -207,6 +227,19 @@ class Snapshot:
             summary=d.get("summary", {}),
             properties=d.get("properties", {}),
         )
+
+
+def _align(schema: T.StructType, have: Iterable[str]) -> list[Column]:
+    """Project a frame holding the columns ``have`` onto ``schema``:
+    each field cast to its type, a field the frame lacks (added after
+    the frame's data was written) as null."""
+    have = set(have)
+    return [
+        (F.col(f.name) if f.name in have else F.lit(None))
+        .cast(f.dataType)
+        .alias(f.name)
+        for f in schema.fields
+    ]
 
 
 def _schema_fp(schema: T.StructType) -> str:
@@ -655,22 +688,30 @@ class LakeTable:
         for fp, paths in by_fp.items():
             fschema = T.StructType.fromJson(snap.schemas[fp])
             df = self.spark.read.schema(fschema).parquet(*paths)
-            cols = []
-            have = set(fschema.fieldNames())
-            for f_ in storage.fields:
-                if f_.name in have:
-                    cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
-                else:
-                    # Field added after this file was written → null.
-                    cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-            parts.append(df.select(*cols))
+            parts.append(df.select(*_align(storage, fschema.fieldNames())))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
 
+    @classmethod
+    def _reduce(
+        cls, df: DataFrame, snap: Snapshot, salt_col: str | None = None
+    ) -> DataFrame:
+        """Per-key latest state of ``snap``'s storage rows ``df``: the
+        per-column patch reduce on patch-enabled tables, else max
+        ``_seq``. ``salt_col`` groups by (key, salt) for the first
+        phase of a salted two-phase reduce."""
+        if snap.patch_enabled:
+            return cls._reduce_latest_patch(
+                df, snap.key_col, snap.payload_cols(), salt_col=salt_col
+            )
+        return cls._reduce_latest(df, snap.key_col, salt_col=salt_col)
+
     @staticmethod
-    def _reduce_latest(df: DataFrame, key_col: str) -> DataFrame:
+    def _reduce_latest(
+        df: DataFrame, key_col: str, salt_col: str | None = None
+    ) -> DataFrame:
         """Per-key last-write-wins by max ``_seq``.
 
         Uses ``groupBy + max(struct(_seq, ...))`` rather than a window
@@ -678,9 +719,12 @@ class LakeTable:
         combines map-side before the shuffle — a hot key collapses to
         one row per map task instead of shipping every version to a
         single reducer. This is the skew-proof reduction primitive.
+        Max-by-seq is associative, so reducing by (key, ``salt_col``)
+        and then by key is an exact split.
         """
-        other = [c for c in df.columns if c not in (key_col, SEQ_COL)]
-        packed = df.groupBy(key_col).agg(
+        group = [key_col] if salt_col is None else [key_col, salt_col]
+        other = [c for c in df.columns if c not in (*group, SEQ_COL)]
+        packed = df.groupBy(*group).agg(
             F.max(F.struct(SEQ_COL, *other)).alias("_p")
         )
         return packed.select(
@@ -780,15 +824,7 @@ class LakeTable:
             bexpr = self.bucket_expr(snap=snap)
             need = raw.where(bexpr.isin([int(b) for b in delta_buckets]))
             done = raw.where(~bexpr.isin([int(b) for b in delta_buckets]))
-            if snap.patch_enabled:
-                red = self._reduce_latest_patch(
-                    need,
-                    snap.key_col,
-                    [f.name for f in snap.schema.fields if f.name != snap.key_col],
-                )
-            else:
-                red = self._reduce_latest(need, snap.key_col)
-            reduced = red.unionByName(done)
+            reduced = self._reduce(need, snap).unionByName(done)
         else:
             reduced = raw
         live = reduced.where(~F.col(DELETED_COL))
@@ -882,12 +918,7 @@ class LakeTable:
         raw = self.scan_files(files=cand, snap=snap).where(
             F.col(snap.key_col) == F.lit(key_value)
         )
-        if snap.patch_enabled:
-            red = self._reduce_latest_patch(
-                raw, snap.key_col, snap.payload_cols()
-            )
-        else:
-            red = self._reduce_latest(raw, snap.key_col)
+        red = self._reduce(raw, snap)
         return red.where(~F.col(DELETED_COL)).select(*snap.schema.fieldNames())
 
     def _lookup_on_driver(
@@ -946,8 +977,7 @@ class LakeTable:
             return F.col(SEQ_COL)
         parts = [F.col(SEQ_COL)] + [
             F.coalesce(F.col(PS_PREFIX + c), F.lit(CARRIER_SEQ))
-            for c in snap.schema.fieldNames()
-            if c != snap.key_col
+            for c in snap.payload_cols()
         ]
         return F.greatest(*parts) if len(parts) > 1 else parts[0]
 
@@ -1004,7 +1034,7 @@ class LakeTable:
             ) from None
         base_paths = {f.path for f in base.files}
         added = [f for f in snap.files if f.path not in base_paths]
-        payload = [f.name for f in snap.schema.fields if f.name != snap.key_col]
+        payload = snap.payload_cols()
         out_schema = T.StructType(
             [T.StructField("op", T.StringType())]
             + list(snap.storage_schema().fields)
@@ -1021,11 +1051,6 @@ class LakeTable:
         if not added:
             return self.spark.createDataFrame([], out_schema)
 
-        def _reduce(df: DataFrame) -> DataFrame:
-            if snap.patch_enabled:
-                return self._reduce_latest_patch(df, snap.key_col, payload)
-            return self._reduce_latest(df, snap.key_col)
-
         touched = set()
         for f in added:
             touched.add(f.bucket)
@@ -1035,9 +1060,9 @@ class LakeTable:
         # (snap.schemas keeps every historical fingerprint), so both
         # sides align even across mid-window schema evolution.
         base_files = [f for f in base.files if f.bucket in touched]
-        base_state = _reduce(self.scan_files(files=base_files, snap=snap))
+        base_state = self._reduce(self.scan_files(files=base_files, snap=snap), snap)
         win = self.scan_files(files=added, snap=snap)
-        new_state = _reduce(base_state.unionByName(win))
+        new_state = self._reduce(base_state.unionByName(win), snap)
         ver = self._version_expr(snap)
         old_cols = []
         if include_old:
@@ -1082,23 +1107,19 @@ class LakeTable:
         self,
         events: DataFrame,
         *,
-        seq_col: str = "seq",
-        op_col: str = "op",
         batch_id: int | None = None,
         stream_id: str = "default",
         exclude_cols: Sequence[str] = ("ts", "chunk"),
-        compact_touched: bool = False,
         salt: int | None = None,
-        quarantine: bool = True,
-        summary_extra: dict | None = None,
     ) -> dict:
         """Apply one micro-batch of change events. Returns metrics dict.
 
         ``events`` columns: ``op`` ('I'|'U'|'D'), ``seq`` (long, the
-        LSN), the key column, payload columns. Semantics: per key the
-        max-``seq`` event wins, globally, across batches and replays —
-        enforced within the batch here and across batches by the
-        read/compaction reduce over stored ``_seq``.
+        LSN), the key column, payload columns; ``exclude_cols`` are not
+        stored. Semantics: per key the max-``seq`` event wins,
+        globally, across batches and replays — enforced within the
+        batch here and across batches by the read/compaction reduce
+        over stored ``_seq``.
 
         Patch-enabled tables (created with properties
         ``{"patch.enabled": "true"}``) additionally accept op 'P' —
@@ -1110,6 +1131,12 @@ class LakeTable:
         arrival across batches resolves identically (the reduce is a
         semilattice over per-column seqs).
 
+        Invalid events (see ``_validate``) are kept out of the table
+        and appended with their reason to ``<table>/quarantine``; the
+        rest of the batch commits. ``salt`` splits the in-batch reduce
+        in two phases, spreading each key over ``salt`` reducers first
+        (for pathologically hot keys).
+
         Exactly-once: if ``batch_id`` is at-or-below the stream's
         committed watermark the call is a no-op (replay after restart).
         """
@@ -1118,335 +1145,253 @@ class LakeTable:
         # instance last looked — building on a stale snapshot would
         # fork history and clobber those commits.
         snap = self.refresh()
-        patch_mode = snap.properties.get(PATCH_PROP) == "true"
-        allowed_ops = ("I", "U", "D", "P") if patch_mode else ("I", "U", "D")
-        if batch_id is not None and self.already_applied(stream_id, batch_id):
+
+        def skipped(head: Snapshot) -> dict:
             return {
                 "skipped": True,
                 "stream_id": stream_id,
                 "batch_id": batch_id,
-                "snapshot_id": snap.snapshot_id,
+                "snapshot_id": head.snapshot_id,
             }
 
-        # --- schema evolution -------------------------------------------
-        drop = {seq_col, op_col, *exclude_cols}
-        payload_fields = [f for f in events.schema.fields if f.name not in drop]
-        incoming = T.StructType(payload_fields)
-        assert_lake_payload_type(incoming)
-        merged = merge_schemas(snap.schema, incoming)
-        evolved = merged != snap.schema
-        schema_after = merged if evolved else snap.schema
-
-        # --- bad-record quarantine (reference C1: corrupt-record
-        # detection, ml-data-readers/src/binary.rs:238-270) -------------
-        # Invalid events must not poison the table NOR abort the batch.
-        # The reason column is observed during the main write (no extra
-        # pass); the quarantine write itself runs only when any invalid
-        # rows actually exist.
-        obs = None
-        events_orig = events
-        if quarantine:
-            reason = (
-                F.when(F.col(snap.key_col).isNull(), "null_key")
-                .when(F.col(seq_col).isNull(), "null_seq")
-                # NULL op must be its own branch: ~isin(...) is NULL
-                # (not true) for NULL, which would let the row through
-                # with _deleted=NULL and silently vanish from reads.
-                .when(F.col(op_col).isNull(), "null_op")
-                .when(~F.col(op_col).isin(*allowed_ops), "bad_op")
-            )
-            if "tokens" in events.columns and "n_tok" in events.columns:
-                reason = reason.when(
-                    (F.col(op_col) != "D")
-                    & F.col("tokens").isNotNull()
-                    & F.col("n_tok").isNotNull()
-                    & (F.col("n_tok") != F.size("tokens")),
-                    "n_tok_mismatch",
-                )
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            events = events_orig.withColumn("_reason", reason).observe(
+        if batch_id is not None and self.already_applied(stream_id, batch_id):
+            return skipped(snap)
+        have, schema, reason = self._validate(events, snap, exclude_cols)
+        # The reason is observed during the delta write (no extra
+        # pass); the quarantine write runs only when invalid rows exist.
+        obs = Observation()
+        valid = (
+            events.withColumn("_reason", reason)
+            .observe(
                 obs,
                 F.count(F.lit(1)).alias("events_in"),
                 F.count("_reason").alias("events_invalid"),
             )
-            events = events.where(F.col("_reason").isNull()).drop("_reason")
-
-        # --- per-batch resolution (max-seq wins inside the batch) -------
-        have = {f.name for f in payload_fields}
-
-        def _cast_cols(src_has: set) -> list:
-            cols = []
-            for f_ in schema_after.fields:
-                if f_.name in src_has:
-                    cols.append(F.col(f_.name).cast(f_.dataType).alias(f_.name))
-                else:
-                    cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-            return cols
-
-        payload_names = [
-            f.name for f in schema_after.fields if f.name != snap.key_col
-        ]
-        if patch_mode:
-            # Full events (I/U/D): ordinary rows, no overlays.
-            fulls = (
-                events.where(F.col(op_col) != "P")
-                .withColumn(SEQ_COL, F.col(seq_col).cast("long"))
-                .withColumn(DELETED_COL, F.col(op_col) == F.lit("D"))
-                .select(*_cast_cols(have), SEQ_COL, DELETED_COL)
-            )
-            nulled = []
-            for f_ in schema_after.fields:
-                if f_.name == snap.key_col:
-                    nulled.append(F.col(f_.name))
-                else:
-                    nulled.append(
-                        F.when(F.col(DELETED_COL), F.lit(None).cast(f_.dataType))
-                        .otherwise(F.col(f_.name))
-                        .alias(f_.name)
-                    )
-            fulls = fulls.select(
-                *nulled,
-                SEQ_COL,
-                DELETED_COL,
-                *[
-                    F.lit(None).cast("long").alias(PS_PREFIX + c)
-                    for c in payload_names
-                ],
-            )
-            # Patch events: carrier rows at CARRIER_SEQ (lose to any
-            # full event as base; _deleted=true so an all-patch history
-            # materializes no row) carrying per-column overlay seqs.
-            psrc = events.where(F.col(op_col) == "P")
-            pseq = F.col(seq_col).cast("long")
-            ps_cols = [
-                F.when(F.col(c).isNotNull(), pseq).alias(PS_PREFIX + c)
-                if c in have
-                else F.lit(None).cast("long").alias(PS_PREFIX + c)
-                for c in payload_names
-            ]
-            patches = psrc.select(
-                *_cast_cols(have),
-                F.lit(CARRIER_SEQ).cast("long").alias(SEQ_COL),
-                F.lit(True).alias(DELETED_COL),
-                *ps_cols,
-            )
-            ev = fulls.unionByName(patches)
-            if salt:
-                # The patch reduce is a semilattice: reduce (key, salt)
-                # then reduce key — exact split.
-                salted = ev.withColumn(
-                    "_salt",
-                    F.pmod(
-                        F.xxhash64(
-                            F.col(SEQ_COL),
-                            *[F.col(PS_PREFIX + c) for c in payload_names],
-                        ),
-                        F.lit(salt),
-                    ),
-                )
-                phase1 = self._reduce_latest_patch(
-                    salted, snap.key_col, payload_names, salt_col="_salt"
-                )
-                resolved = self._reduce_latest_patch(
-                    phase1, snap.key_col, payload_names
-                )
-            else:
-                resolved = self._reduce_latest_patch(
-                    ev, snap.key_col, payload_names
-                )
-        else:
-            ev = events.withColumn(
-                SEQ_COL, F.col(seq_col).cast("long")
-            ).withColumn(DELETED_COL, F.col(op_col) == F.lit("D"))
-            ev = ev.select(*_cast_cols(have), SEQ_COL, DELETED_COL)
-            # Null out payload on deletes so tombstones carry no stale data.
-            payload_cols = []
-            for f_ in schema_after.fields:
-                if f_.name == snap.key_col:
-                    payload_cols.append(F.col(f_.name))
-                else:
-                    payload_cols.append(
-                        F.when(F.col(DELETED_COL), F.lit(None).cast(f_.dataType))
-                        .otherwise(F.col(f_.name))
-                        .alias(f_.name)
-                    )
-            ev = ev.select(*payload_cols, SEQ_COL, DELETED_COL)
-            if salt:
-                # Two-phase salted reduce for pathologically hot keys: the
-                # salt spreads one key over `salt` reducers, then a second
-                # tiny reduce finishes. max-by-seq is associative, so the
-                # split is exact.
-                salted = ev.withColumn(
-                    "_salt", F.pmod(F.xxhash64(F.col(SEQ_COL)), F.lit(salt))
-                )
-                other = [c for c in ev.columns if c not in (snap.key_col, SEQ_COL)]
-                phase1 = salted.groupBy(snap.key_col, "_salt").agg(
-                    F.max(F.struct(SEQ_COL, *other)).alias("_p")
-                )
-                resolved = (
-                    phase1.groupBy(snap.key_col)
-                    .agg(F.max("_p").alias("_p"))
-                    .select(
-                        snap.key_col,
-                        *[F.col(f"_p.{c}").alias(c) for c in other],
-                        F.col(f"_p.{SEQ_COL}").alias(SEQ_COL),
-                    )
-                )
-            else:
-                resolved = self._reduce_latest(ev, snap.key_col)
-
-        # --- evolve schema on the in-flight snapshot ---------------------
-        # NOTE: self._snapshot is NOT touched until _write_snapshot's
-        # atomic pointer swap succeeds — if the delta write, compaction,
-        # or snapshot write fails, the in-memory table still points at
-        # the last committed snapshot and a retry builds on real state.
-        new_snap = Snapshot(
-            snapshot_id=snap.snapshot_id + 1,
-            parent_id=snap.snapshot_id,
-            schema_json=schema_after.jsonValue(),
-            key_col=snap.key_col,
-            n_buckets=snap.n_buckets,
-            files=list(snap.files),
-            schemas=dict(snap.schemas),
-            watermarks=dict(snap.watermarks),
-            properties=dict(snap.properties),
+            .where(F.col("_reason").isNull())
+            .drop("_reason")
         )
-
-        # --- append delta files ------------------------------------------
-        # Single action: resolved flows straight into the delta write
-        # (no cache — nothing re-reads the logical plan).
-        new_files = self._write_files(resolved, kind="delta", snap=new_snap)
+        # self._snapshot is NOT touched until _write_snapshot's commit
+        # succeeds: if the write or the commit fails, the handle still
+        # points at the last committed snapshot and a retry builds on
+        # real state.
+        target = snap.child(schema.jsonValue())
+        new_files = self._write_files(
+            self._resolve(valid, target, have, salt), kind="delta", snap=target
+        )
         n_rows = sum(f.rows for f in new_files)
         touched = sorted({f.bucket for f in new_files})
         # fp describes the files AS WRITTEN — it must survive rebases
         # unchanged even if the rebased snapshot's schema moves on.
-        fp = _schema_fp(new_snap.storage_schema())
-        written_schema_json = new_snap.storage_schema().jsonValue()
+        storage = target.storage_schema()
+        fp, written_schema_json = _schema_fp(storage), storage.jsonValue()
+        evolved = False
 
-        # --- optimistic commit (+ rebase on conflict) --------------------
-        # The delta files are immutable and schema-fingerprinted, so a
-        # losing writer rebases METADATA only: rebuild the snapshot on
-        # the winner's head (files, watermarks, schemas), re-merge the
-        # schema through the lattice, and retry. Compaction output from
-        # a losing attempt is orphaned (vacuum reclaims it) and re-run
-        # against the rebased file set, so no winner file is ever
-        # dropped from a compacted bucket.
-        base_snap = snap
-        committed = False
-        for _attempt in range(5):
-            new_snap.schemas[fp] = written_schema_json
-            new_snap.files = list(base_snap.files) + new_files
-            if compact_touched and touched:
-                self._compact_into(new_snap, touched, gc_before_seq=None)
+        def build(head: Snapshot) -> Snapshot | None:
+            # The delta files are immutable and schema-fingerprinted, so
+            # a rebase onto a winner's head is metadata only: its files,
+            # watermarks and schemas, with the schema re-merged through
+            # the lattice.
+            nonlocal evolved
+            if batch_id is not None and self.already_applied(stream_id, batch_id):
+                # The winner (or an earlier replay) applied this very
+                # batch — exactly-once still holds; our delta files stay
+                # unreferenced until vacuum.
+                return None
+            merged = merge_schemas(head.schema, schema)
+            evolved = evolved or merged != head.schema
+            nxt = head.child(merged.jsonValue())
+            nxt.schemas[fp] = written_schema_json
+            nxt.files += new_files
             if batch_id is not None:
-                new_snap.watermarks[stream_id] = batch_id
-            new_snap.summary = {
+                nxt.watermarks[stream_id] = batch_id
+            nxt.summary = {
                 "operation": "merge",
                 "stream_id": stream_id,
                 "batch_id": batch_id,
                 "upsert_rows": n_rows,
                 "touched_buckets": touched,
                 "evolved": evolved,
-                **(summary_extra or {}),
             }
-            try:
-                self._write_snapshot(new_snap)
-                committed = True
-                break
-            except CommitConflict:
-                head = self.refresh()
-                if batch_id is not None and self.already_applied(
-                    stream_id, batch_id
-                ):
-                    # The winner (or an earlier replay) applied this
-                    # very batch — exactly-once still holds; our delta
-                    # files stay unreferenced until vacuum.
-                    return {
-                        "skipped": True,
-                        "stream_id": stream_id,
-                        "batch_id": batch_id,
-                        "snapshot_id": head.snapshot_id,
-                    }
-                schema_after = merge_schemas(head.schema, schema_after)
-                evolved = schema_after != head.schema or evolved
-                base_snap = head
-                new_snap = Snapshot(
-                    snapshot_id=head.snapshot_id + 1,
-                    parent_id=head.snapshot_id,
-                    schema_json=schema_after.jsonValue(),
-                    key_col=head.key_col,
-                    n_buckets=head.n_buckets,
-                    files=[],
-                    schemas=dict(head.schemas),
-                    watermarks=dict(head.watermarks),
-                    properties=dict(head.properties),
-                )
-        if not committed:
-            raise CommitConflict(
-                "merge_batch lost 5 consecutive commit races — check for a "
-                "runaway writer storm on this table"
-            )
-        parent_paths = {p.path for p in base_snap.files}
+            return nxt
+
+        committed = self._commit(snap, build)
+        if committed is None:
+            return skipped(self.snapshot)
 
         # --- quarantine write (post-commit, advisory) --------------------
-        events_in = events_invalid = None
-        if obs is not None:
-            try:
-                got = obs.get  # populated by the delta-write action above
-            except Py4JJavaError:
-                # The observed node never ran: the optimizer pruned a plan
-                # whose input is empty (a feed window holding only a
-                # compaction), so it emitted no metrics row. With nothing
-                # written, that means no events came in.
-                if new_files:
-                    raise
-                got = {}
-            events_in = int(got.get("events_in") or 0)
-            events_invalid = int(got.get("events_invalid") or 0)
-            if events_invalid > 0:
-                reason2 = (
-                    F.when(F.col(snap.key_col).isNull(), "null_key")
-                    .when(F.col(seq_col).isNull(), "null_seq")
-                    .when(F.col(op_col).isNull(), "null_op")
-                    .when(~F.col(op_col).isin(*allowed_ops), "bad_op")
-                )
-                if (
-                    "tokens" in events_orig.columns
-                    and "n_tok" in events_orig.columns
-                ):
-                    reason2 = reason2.when(
-                        (F.col(op_col) != "D")
-                        & F.col("tokens").isNotNull()
-                        & F.col("n_tok").isNotNull()
-                        & (F.col("n_tok") != F.size("tokens")),
-                        "n_tok_mismatch",
-                    )
-                (
-                    events_orig.withColumn("_reason", reason2)
-                    .where(F.col("_reason").isNotNull())
-                    .withColumn("_batch_id", F.lit(batch_id).cast("long"))
-                    .withColumn("_stream_id", F.lit(stream_id))
-                    .write.mode("append")
-                    .parquet(os.path.join(self.root, "quarantine"))
-                )
+        try:
+            got = obs.get  # populated by the delta-write action above
+        except Py4JJavaError:
+            # The observed node never ran: the optimizer pruned a plan
+            # whose input is empty (a feed window holding only a
+            # compaction), so it emitted no metrics row. With nothing
+            # written, that means no events came in.
+            if new_files:
+                raise
+            got = {}
+        events_in = int(got.get("events_in") or 0)
+        events_invalid = int(got.get("events_invalid") or 0)
+        if events_invalid > 0:
+            (
+                events.withColumn("_reason", reason)
+                .where(F.col("_reason").isNotNull())
+                .withColumn("_batch_id", F.lit(batch_id).cast("long"))
+                .withColumn("_stream_id", F.lit(stream_id))
+                .write.mode("append")
+                .parquet(os.path.join(self.root, "quarantine"))
+            )
         return {
             "skipped": False,
             "stream_id": stream_id,
             "batch_id": batch_id,
-            "snapshot_id": new_snap.snapshot_id,
+            "snapshot_id": committed.snapshot_id,
             "upsert_rows": n_rows,
             "touched_buckets": touched,
             "schema_evolved": evolved,
             "events_in": events_in,
             "events_invalid": events_invalid,
-            # files created by this commit (compaction may have folded
-            # the deltas into base files already — report what survived)
-            "new_files": [
-                f.to_json() for f in new_snap.files if f.path not in parent_paths
-            ],
+            "new_files": [f.to_json() for f in new_files],
         }
+
+    def _validate(
+        self, events: DataFrame, snap: Snapshot, exclude_cols: Sequence[str]
+    ) -> tuple[list[str], T.StructType, Column]:
+        """Check a batch against ``snap`` before anything is written.
+
+        Returns the payload columns the batch carries, the table schema
+        with the batch's merged in, and the per-event quarantine reason
+        (null for a valid event). Raises ``SchemaMismatch`` when the
+        batch's schema cannot merge, and on any change to the key
+        column's type: rows are bucketed by the key's ``xxhash64``,
+        which differs for an int and the same value as a bigint, so a
+        widened key would put an existing key in a second bucket.
+        """
+        drop = {EVENT_SEQ, EVENT_OP, *exclude_cols}
+        incoming = T.StructType(
+            [f for f in events.schema.fields if f.name not in drop]
+        )
+        assert_lake_payload_type(incoming)
+        merged = merge_schemas(snap.schema, incoming)
+        key = snap.key_col
+        if merged[key].dataType != snap.schema[key].dataType:
+            raise SchemaMismatch(
+                f"key column {key!r} cannot change type "
+                f"{snap.schema[key].dataType.simpleString()} -> "
+                f"{incoming[key].dataType.simpleString()}: rows are "
+                f"bucketed by its hash"
+            )
+        # Bad-record quarantine (reference C1: corrupt-record detection,
+        # ml-data-readers/src/binary.rs:238-270): invalid events must
+        # not poison the table NOR abort the batch.
+        ops = ("I", "U", "D", "P") if snap.patch_enabled else ("I", "U", "D")
+        reason = (
+            F.when(F.col(key).isNull(), "null_key")
+            .when(F.col(EVENT_SEQ).isNull(), "null_seq")
+            # NULL op must be its own branch: ~isin(...) is NULL
+            # (not true) for NULL, which would let the row through
+            # with _deleted=NULL and silently vanish from reads.
+            .when(F.col(EVENT_OP).isNull(), "null_op")
+            .when(~F.col(EVENT_OP).isin(*ops), "bad_op")
+        )
+        if "tokens" in events.columns and "n_tok" in events.columns:
+            reason = reason.when(
+                (F.col(EVENT_OP) != "D")
+                & F.col("tokens").isNotNull()
+                & F.col("n_tok").isNotNull()
+                & (F.col("n_tok") != F.size("tokens")),
+                "n_tok_mismatch",
+            )
+        return incoming.fieldNames(), merged, reason
+
+    def _resolve(
+        self,
+        events: DataFrame,
+        snap: Snapshot,
+        have: Sequence[str],
+        salt: int | None,
+    ) -> DataFrame:
+        """Valid ``events`` reduced per key (max ``seq`` wins inside the
+        batch) to storage rows of ``snap``, the in-flight snapshot whose
+        schema already includes the batch's. ``have`` names the payload
+        columns the events carry; the others are null."""
+        patch = snap.patch_enabled
+        payload = snap.payload_cols()
+        ps = [PS_PREFIX + c for c in payload] if patch else []
+        aligned = _align(snap.schema, have)
+        # Full events (I/U/D): ordinary rows, no overlays.
+        rows = (
+            (events.where(F.col(EVENT_OP) != "P") if patch else events)
+            .withColumn(SEQ_COL, F.col(EVENT_SEQ).cast("long"))
+            .withColumn(DELETED_COL, F.col(EVENT_OP) == F.lit("D"))
+            .select(*aligned, SEQ_COL, DELETED_COL)
+        )
+        # Null out payload on deletes so tombstones carry no stale data.
+        rows = rows.select(
+            *[
+                F.col(f.name)
+                if f.name == snap.key_col
+                else F.when(F.col(DELETED_COL), F.lit(None).cast(f.dataType))
+                .otherwise(F.col(f.name))
+                .alias(f.name)
+                for f in snap.schema.fields
+            ],
+            SEQ_COL,
+            DELETED_COL,
+            *[F.lit(None).cast("long").alias(c) for c in ps],
+        )
+        if patch:
+            # Patch events: carrier rows at CARRIER_SEQ (lose to any
+            # full event as base; _deleted=true so an all-patch history
+            # materializes no row) carrying per-column overlay seqs.
+            pseq = F.col(EVENT_SEQ).cast("long")
+            patches = events.where(F.col(EVENT_OP) == "P").select(
+                *aligned,
+                F.lit(CARRIER_SEQ).cast("long").alias(SEQ_COL),
+                F.lit(True).alias(DELETED_COL),
+                *[
+                    (
+                        F.when(F.col(c).isNotNull(), pseq)
+                        if c in have
+                        else F.lit(None).cast("long")
+                    ).alias(PS_PREFIX + c)
+                    for c in payload
+                ],
+            )
+            rows = rows.unionByName(patches)
+        if salt:
+            # Two-phase salted reduce for pathologically hot keys: the
+            # salt spreads one key over `salt` reducers, then a second
+            # tiny reduce finishes (exact: both reduces are
+            # semilattices).
+            salted = rows.withColumn(
+                "_salt", F.pmod(F.xxhash64(SEQ_COL, *ps), F.lit(salt))
+            )
+            rows = self._reduce(salted, snap, salt_col="_salt")
+        return self._reduce(rows, snap)
+
+    def _commit(
+        self, base: Snapshot, build: Callable[[Snapshot], Snapshot | None]
+    ) -> Snapshot | None:
+        """Optimistic commit (an atomic put-if-absent loop, as in Delta
+        Lake and Iceberg): commit ``build(head)``, the next snapshot on
+        ``head``, starting from ``head = base``. When another writer
+        has committed that id, refresh and build again on the winner's
+        snapshot. Returns the committed snapshot, or None once
+        ``build`` returns None (nothing left to commit)."""
+        head = base
+        for _attempt in range(COMMIT_ATTEMPTS):
+            snap = build(head)
+            if snap is None:
+                return None
+            try:
+                self._write_snapshot(snap)
+                return snap
+            except CommitConflict:
+                head = self.refresh()
+        raise CommitConflict(
+            f"lost {COMMIT_ATTEMPTS} consecutive commit races — check for "
+            f"a runaway writer storm on this table"
+        )
 
     # ------------------------------------------------------------- compact
 
@@ -1464,35 +1409,16 @@ class LakeTable:
         victims = [f for f in snap.files if f.bucket in bset]
         if not victims:
             return
-        raw = self.scan_files(files=victims, snap=snap)
-        if snap.patch_enabled:
-            payload = [
-                f.name for f in snap.schema.fields if f.name != snap.key_col
-            ]
-            reduced = self._reduce_latest_patch(raw, snap.key_col, payload)
-            if gc_before_seq is not None:
-                # Keep tombstones whose base OR any overlay is at/after
-                # the watermark (a patch-carrier tombstone still guards
-                # its overlays for a late full event).
-                ps_vals = [
-                    F.coalesce(F.col(PS_PREFIX + c), F.lit(CARRIER_SEQ))
-                    for c in payload
-                ]
-                live_ps = (
-                    F.greatest(*ps_vals) if len(ps_vals) > 1 else ps_vals[0]
-                )
-                reduced = reduced.where(
-                    (~F.col(DELETED_COL))
-                    | (F.col(SEQ_COL) >= F.lit(gc_before_seq))
-                    | (live_ps >= F.lit(gc_before_seq))
-                )
-        else:
-            reduced = self._reduce_latest(raw, snap.key_col)
-            if gc_before_seq is not None:
-                reduced = reduced.where(
-                    (~F.col(DELETED_COL))
-                    | (F.col(SEQ_COL) >= F.lit(gc_before_seq))
-                )
+        reduced = self._reduce(self.scan_files(files=victims, snap=snap), snap)
+        if gc_before_seq is not None:
+            # Keep tombstones whose version (on patch tables the base
+            # OR any overlay seq: a patch-carrier tombstone still guards
+            # its overlays for a late full event) is at/after the
+            # watermark.
+            reduced = reduced.where(
+                (~F.col(DELETED_COL))
+                | (self._version_expr(snap) >= F.lit(gc_before_seq))
+            )
         new_files = self._write_files(reduced, kind="base", snap=snap)
         fp = _schema_fp(snap.storage_schema())
         snap.schemas[fp] = snap.storage_schema().jsonValue()
@@ -1515,41 +1441,24 @@ class LakeTable:
         it on the minimum consumer cursor exactly like Iceberg gates
         snapshot expiry on incremental-read consumers.
         """
-        for _attempt in range(5):
-            snap = self.refresh()  # never compact from a stale snapshot
+
+        def build(head: Snapshot) -> Snapshot:
+            # After a lost race the fold is redone from the winner's
+            # head, so it includes the winner's files; a losing
+            # attempt's output files await vacuum.
             bs = (
-                sorted({f.bucket for f in snap.files if f.kind == "delta"})
+                sorted({f.bucket for f in head.files if f.kind == "delta"})
                 if buckets is None
                 else list(buckets)
             )
-            new_snap = Snapshot(
-                snapshot_id=snap.snapshot_id + 1,
-                parent_id=snap.snapshot_id,
-                schema_json=snap.schema_json,
-                key_col=snap.key_col,
-                n_buckets=snap.n_buckets,
-                files=list(snap.files),
-                schemas=dict(snap.schemas),
-                watermarks=dict(snap.watermarks),
-                properties=dict(snap.properties),
-            )
-            self._compact_into(new_snap, bs, gc_before_seq)
-            new_snap.summary = {
-                "operation": "compact",
-                "buckets": list(map(int, bs)),
-            }
-            try:
-                self._write_snapshot(new_snap)
-            except CommitConflict:
-                # A concurrent merge won the id: the fold is stale (it
-                # must include the winner's files) — redo from the new
-                # head; losing attempts' output files await vacuum.
-                continue
-            return {
-                "snapshot_id": new_snap.snapshot_id,
-                "buckets": list(map(int, bs)),
-            }
-        raise CommitConflict("compact lost 5 consecutive commit races")
+            nxt = head.child()
+            self._compact_into(nxt, bs, gc_before_seq)
+            nxt.summary = {"operation": "compact", "buckets": list(map(int, bs))}
+            return nxt
+
+        # never compact from a stale snapshot
+        snap = self._commit(self.refresh(), build)
+        return {"snapshot_id": snap.snapshot_id, "buckets": snap.summary["buckets"]}
 
     def delta_file_count(self) -> int:
         return sum(1 for f in self.snapshot.files if f.kind == "delta")

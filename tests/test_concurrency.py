@@ -10,6 +10,8 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.sql import types as T
+
 from ml_data_pipeline_spark.cdc.events import CHANGE_SCHEMA, DOC_SCHEMA
 from ml_data_pipeline_spark.lake.table import CommitConflict, LakeTable
 
@@ -137,6 +139,36 @@ def test_racing_merges_rebase_and_keep_both(spark, tmp_path):
     assert all(f.bloom_sidecar for f in t_b.snapshot.files)
     assert t_b.lookup("a").collect()[0]["tokens"] == [1, 2]
     assert t_b.lookup("b").collect()[0]["tokens"] == [3]
+
+
+def test_racing_schema_evolution_rebases_on_merged_schema(spark, tmp_path):
+    """The winner adds a column; the loser's rebase re-merges its
+    batch schema onto the winner's, so the column survives and the
+    loser's rows read it as null."""
+    t_a = _mk(spark, tmp_path)
+    t_b = LakeTable.load(spark, t_a.root)
+    v2 = T.StructType(CHANGE_SCHEMA.fields + [T.StructField("lang", T.StringType())])
+
+    def winner():
+        t_a.merge_batch(
+            spark.createDataFrame([(1, "I", "a", [1], 1, "web", None, "en")], v2),
+            batch_id=1,
+        )
+
+    state = _race_first_commit(t_b, winner)
+    res = t_b.merge_batch(
+        _events(spark, [(2, "I", "b", [2], 1, "web", None)]), batch_id=2
+    )
+    assert state["fired"] and not res["skipped"]
+    head = t_b.refresh()
+    assert "lang" in head.schema.fieldNames()
+    rows = {r["doc_id"]: r for r in t_b.read().collect()}
+    assert set(rows) == {"a", "b"}
+    assert rows["a"]["lang"] == "en" and rows["a"]["tokens"] == [1]
+    assert rows["b"]["lang"] is None and rows["b"]["tokens"] == [2]
+    chain = [(s.snapshot_id, s.parent_id) for s in t_b.history()]
+    assert chain == [(0, None), (1, 0), (2, 1)]
+    assert head.snapshot_id == res["snapshot_id"] == 2
 
 
 def test_racing_same_batch_skips_exactly_once(spark, tmp_path):

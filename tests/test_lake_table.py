@@ -97,14 +97,6 @@ def test_compaction_preserves_state_and_tombstones(spark, tmp_path):
     assert raw.where(F.col("_deleted")).count() == 0
 
 
-def test_cow_mode_merges_eagerly(spark, tmp_path):
-    t = _mk_table(spark, tmp_path)
-    t.merge_batch(_events(spark, E), batch_id=0, compact_touched=True)
-    assert t.delta_file_count() == 0
-    rows = {r["doc_id"]: r for r in t.read().collect()}
-    assert rows["d1"]["tokens"] == [7, 8, 9, 10]
-
-
 def test_salted_reduce_matches_plain(spark, tmp_path):
     t1 = _mk_table(spark, tmp_path / "a")
     t2 = _mk_table(spark, tmp_path / "b")
@@ -116,6 +108,95 @@ def test_salted_reduce_matches_plain(spark, tmp_path):
     assert a == b
     hot_row = {r["doc_id"]: r for r in t1.read().collect()}["hot"]
     assert hot_row["tokens"] == [199]
+
+
+def _agg_steps(df) -> list:
+    """``df``'s aggregates and hash exchanges in data-flow order, as
+    ("partial" | "final" | "exchange", key columns)."""
+    import re
+
+    def names(text):
+        return tuple(re.sub(r"#\d+L?", "", c).strip() for c in text.split(","))
+
+    steps = []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for line in reversed(plan.splitlines()):
+        agg = re.search(r"Aggregate\(key=\[([^\]]*)\], functions=\[(\w+)", line)
+        if agg:
+            kind = "partial" if agg.group(2) == "partial_max" else "final"
+            steps.append((kind, names(agg.group(1))))
+        exchange = re.search(r"Exchange hashpartitioning\((.*), \d+\)", line)
+        if exchange:
+            steps.append(("exchange", names(exchange.group(1))))
+    return steps
+
+
+@pytest.mark.parametrize("patch", [False, True])
+def test_resolve_combines_map_side(spark, tmp_path, patch):
+    """The in-batch resolve aggregates partially before each shuffle
+    (the map-side combine that defends against hot keys); salting
+    adds a (key, salt) phase in front of the per-key one."""
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "tbl"),
+        DOC_SCHEMA,
+        key_col="doc_id",
+        n_buckets=4,
+        properties={"patch.enabled": "true"} if patch else None,
+    )
+    snap = t.refresh()
+    events = _events(spark, E)
+    per_key = [
+        ("partial", ("doc_id",)),
+        ("exchange", ("doc_id",)),
+        ("final", ("doc_id",)),
+    ]
+    plain = t._resolve(events, snap, DOC_SCHEMA.fieldNames(), salt=None)
+    assert _agg_steps(plain) == per_key
+    salted = t._resolve(events, snap, DOC_SCHEMA.fieldNames(), salt=8)
+    assert _agg_steps(salted) == [
+        ("partial", ("doc_id", "_salt")),
+        ("exchange", ("doc_id", "_salt")),
+        ("final", ("doc_id", "_salt")),
+    ] + per_key
+
+
+def test_key_type_change_rejected_before_write(spark, tmp_path):
+    """Spark hashes an int and the same value as a bigint differently,
+    so widening the key int -> bigint would put existing keys in a
+    second bucket: after compaction reads hold duplicates and lookups
+    miss. The merge must refuse it before writing any file."""
+    schema = T.StructType(
+        [T.StructField("k", T.IntegerType(), False), T.StructField("v", T.StringType())]
+    )
+    t = LakeTable.create(
+        spark, str(tmp_path / "tbl"), schema, key_col="k", n_buckets=64
+    )
+
+    def events(key_type, keys, seq):
+        return spark.createDataFrame(
+            [(seq, "U", k, f"v{seq}") for k in keys],
+            f"seq long, op string, k {key_type}, v string",
+        )
+
+    def data_files():
+        return sorted(
+            os.path.join(d, n) for d, _, ns in os.walk(t.data_dir) for n in ns
+        )
+
+    t.merge_batch(events("int", range(20), 1), batch_id=0)
+    t.compact()
+    sid = t.refresh().snapshot_id
+    rows = sorted(map(tuple, t.read().collect()))
+    files = data_files()
+    with pytest.raises(SchemaMismatch, match="key column 'k'"):
+        t.merge_batch(events("bigint", range(3), 2), batch_id=1)
+    assert t.refresh().snapshot_id == sid
+    assert sorted(map(tuple, t.read().collect())) == rows
+    assert data_files() == files
+    t.compact()
+    assert t.read().count() == 20
+    assert [tuple(r) for r in t.lookup(10).collect()] == [(10, "v1")]
 
 
 def test_bucket_pruned_read(spark, tmp_path):

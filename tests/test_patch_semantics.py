@@ -10,7 +10,11 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from ml_data_pipeline_spark.cdc.events import DOC_SCHEMA, change_events_df
+from ml_data_pipeline_spark.cdc.events import (
+    CHANGE_SCHEMA,
+    DOC_SCHEMA,
+    change_events_df,
+)
 from ml_data_pipeline_spark.cdc.oracle import (
     expected_state_with_patches,
     load_events_pandas,
@@ -135,6 +139,30 @@ def test_patch_compaction_preserves_state(spark, tmp_path):
     t.compact()
     assert t.delta_file_count() == 0
     _check(t, ev_dir)
+
+
+def test_patch_gc_keeps_tombstones_guarding_newer_overlays(spark, tmp_path):
+    """Tombstone GC drops a tombstone only when its base AND every
+    overlay seq are below the watermark: a patch-carrier tombstone
+    still holds a newer overlay for a late full event."""
+    t = _create_patch_table(spark, str(tmp_path / "tbl"))
+
+    def events(rows):
+        return spark.createDataFrame(rows, CHANGE_SCHEMA)
+
+    t.merge_batch(
+        events(
+            [
+                (50, "P", "a", None, None, "books", None),
+                (5, "D", "b", None, None, None, None),
+            ]
+        ),
+        batch_id=0,
+    )
+    t.compact(gc_before_seq=40)
+    assert {r["doc_id"] for r in t.scan_files().collect()} == {"a"}
+    t.merge_batch(events([(10, "I", "a", [1], 1, "web", None)]), batch_id=1)
+    assert [tuple(r) for r in t.read().collect()] == [("a", [1], 1, "books")]
 
 
 def test_patch_salted_reduce_matches_plain(spark, tmp_path):

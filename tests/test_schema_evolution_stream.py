@@ -121,7 +121,7 @@ def test_array_element_widening_tokens_int_to_long(spark, tmp_path):
 
     t.merge_batch(
         ev([("a", [1, 2]), ("b", [3])], "doc_id string, tokens array<int>", 1),
-        batch_id=0, exclude_cols=(), quarantine=False,
+        batch_id=0, exclude_cols=(),
     )
     # epoch 2: values only a long can hold
     t.merge_batch(
@@ -130,7 +130,7 @@ def test_array_element_widening_tokens_int_to_long(spark, tmp_path):
             "doc_id string, tokens array<long>",
             2,
         ),
-        batch_id=1, exclude_cols=(), quarantine=False,
+        batch_id=1, exclude_cols=(),
     )
     t.refresh()
     assert t.schema["tokens"].dataType == T.ArrayType(T.LongType(), True)
@@ -139,7 +139,7 @@ def test_array_element_widening_tokens_int_to_long(spark, tmp_path):
     # late lower-seq update in the OLD narrow type must lose
     t.merge_batch(
         ev([("b", [9])], "doc_id string, tokens array<int>", 1),
-        batch_id=2, exclude_cols=(), quarantine=False,
+        batch_id=2, exclude_cols=(),
     )
     t.refresh()
     got2 = {r["doc_id"]: r["tokens"] for r in t.read().collect()}

@@ -103,7 +103,7 @@ def test_every_lake_type_roundtrips_exactly(spark, tmp_path):
     events = df.select(
         F.lit("I").alias("op"), F.lit(1).cast("long").alias("seq"), "*"
     )
-    t.merge_batch(events, batch_id=0, exclude_cols=(), quarantine=False)
+    t.merge_batch(events, batch_id=0, exclude_cols=())
 
     back = t.read()
     # types identical field-for-field (the lake normalizes the key
@@ -196,7 +196,7 @@ def test_maptype_rejected_at_schema_evolution(spark, tmp_path):
         [("I", 1, "k1", {"a": 1})], ev_schema
     )
     with pytest.raises(SchemaMismatch, match=MAP_MSG):
-        t.merge_batch(events, batch_id=0, exclude_cols=(), quarantine=False)
+        t.merge_batch(events, batch_id=0, exclude_cols=())
 
 
 def test_canonical_map_encoding_through_lww_reduce(spark, tmp_path):
@@ -243,15 +243,15 @@ def test_canonical_map_encoding_through_lww_reduce(spark, tmp_path):
     ev = lambda df, seq: df.select(  # noqa: E731
         F.lit("U").alias("op"), F.lit(seq).cast("long").alias("seq"), "*"
     )
-    t.merge_batch(ev(enc(a), 1), batch_id=0, exclude_cols=(), quarantine=False)
+    t.merge_batch(ev(enc(a), 1), batch_id=0, exclude_cols=())
     upd = spark.createDataFrame([("k1", {"z": 9, "x": 5})], map_schema)
     t.merge_batch(
-        ev(enc(upd), 2), batch_id=1, exclude_cols=(), quarantine=False
+        ev(enc(upd), 2), batch_id=1, exclude_cols=()
     )
     # late lower-seq update must lose
     late = spark.createDataFrame([("k1", {"stale": 0})], map_schema)
     t.merge_batch(
-        ev(enc(late), 1), batch_id=2, exclude_cols=(), quarantine=False
+        ev(enc(late), 1), batch_id=2, exclude_cols=()
     )
 
     out = t.read().select(
