@@ -102,21 +102,31 @@ def assert_state_equal(
     key: str = "doc_id",
     extra_cols: tuple[str, ...] = ("n_tok", "source"),
 ) -> None:
-    """Exact per-key token-array equality + scalar column equality."""
+    """Exact per-key token-array equality + scalar column equality.
+
+    Raises ``AssertionError`` on the first difference. The checks are
+    explicit raises, not ``assert`` statements, so they still run under
+    ``python -O``."""
     a = actual.set_index(key).sort_index()
     e = expected.set_index(key).sort_index()
     missing = set(e.index) - set(a.index)
     extra = set(a.index) - set(e.index)
-    assert not missing, f"missing {len(missing)} keys, e.g. {sorted(missing)[:5]}"
-    assert not extra, f"extra {len(extra)} keys, e.g. {sorted(extra)[:5]}"
+    if missing:
+        raise AssertionError(
+            f"missing {len(missing)} keys, e.g. {sorted(missing)[:5]}"
+        )
+    if extra:
+        raise AssertionError(f"extra {len(extra)} keys, e.g. {sorted(extra)[:5]}")
     for k in e.index:
         ta = _norm_tokens(a.loc[k, "tokens"])
         te = _norm_tokens(e.loc[k, "tokens"])
-        assert ta == te, f"tokens mismatch for {k}: {ta[:8]}… vs {te[:8]}…"
+        if ta != te:
+            raise AssertionError(f"tokens mismatch for {k}: {ta[:8]}… vs {te[:8]}…")
         for c in extra_cols:
             if c in e.columns and c in a.columns:
                 va, ve = a.loc[k, c], e.loc[k, c]
                 both_nan = (
                     va is None or (isinstance(va, float) and np.isnan(va))
                 ) and (ve is None or (isinstance(ve, float) and np.isnan(ve)))
-                assert both_nan or va == ve, f"{c} mismatch for {k}: {va} vs {ve}"
+                if not (both_nan or va == ve):
+                    raise AssertionError(f"{c} mismatch for {k}: {va} vs {ve}")

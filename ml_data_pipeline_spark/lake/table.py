@@ -428,7 +428,7 @@ class LakeTable:
 
     def _write_files(
         self, df: DataFrame, kind: str, snap: Snapshot | None = None
-    ) -> list[FileEntry]:
+    ) -> tuple[list[FileEntry], str]:
         """Write rows (storage schema) as bucket-partitioned parquet files.
 
         The bucket is recomputable from the key, so it is stored only in
@@ -436,6 +436,9 @@ class LakeTable:
         (possibly uncommitted, in-flight) snapshot whose schema and
         properties govern the write — passed explicitly so a failed
         write never leaves ``self._snapshot`` pointing at phantom state.
+
+        Returns the written files and where they were written:
+        ``"driver"`` or ``"executors"`` (identical files either way).
         """
         snap = snap or self.snapshot
         storage = snap.storage_schema()
@@ -482,34 +485,21 @@ class LakeTable:
         # executor worker processes inherit their environment.
         skip_bloom = bool(os.environ.get("LAKE_SKIP_BLOOM"))
 
-        # SINGLE-PASS write + manifest: one job hash-partitions by
-        # bucket, sorts each partition by bucket, and streams the Arrow
-        # batches straight into parquet ON THE EXECUTORS — one bucket
-        # (= one file) open at a time — emitting the manifest (path,
-        # bucket, rows, bytes, key-bloom) as the job's result. The key
-        # bloom is built from the batches already in memory — the
-        # round-3 design (Spark writer + a second job re-reading every
-        # new file's key column) paid a full extra key-column decode
-        # per commit, which at 10^10 events is real per-event cost and
-        # on an object store a read-after-write round-trip per file.
-        # Memory is bounded exactly like Spark's own sort-based
-        # dynamic-partition writer: the in-partition sort means ONE
-        # open writer whose buffer flushes as a row group at
-        # ~parquet.block.size of Arrow bytes, plus the current file's
-        # key column for the bloom. Task retries are safe: the final
-        # file name is deterministic per (write_id, partition, bucket)
-        # and published by atomic rename, so a re-run attempt
-        # overwrites identical content; orphaned .tmp files of failed
-        # attempts are swept by vacuum. One assumption worth naming:
-        # with speculative execution a duplicate attempt can re-publish
-        # a bucket's file AFTER the winner's manifest row was
-        # collected, and shuffle-order nondeterminism means the
-        # re-published file may compress to a slightly different size
-        # — so FileEntry.bytes is advisory for the on-disk file. Row
-        # content and blooms are equivalent either way (same rows, set
-        # semantics), and the only consumer of `bytes`
-        # (SizeTieredPolicy) tolerates drift: tier thresholds are
-        # ratios over sums, not exact-match checks.
+        # SINGLE-PASS write + manifest: ``_write`` streams Arrow batches
+        # sorted by bucket straight into parquet — one bucket (= one
+        # file) open at a time — and emits the manifest (path, bucket,
+        # rows, bytes, key-bloom). The key bloom is built from the
+        # batches already in memory — the round-3 design (Spark writer +
+        # a second job re-reading every new file's key column) paid a
+        # full extra key-column decode per commit, which at 10^10 events
+        # is real per-event cost and on an object store a
+        # read-after-write round-trip per file. Memory is bounded
+        # exactly like Spark's own sort-based dynamic-partition writer:
+        # the sorted input means ONE open writer whose buffer flushes as
+        # a row group at ~parquet.block.size of Arrow bytes, plus the
+        # current file's key column for the bloom. It runs in one of two
+        # places (below): on the driver for input that fits one split,
+        # else in a mapInArrow task per bucket partition.
         def _write(batches):
             import numpy as np
             import pyarrow as pa
@@ -518,7 +508,8 @@ class LakeTable:
 
             from ml_data_pipeline_spark.lake.bloom import bloom_build
 
-            pid = TaskContext.get().partitionId()
+            ctx = TaskContext.get()  # None on the driver
+            pid = ctx.partitionId() if ctx is not None else 0
             out = {"path": [], "bucket": [], "rows": [], "bytes": [], "sidecar": []}
             cur: dict | None = None
 
@@ -631,19 +622,55 @@ class LakeTable:
                     ),
                 )
 
-        manifest = (
-            df.withColumn("_bucket", self.bucket_expr(snap=snap))
-            # One shuffle, hash-partitioned then sorted by bucket →
-            # one file per bucket per write, one open writer at a time.
-            .repartition(F.col("_bucket"))
-            .sortWithinPartitions("_bucket")
-            .mapInArrow(
-                _write,
-                "path string, bucket int, rows long, bytes long, sidecar boolean",
+        bucketed = df.withColumn("_bucket", self.bucket_expr(snap=snap))
+        # Driver path, for rows whose optimizer size estimate is at most
+        # one input split (spark.sql.files.maxPartitionBytes: the bound
+        # lookup() uses, and below the size at which Spark itself
+        # collects a relation to the driver for a broadcast join). The
+        # rows are collected as Arrow (a JVM-only job), sorted by bucket
+        # and written here by the same _write. That skips the bucket
+        # exchange and the Python worker task, whose start-up is most of
+        # a small write's cost: each task spent 150-250 ms in
+        # setup_spark_files(), whose importlib.invalidate_caches() makes
+        # Python 3.11 re-read the central directory of every zip on the
+        # worker path. A no-op mapInArrow over 2,000 rows took ~250 ms
+        # against 38 ms without Python (4-vCPU host). An unknown
+        # estimate (RDD-backed frames report Long.MaxValue) takes the
+        # executor path.
+        conf = self.spark._jsparkSession.sessionState().conf()
+        stats = bucketed._jdf.queryExecution().optimizedPlan().stats()
+        if int(str(stats.sizeInBytes())) <= conf.filesMaxPartitionBytes():
+            write_path = "driver"
+            table = bucketed.toArrow().sort_by("_bucket")
+            manifest = [r for b in _write(table.to_batches()) for r in b.to_pylist()]
+        else:
+            # Executor path: one shuffle, hash-partitioned then sorted by
+            # bucket → one file per bucket per write, one open writer at
+            # a time. Task retries are safe: the final file name is
+            # deterministic per (write_id, partition, bucket) and
+            # published by atomic rename, so a re-run attempt overwrites
+            # identical content; orphaned .tmp files of failed attempts
+            # are swept by vacuum. One assumption worth naming: with
+            # speculative execution a duplicate attempt can re-publish a
+            # bucket's file AFTER the winner's manifest row was
+            # collected, and shuffle-order nondeterminism means the
+            # re-published file may compress to a slightly different
+            # size — so FileEntry.bytes is advisory for the on-disk
+            # file. Row content and blooms are equivalent either way
+            # (same rows, set semantics), and the only consumer of
+            # `bytes` (SizeTieredPolicy) tolerates drift: tier
+            # thresholds are ratios over sums, not exact-match checks.
+            write_path = "executors"
+            manifest = (
+                bucketed.repartition(F.col("_bucket"))
+                .sortWithinPartitions("_bucket")
+                .mapInArrow(
+                    _write,
+                    "path string, bucket int, rows long, bytes long, sidecar boolean",
+                )
+                .collect()
             )
-            .collect()
-        )
-        return [
+        files = [
             FileEntry(
                 path=os.path.relpath(r["path"], self.root),
                 bucket=int(r["bucket"]),
@@ -655,8 +682,20 @@ class LakeTable:
             )
             for r in manifest
         ]
+        return files, write_path
 
     # ----------------------------------------------------------------- read
+
+    def _empty(self, schema: T.StructType) -> DataFrame:
+        """No rows of ``schema``, as an Arrow-backed local relation: its
+        size estimate is 0 (an empty ``createDataFrame([])`` is
+        RDD-backed and unknown), so a write built on it can still take
+        ``_write_files``' driver path."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return self.spark.createDataFrame(
+            to_arrow_schema(schema).empty_table(), schema
+        )
 
     def scan_files(
         self,
@@ -678,7 +717,7 @@ class LakeTable:
             bset = set(buckets)
             sel = [f for f in sel if f.bucket in bset]
         if not sel:
-            return self.spark.createDataFrame([], storage)
+            return self._empty(storage)
         by_fp: dict[str, list[str]] = {}
         for fe in sel:
             by_fp.setdefault(fe.schema_fp, []).append(
@@ -1049,7 +1088,7 @@ class LakeTable:
             )
         )
         if not added:
-            return self.spark.createDataFrame([], out_schema)
+            return self._empty(out_schema)
 
         touched = set()
         for f in added:
@@ -1175,7 +1214,7 @@ class LakeTable:
         # points at the last committed snapshot and a retry builds on
         # real state.
         target = snap.child(schema.jsonValue())
-        new_files = self._write_files(
+        new_files, write_path = self._write_files(
             self._resolve(valid, target, have, salt), kind="delta", snap=target
         )
         n_rows = sum(f.rows for f in new_files)
@@ -1211,6 +1250,7 @@ class LakeTable:
                 "upsert_rows": n_rows,
                 "touched_buckets": touched,
                 "evolved": evolved,
+                "write_path": write_path,
             }
             return nxt
 
@@ -1251,6 +1291,7 @@ class LakeTable:
             "events_in": events_in,
             "events_invalid": events_invalid,
             "new_files": [f.to_json() for f in new_files],
+            "write_path": write_path,
         }
 
     def _validate(
@@ -1400,15 +1441,17 @@ class LakeTable:
         snap: Snapshot,
         buckets: Sequence[int],
         gc_before_seq: int | None,
-    ) -> None:
+    ) -> str | None:
         """Rewrite the given buckets of ``snap`` as reduced base files.
 
         Mutates ``snap.files``/``snap.schemas`` in place; caller commits.
+        Returns ``_write_files``' write path, None when nothing was
+        rewritten.
         """
         bset = set(buckets)
         victims = [f for f in snap.files if f.bucket in bset]
         if not victims:
-            return
+            return None
         reduced = self._reduce(self.scan_files(files=victims, snap=snap), snap)
         if gc_before_seq is not None:
             # Keep tombstones whose version (on patch tables the base
@@ -1419,11 +1462,12 @@ class LakeTable:
                 (~F.col(DELETED_COL))
                 | (self._version_expr(snap) >= F.lit(gc_before_seq))
             )
-        new_files = self._write_files(reduced, kind="base", snap=snap)
+        new_files, write_path = self._write_files(reduced, kind="base", snap=snap)
         fp = _schema_fp(snap.storage_schema())
         snap.schemas[fp] = snap.storage_schema().jsonValue()
         keep = [f for f in snap.files if f.bucket not in bset]
         snap.files = keep + new_files
+        return write_path
 
     def compact(
         self,
@@ -1452,13 +1496,21 @@ class LakeTable:
                 else list(buckets)
             )
             nxt = head.child()
-            self._compact_into(nxt, bs, gc_before_seq)
-            nxt.summary = {"operation": "compact", "buckets": list(map(int, bs))}
+            write_path = self._compact_into(nxt, bs, gc_before_seq)
+            nxt.summary = {
+                "operation": "compact",
+                "buckets": list(map(int, bs)),
+                "write_path": write_path,
+            }
             return nxt
 
         # never compact from a stale snapshot
         snap = self._commit(self.refresh(), build)
-        return {"snapshot_id": snap.snapshot_id, "buckets": snap.summary["buckets"]}
+        return {
+            "snapshot_id": snap.snapshot_id,
+            "buckets": snap.summary["buckets"],
+            "write_path": snap.summary["write_path"],
+        }
 
     def delta_file_count(self) -> int:
         return sum(1 for f in self.snapshot.files if f.kind == "delta")

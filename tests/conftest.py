@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -24,6 +25,26 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def split_bytes(spark):
+    """``with split_bytes("512"):`` sets the session's input split size
+    (``spark.sql.files.maxPartitionBytes``) for the block. The lake
+    serves lookups and writes input up to one split on the driver, so a
+    split smaller than any data file forces their Spark paths."""
+
+    @contextlib.contextmanager
+    def setting(value: str):
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return setting
 
 
 @pytest.fixture()

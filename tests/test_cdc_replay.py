@@ -221,3 +221,45 @@ def test_replay_with_byte_denominated_batches(spark, tmp_path):
     )
     assert stats["batches"] > 1
     _check(t, ev_dir)
+
+
+_MISMATCH = """
+import sys
+import pandas as pd
+from ml_data_pipeline_spark.cdc.oracle import assert_state_equal
+
+if __debug__:
+    sys.exit("not running under python -O")
+row = {"doc_id": "d1", "tokens": [1, 2], "n_tok": 2, "source": "web"}
+expected = pd.DataFrame([row])
+actual = {
+    "missing_key": pd.DataFrame(columns=list(row)),
+    "extra_key": pd.DataFrame([row, {**row, "doc_id": "d2"}]),
+    "tokens": pd.DataFrame([{**row, "tokens": [1, 3]}]),
+    "scalar": pd.DataFrame([{**row, "source": "books"}]),
+}[sys.argv[1]]
+assert_state_equal(actual, expected)
+"""
+
+
+@pytest.mark.parametrize("case", ["missing_key", "extra_key", "tokens", "scalar"])
+def test_oracle_check_survives_python_O(tmp_path, case):
+    """``assert_state_equal`` must still fail a mismatching state when
+    asserts are stripped (``python -O``)."""
+    import subprocess
+    import sys
+
+    script = tmp_path / "mismatch.py"
+    script.write_text(_MISMATCH)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    proc = subprocess.run(
+        [sys.executable, "-O", str(script), case],
+        capture_output=True,
+        text=True,
+        env=env,
+        timeout=120,
+    )
+    assert proc.returncode != 0, proc.stdout
+    assert "not running under python -O" not in proc.stderr
+    assert "AssertionError" in proc.stderr, proc.stderr[-2000:]

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 import pytest
@@ -10,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ml_data_pipeline_spark.cdc.events import CHANGE_SCHEMA, DOC_SCHEMA
-from ml_data_pipeline_spark.lake.table import LakeTable
+from ml_data_pipeline_spark.lake.table import FileEntry, LakeTable
 from ml_data_pipeline_spark.lake.schema_evolution import (
     SchemaMismatch,
     compatible_with,
@@ -388,9 +387,16 @@ def test_lookup_correct_without_blooms(spark, tmp_path, monkeypatch):
         spark, str(tmp_path / "tbl"), DOC_SCHEMA, key_col="doc_id", n_buckets=2
     )
     rows = [(i, "I", f"d{i}", [i], 1, "web", None) for i in range(10)]
-    t.merge_batch(_events(spark, rows), batch_id=0)
+    # both write paths honour it
+    assert t.merge_batch(_events(spark, rows), batch_id=0)["write_path"] == "executors"
+    late = _parquet_events(spark, tmp_path, [(20, "U", "d9", [9, 9], 2, "web", None)])
+    assert t.merge_batch(late, batch_id=1)["write_path"] == "driver"
     snap = t.refresh()
+    assert len(snap.files) > 2
     assert all(not f.bloom_sidecar and not f.key_bloom for f in snap.files)
+    assert not any(
+        name.endswith(".bloom") for _d, _s, names in os.walk(t.data_dir) for name in names
+    )
     got = t.lookup("d3").collect()
     assert len(got) == 1 and got[0]["tokens"] == [3]
     assert t.lookup("absent").count() == 0
@@ -451,18 +457,7 @@ def _jobs(spark) -> set:
     return set(sc.statusTracker().getJobIdsForGroup(None))
 
 
-@contextlib.contextmanager
-def _split_bytes(spark, value: str):
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def _lookup_parity(spark, t, keys) -> set:
+def _lookup_parity(spark, split_bytes, t, keys) -> set:
     """For every key, ``lookup`` at the session's split size, ``lookup``
     forced onto the Spark plan (a split smaller than any data file) and
     ``read()`` filtered to the key must agree. Returns the keys whose
@@ -470,7 +465,7 @@ def _lookup_parity(spark, t, keys) -> set:
     snap = t.refresh()
     assert all(f.bytes > 512 for f in snap.files)
     state = {r[snap.key_col]: tuple(r) for r in t.read().collect()}
-    with _split_bytes(spark, "512"):
+    with split_bytes("512"):
         via_spark = {k: [tuple(r) for r in t.lookup(k).collect()] for k in keys}
     started = set()
     for k in keys:
@@ -484,7 +479,7 @@ def _lookup_parity(spark, t, keys) -> set:
     return started
 
 
-def test_lookup_paths_agree_over_deltas_deletes_and_reinserts(spark, tmp_path):
+def test_lookup_paths_agree_over_deltas_deletes_and_reinserts(spark, tmp_path, split_bytes):
     t = _mk_table(spark, tmp_path, n_buckets=2)
     batches = [
         [(i, "I", f"d{i}", [i, i], 2, "web", None) for i in range(30)],
@@ -502,10 +497,10 @@ def test_lookup_paths_agree_over_deltas_deletes_and_reinserts(spark, tmp_path):
         per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
     assert min(per_bucket.values()) >= 3
     keys = [f"d{i}" for i in range(31)] + ["absent", "d99"]
-    assert _lookup_parity(spark, t, keys) == set()
+    assert _lookup_parity(spark, split_bytes, t, keys) == set()
 
 
-def test_lookup_paths_agree_across_schema_evolution(spark, tmp_path):
+def test_lookup_paths_agree_across_schema_evolution(spark, tmp_path, split_bytes):
     """Files written before a column was added and ``n_tok`` widened
     int → long are read aligned to the current schema."""
     t = _mk_table(spark, tmp_path, n_buckets=2)
@@ -530,12 +525,12 @@ def test_lookup_paths_agree_across_schema_evolution(spark, tmp_path):
     assert isinstance(snap.schema["n_tok"].dataType, T.LongType)
     assert len({f.schema_fp for f in snap.files}) == 2
     keys = [f"d{i}" for i in range(13)] + ["absent"]
-    assert _lookup_parity(spark, t, keys) == set()
+    assert _lookup_parity(spark, split_bytes, t, keys) == set()
     assert tuple(t.lookup("d3").collect()[0]) == ("d3", [3, 1], 2, "web", "en")
     assert tuple(t.lookup("d4").collect()[0]) == ("d4", [4], 1, "web", None)
 
 
-def test_lookup_tie_on_max_seq(spark, tmp_path):
+def test_lookup_tie_on_max_seq(spark, tmp_path, split_bytes):
     """Rows tied on the max ``_seq`` (the same seq delivered in two
     batches): identical rows stay on the driver; differing rows take the
     Spark plan, whose ``max(struct(...))`` breaks the tie."""
@@ -551,10 +546,10 @@ def test_lookup_tie_on_max_seq(spark, tmp_path):
     snap = t.refresh()
     assert t._lookup_on_driver("d1", t.lookup_files("d1", snap), snap) is None
     assert t._lookup_on_driver("d2", t.lookup_files("d2", snap), snap) is not None
-    assert _lookup_parity(spark, t, ["d1", "d2"]) == {"d1"}
+    assert _lookup_parity(spark, split_bytes, t, ["d1", "d2"]) == {"d1"}
 
 
-def test_lookup_patch_table_takes_spark_plan(spark, tmp_path):
+def test_lookup_patch_table_takes_spark_plan(spark, tmp_path, split_bytes):
     t = LakeTable.create(
         spark,
         str(tmp_path / "tbl"),
@@ -582,11 +577,11 @@ def test_lookup_patch_table_takes_spark_plan(spark, tmp_path):
         ),
         batch_id=1,
     )
-    assert _lookup_parity(spark, t, ["a", "b", "c"]) == {"a", "b", "c"}
+    assert _lookup_parity(spark, split_bytes, t, ["a", "b", "c"]) == {"a", "b", "c"}
     assert t.lookup("a").collect()[0]["source"] == "books"
 
 
-def test_int_keyed_lookup(spark, tmp_path):
+def test_int_keyed_lookup(spark, tmp_path, split_bytes):
     """A table keyed on an IntegerType column: the driver-side bucket
     must hash the key as Spark hashes an int column (4 bytes)."""
     schema = T.StructType(
@@ -605,4 +600,157 @@ def test_int_keyed_lookup(spark, tmp_path):
     assert t.read().where("id = 5").collect()[0]["v"] == "v5"
     assert [tuple(r) for r in t.lookup(5).collect()] == [(5, "v5")]
     assert t.lookup(7).collect() == []
-    assert _lookup_parity(spark, t, list(range(21))) == set()
+    assert _lookup_parity(spark, split_bytes, t, list(range(21))) == set()
+
+
+# ------------------------------------------------------------- write paths
+
+LOOSE = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in CHANGE_SCHEMA.fields]
+)
+WITH_LANG = T.StructType(LOOSE.fields + [T.StructField("lang", T.StringType())])
+
+
+def _parquet_events(spark, tmp_path, rows, schema=LOOSE):
+    """``rows`` as a parquet-backed frame. Its size estimate is known
+    (a frame built from a Python list reports none), so a small write of
+    it takes ``_write_files``' driver path."""
+    import uuid
+
+    path = str(tmp_path / "events" / uuid.uuid4().hex)
+    spark.createDataFrame(rows, schema).write.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _bucket_rows(files) -> dict:
+    out = {}
+    for f in files:
+        out[f.bucket] = out.get(f.bucket, 0) + f.rows
+    return out
+
+
+def _assert_blooms_cover(t):
+    """Every key written to a file passes that file's sidecar bloom."""
+    import pyarrow.parquet as pq
+
+    from ml_data_pipeline_spark.lake.bloom import bloom_might_contain
+
+    snap = t.refresh()
+    for f in snap.files:
+        keys = pq.read_table(os.path.join(t.root, f.path), columns=[snap.key_col])
+        bloom = t._file_bloom(f)
+        assert bloom, f.path
+        assert all(
+            bloom_might_contain(bloom, k) for k in keys[snap.key_col].to_pylist()
+        ), f.path
+
+
+def _assert_same_tables(a, b, keys):
+    assert sorted(map(tuple, a.read().collect())) == sorted(
+        map(tuple, b.read().collect())
+    )
+    assert _bucket_rows(a.refresh().files) == _bucket_rows(b.refresh().files)
+    _assert_blooms_cover(a)
+    _assert_blooms_cover(b)
+    for k in keys:
+        got_a = sorted(map(tuple, a.lookup(k).collect()))
+        assert got_a == sorted(map(tuple, b.lookup(k).collect())), k
+
+
+@pytest.mark.parametrize("patch", [False, True])
+def test_write_paths_agree(spark, tmp_path, split_bytes, patch):
+    """The same batches merged and compacted on the driver (input within
+    one split) and on the executors (a split smaller than any input)
+    give the same state, the same rows per bucket, blooms covering every
+    written key and the same lookups."""
+    batches = [
+        (LOOSE, [(i, "I", f"d{i}", [i, i], 2, "web", None) for i in range(40)]),
+        (
+            LOOSE,
+            [(100 + i, "U", f"d{i}", [i, 100], 2, "books", None) for i in range(10)]
+            + [(110 + i, "D", f"d{i}", None, None, None, None) for i in range(10, 15)],
+        ),
+        (
+            LOOSE,
+            # re-inserts after deletes, new deletes, a late lower-seq update
+            [(200 + i, "I", f"d{i}", [i, 200], 2, "code", None) for i in range(10, 13)]
+            + [(210, "D", "d0", None, None, None, None)]
+            + [(211, "D", "d1", None, None, None, None)]
+            + [(50, "U", "d2", [50], 1, "web", None)],
+        ),
+        # all invalid: quarantined, no files written
+        (LOOSE, [(300, "X", "d5", [1], 1, "web", None), (301, "I", None, [1], 1, "web", None)]),
+        # an added column
+        (
+            WITH_LANG,
+            [(400 + i, "U", f"d{i}", [i, 400], 2, "code", None, "en") for i in range(20, 30)]
+            + [(420, "I", "d40", [40], 1, "web", None, "de")],
+        ),
+    ]
+    if patch:
+        batches.append(
+            (
+                LOOSE,
+                [
+                    (500, "P", "d3", None, None, "patched", None),
+                    (501, "P", "d41", [41], 1, None, None),
+                    (502, "P", "d10", [7, 7], 2, None, None),
+                ],
+            )
+        )
+    events = [_parquet_events(spark, tmp_path, rows, schema) for schema, rows in batches]
+    props = {"patch.enabled": "true"} if patch else None
+    a, b = (
+        LakeTable.create(
+            spark, str(tmp_path / n), DOC_SCHEMA, key_col="doc_id", n_buckets=4,
+            properties=props,
+        )
+        for n in ("driver", "executors")
+    )
+    for i, ev in enumerate(events):
+        ra = a.merge_batch(ev, batch_id=i)
+        with split_bytes("512"):
+            rb = b.merge_batch(ev, batch_id=i)
+        assert (ra["write_path"], rb["write_path"]) == ("driver", "executors")
+        assert a.snapshot.summary["write_path"] == "driver"
+        assert b.snapshot.summary["write_path"] == "executors"
+        files_a, files_b = (
+            [FileEntry.from_json(f) for f in r["new_files"]] for r in (ra, rb)
+        )
+        assert _bucket_rows(files_a) == _bucket_rows(files_b), i
+        for k in ("events_in", "events_invalid", "upsert_rows", "schema_evolved"):
+            assert ra[k] == rb[k], (i, k)
+        if i == 3:  # the all-invalid batch
+            assert ra["new_files"] == rb["new_files"] == []
+            assert (ra["events_in"], ra["events_invalid"]) == (2, 2)
+        if i == 4:  # the added column
+            assert ra["schema_evolved"]
+    for t in (a, b):
+        q = spark.read.parquet(os.path.join(t.root, "quarantine"))
+        assert sorted(r["_reason"] for r in q.collect()) == ["bad_op", "null_key"]
+    keys = [f"d{i}" for i in range(42)] + ["absent"]
+    _assert_same_tables(a, b, keys)
+
+    assert a.compact()["write_path"] == "driver"
+    with split_bytes("512"):
+        assert b.compact()["write_path"] == "executors"
+    assert {f.kind for t in (a, b) for f in t.refresh().files} == {"base"}
+    _assert_same_tables(a, b, keys)
+
+
+def test_small_write_job_counts(spark, tmp_path):
+    """A small parquet-backed merge runs two Spark jobs (the resolve's
+    map stage, then the Arrow collect of the resolved rows), and so does
+    a small compaction (the reduce's map stage, then the collect). There
+    is no bucket exchange and no Python stage; a change that adds a job
+    to either fails here."""
+    t = _mk_table(spark, tmp_path)
+    rows = [(i, "I", f"d{i}", [i], 1, "web", None) for i in range(200)]
+    t.merge_batch(_parquet_events(spark, tmp_path, rows), batch_id=0)
+    ev = _parquet_events(spark, tmp_path, [(1000 + s, *r[1:]) for s, r in enumerate(rows)])
+    before = _jobs(spark)
+    assert t.merge_batch(ev, batch_id=1)["write_path"] == "driver"
+    assert len(_jobs(spark) - before) == 2
+    before = _jobs(spark)
+    assert t.compact()["write_path"] == "driver"
+    assert len(_jobs(spark) - before) == 2

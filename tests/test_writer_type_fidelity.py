@@ -1,7 +1,8 @@
 """Type-fidelity guard for the single-pass Arrow parquet writer.
 
 The round-4 writer replaces Spark's parquet datasource with a
-mapInArrow + pyarrow pipeline (lake/table.py::_write_files). Every
+pyarrow pipeline (lake/table.py::_write_files), run on the driver for
+small input and in mapInArrow tasks otherwise. Every
 Spark SQL type the lake can carry must survive the Spark→Arrow→
 parquet→Spark round trip bit-exactly under the snapshot's storage
 schema — a silent coercion (timestamp tz flag, decimal scale, nested
@@ -10,9 +11,11 @@ nullability) would corrupt tables far from the code that caused it.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -91,7 +94,11 @@ ROWS = [
 ]
 
 
-def test_every_lake_type_roundtrips_exactly(spark, tmp_path):
+@pytest.mark.parametrize("path", ["driver", "executors"])
+def test_every_lake_type_roundtrips_exactly(spark, tmp_path, split_bytes, path):
+    """Both write paths: the driver's (a frame with a known size within
+    one split; here an Arrow-backed local relation) and the executors'
+    (a split smaller than any input)."""
     t = LakeTable.create(
         spark,
         str(tmp_path / "wide"),
@@ -100,10 +107,19 @@ def test_every_lake_type_roundtrips_exactly(spark, tmp_path):
         n_buckets=4,
     )
     df = spark.createDataFrame(ROWS, WIDE_SCHEMA)
-    events = df.select(
+    src = df
+    if path == "driver":
+        # a frame built from a Python list has no size estimate
+        src = spark.createDataFrame(df.toArrow(), WIDE_SCHEMA)
+    events = src.select(
         F.lit("I").alias("op"), F.lit(1).cast("long").alias("seq"), "*"
     )
-    t.merge_batch(events, batch_id=0, exclude_cols=())
+
+    def split():
+        return split_bytes("512") if path == "executors" else contextlib.nullcontext()
+
+    with split():
+        assert t.merge_batch(events, batch_id=0, exclude_cols=())["write_path"] == path
 
     back = t.read()
     # types identical field-for-field (the lake normalizes the key
@@ -121,7 +137,8 @@ def test_every_lake_type_roundtrips_exactly(spark, tmp_path):
 
     # and the values survive a compaction rewrite through the same
     # writer as well
-    t.compact()
+    with split():
+        assert t.compact()["write_path"] == path
     got2 = {r["doc_id"]: r for r in t.read().collect()}
     for k in want:
         for f in WIDE_SCHEMA.fieldNames():
@@ -132,8 +149,6 @@ MAP_MSG = "not a lake payload type"
 
 
 def test_maptype_rejected_loudly_at_create(spark, tmp_path):
-    import pytest
-
     from ml_data_pipeline_spark.lake.schema_evolution import SchemaMismatch
 
     bad = T.StructType(
@@ -174,8 +189,6 @@ def test_maptype_rejected_loudly_at_create(spark, tmp_path):
 
 
 def test_maptype_rejected_at_schema_evolution(spark, tmp_path):
-    import pytest
-
     from ml_data_pipeline_spark.lake.schema_evolution import SchemaMismatch
 
     base = T.StructType([T.StructField("doc_id", T.StringType(), False)])
