@@ -82,6 +82,22 @@ CARRIER_SEQ = -(2**62)  # _seq of patch-carrier rows: loses to any full event
 EVENT_SEQ = "seq"  # change-event LSN column (merge_batch input)
 EVENT_OP = "op"  # change-event op column: 'I'|'U'|'D', plus 'P' on patch tables
 COMMIT_ATTEMPTS = 5  # consecutive lost commit races before a writer gives up
+# Largest optimizer size estimate _write_files writes on the driver (it is
+# also capped at one input split). Measured on a 4-vCPU host, merge and
+# compaction walls, driver vs executors, parquet-backed change events into
+# a 16-bucket table (medians of 3-5 alternating runs; estimate in MB):
+#   estimate   1: merge 0.49 vs 0.76 s, compaction 0.44 vs 0.75 s
+#   estimate   4: merge 0.60 vs 0.86 s, compaction 0.54 vs 0.73 s
+#   estimate   8: merge 0.92 vs 1.23 s, compaction 0.85 vs 0.95 s
+#   estimate  12: merge 0.98 vs 1.09 s, compaction 0.95 vs 1.09 s
+#   estimate  16: merge 1.19 vs 1.17 s, compaction 1.03-1.23 vs 1.07-1.08 s
+#   estimate  32: merge 1.97 vs 1.74 s, compaction 1.56 vs 1.18 s
+# so the crossover lies between 12 and 16 MB. A 4-bucket table crosses
+# later (16 MB: 1.08 vs 1.16 s), and three tables written at once from
+# three driver threads still favoured the driver at 32 MB (2.97 vs 3.45 s:
+# pyarrow releases the GIL while the concurrent executor jobs share the
+# same four cores).
+DRIVER_WRITE_MAX_BYTES = 12 * 1024 * 1024
 
 
 class CommitConflict(Exception):
@@ -498,8 +514,8 @@ class LakeTable:
         # the sorted input means ONE open writer whose buffer flushes as
         # a row group at ~parquet.block.size of Arrow bytes, plus the
         # current file's key column for the bloom. It runs in one of two
-        # places (below): on the driver for input that fits one split,
-        # else in a mapInArrow task per bucket partition.
+        # places (below): on the driver for small input, else in a
+        # mapInArrow task per bucket partition.
         def _write(batches):
             import numpy as np
             import pyarrow as pa
@@ -624,25 +640,40 @@ class LakeTable:
 
         bucketed = df.withColumn("_bucket", self.bucket_expr(snap=snap))
         # Driver path, for rows whose optimizer size estimate is at most
-        # one input split (spark.sql.files.maxPartitionBytes: the bound
-        # lookup() uses, and below the size at which Spark itself
-        # collects a relation to the driver for a broadcast join). The
-        # rows are collected as Arrow (a JVM-only job), sorted by bucket
-        # and written here by the same _write. That skips the bucket
-        # exchange and the Python worker task, whose start-up is most of
-        # a small write's cost: each task spent 150-250 ms in
-        # setup_spark_files(), whose importlib.invalidate_caches() makes
-        # Python 3.11 re-read the central directory of every zip on the
-        # worker path. A no-op mapInArrow over 2,000 rows took ~250 ms
-        # against 38 ms without Python (4-vCPU host). An unknown
-        # estimate (RDD-backed frames report Long.MaxValue) takes the
-        # executor path.
+        # DRIVER_WRITE_MAX_BYTES (the measured crossover, above) and at
+        # most one input split (spark.sql.files.maxPartitionBytes). The
+        # rows are collected as Arrow (a JVM-only job) and written here by
+        # the same _write, in bucket order. That skips the bucket exchange
+        # and the Python worker task, whose start-up is most of a small
+        # write's cost: each task spent 150-250 ms in setup_spark_files(),
+        # whose importlib.invalidate_caches() makes Python 3.11 re-read
+        # the central directory of every zip on the worker path. A no-op
+        # mapInArrow over 2,000 rows took ~250 ms against 38 ms without
+        # Python (4-vCPU host). The estimate is of the compressed input
+        # (parquet file sizes): the collected Arrow rows were 0.8-1.6x it
+        # in the measurement (19 MB at a 12 MB estimate, for random token
+        # ids; better-compressing data expands more). The driver holds
+        # them once plus one sorted batch of arrowMaxRecordsPerBatch
+        # rows, not a second sorted copy. An unknown estimate (RDD-backed
+        # frames report Long.MaxValue) takes the executor path.
         conf = self.spark._jsparkSession.sessionState().conf()
         stats = bucketed._jdf.queryExecution().optimizedPlan().stats()
-        if int(str(stats.sizeInBytes())) <= conf.filesMaxPartitionBytes():
+        est = int(str(stats.sizeInBytes()))
+        if est <= min(DRIVER_WRITE_MAX_BYTES, conf.filesMaxPartitionBytes()):
+            import pyarrow.compute as pc
+
             write_path = "driver"
-            table = bucketed.toArrow().sort_by("_bucket")
-            manifest = [r for b in _write(table.to_batches()) for r in b.to_pylist()]
+            table = bucketed.toArrow()
+            order = pc.sort_indices(table["_bucket"])  # stable
+            # (a limit of 0 or less means one batch, as in Spark)
+            step = conf.arrowMaxRecordsPerBatch()
+            step = step if step > 0 else max(len(order), 1)
+            batches = (
+                b
+                for i in range(0, len(order), step)
+                for b in table.take(order.slice(i, step)).to_batches()
+            )
+            manifest = [r for b in _write(batches) for r in b.to_pylist()]
         else:
             # Executor path: one shuffle, hash-partitioned then sorted by
             # bucket → one file per bucket per write, one open writer at

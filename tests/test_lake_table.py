@@ -754,3 +754,48 @@ def test_small_write_job_counts(spark, tmp_path):
     before = _jobs(spark)
     assert t.compact()["write_path"] == "driver"
     assert len(_jobs(spark) - before) == 2
+
+
+def test_driver_write_bound(spark, tmp_path, monkeypatch):
+    """The driver path also stops at ``DRIVER_WRITE_MAX_BYTES``, the
+    measured driver/executor crossover, when the split is larger."""
+    from ml_data_pipeline_spark.lake import table as table_mod
+
+    rows = [(i, "I", f"d{i}", [i], 1, "web", None) for i in range(50)]
+    ev = _parquet_events(spark, tmp_path, rows)
+    t = _mk_table(spark, tmp_path)
+    monkeypatch.setattr(table_mod, "DRIVER_WRITE_MAX_BYTES", 512)
+    assert t.merge_batch(ev, batch_id=0)["write_path"] == "executors"
+    monkeypatch.undo()
+    assert t.merge_batch(ev, batch_id=1)["write_path"] == "driver"
+
+
+@pytest.mark.parametrize("batch_rows", ["3", "0"])
+def test_driver_write_in_small_batches(spark, tmp_path, batch_rows):
+    """The driver path hands ``_write`` the rows in bucket order, one
+    ``arrowMaxRecordsPerBatch`` batch at a time (0: a single batch).
+    Batches that end inside a bucket still give one file per bucket,
+    and the same files as one batch per write."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    rows = [(i, "I", f"d{i}", [i, i], 2, "web", None) for i in range(40)]
+    ev = _parquet_events(spark, tmp_path, rows)
+    a, b = (
+        LakeTable.create(
+            spark, str(tmp_path / n), DOC_SCHEMA, key_col="doc_id", n_buckets=4
+        )
+        for n in ("small", "default")
+    )
+    old = spark.conf.get(key)
+    spark.conf.set(key, batch_rows)
+    try:
+        ra = a.merge_batch(ev, batch_id=0)
+    finally:
+        spark.conf.set(key, old)
+    rb = b.merge_batch(ev, batch_id=0)
+    assert (ra["write_path"], rb["write_path"]) == ("driver", "driver")
+    files_a, files_b = (
+        [FileEntry.from_json(f) for f in r["new_files"]] for r in (ra, rb)
+    )
+    assert len(files_a) == len({f.bucket for f in files_a}) == 4
+    assert _bucket_rows(files_a) == _bucket_rows(files_b)
+    _assert_same_tables(a, b, [f"d{i}" for i in range(40)])
