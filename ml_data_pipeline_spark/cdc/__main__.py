@@ -274,7 +274,8 @@ def main(argv: list[str] | None = None) -> int:
         t = LakeTable.load(spark, args.table)
         ch_df = t.changes(args.since)
         if args.out:
-            ch_df.write.mode("overwrite").parquet(args.out)
+            old = [f"_old_{c}" for c in t.snapshot.payload_cols()]
+            ch_df.drop(*old).write.mode("overwrite").parquet(args.out)
         from pyspark.sql import functions as F
 
         counts = {

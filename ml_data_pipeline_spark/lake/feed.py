@@ -71,14 +71,13 @@ class ChangesFeed:
 
     # --------------------------------------------------------------- read
 
-    def poll(self, include_old: bool = False) -> tuple[DataFrame | None, int]:
+    def poll(self) -> tuple[DataFrame | None, int]:
         """(changes DataFrame, target snapshot id) for the window from
         the cursor to the table's current committed snapshot, or
         (None, cursor) when there is nothing new. Does NOT advance the
         cursor — call ``commit(target)`` after the window is applied.
-        ``include_old`` forwards to ``LakeTable.changes`` (previous
-        payload as ``_old_<col>`` — needed by derived views that
-        retract old contributions, e.g. the inverted token index).
+        The rows are ``LakeTable.changes``' (new state plus the previous
+        payload as ``_old_<col>``); a sink selects the columns it needs.
         """
         cur = self.cursor
         head_snap = self.table.refresh()
@@ -89,7 +88,7 @@ class ChangesFeed:
         # bound, so a commit racing this poll cannot widen the
         # delivered window past the cursor/batch-id we hand back.
         return (
-            self.table.changes(cur, include_old=include_old, until_snap=head_snap),
+            self.table.changes(cur, until_snap=head_snap),
             head_snap.snapshot_id,
         )
 

@@ -768,98 +768,99 @@ class LakeTable:
     def _reduce(
         cls, df: DataFrame, snap: Snapshot, salt_col: str | None = None
     ) -> DataFrame:
-        """Per-key latest state of ``snap``'s storage rows ``df``: the
-        per-column patch reduce on patch-enabled tables, else max
-        ``_seq``. ``salt_col`` groups by (key, salt) for the first
-        phase of a salted two-phase reduce."""
-        if snap.patch_enabled:
-            return cls._reduce_latest_patch(
-                df, snap.key_col, snap.payload_cols(), salt_col=salt_col
-            )
-        return cls._reduce_latest(df, snap.key_col, salt_col=salt_col)
+        """Per-key latest state of ``snap``'s storage rows ``df``.
 
-    @staticmethod
-    def _reduce_latest(
-        df: DataFrame, key_col: str, salt_col: str | None = None
-    ) -> DataFrame:
-        """Per-key last-write-wins by max ``_seq``.
-
-        Uses ``groupBy + max(struct(_seq, ...))`` rather than a window
+        ``groupBy + max(struct(...))`` rather than a window
         ``row_number``: struct-max is partially aggregable, so Spark
         combines map-side before the shuffle — a hot key collapses to
         one row per map task instead of shipping every version to a
         single reducer. This is the skew-proof reduction primitive.
-        Max-by-seq is associative, so reducing by (key, ``salt_col``)
-        and then by key is an exact split.
+        ``salt_col`` groups by (key, salt) for the first phase of a
+        salted two-phase reduce (exact: the reduce is a semilattice).
         """
-        group = [key_col] if salt_col is None else [key_col, salt_col]
-        other = [c for c in df.columns if c not in (*group, SEQ_COL)]
-        packed = df.groupBy(*group).agg(
-            F.max(F.struct(SEQ_COL, *other)).alias("_p")
-        )
-        return packed.select(
-            key_col,
-            *[F.col(f"_p.{c}").alias(c) for c in other],
-            F.col(f"_p.{SEQ_COL}").alias(SEQ_COL),
+        group = [snap.key_col] if salt_col is None else [snap.key_col, salt_col]
+        return (
+            df.groupBy(*group)
+            .agg(*cls._latest_aggs(snap))
+            .select(snap.key_col, *cls._latest_cols(snap))
         )
 
     @staticmethod
-    def _reduce_latest_patch(
-        df: DataFrame,
-        key_col: str,
-        payload: Sequence[str],
-        salt_col: str | None = None,
-    ) -> DataFrame:
-        """LWW-per-column reduce for patch-enabled tables.
+    def _latest_aggs(
+        snap: Snapshot, where: Column | None = None, prefix: str = ""
+    ) -> list[Column]:
+        """The max aggregates behind ``_reduce``, over the rows where
+        ``where`` holds (all rows by default), named ``<prefix>_b`` and
+        ``<prefix>_o_<col>``; ``_latest_cols`` projects them back to
+        storage columns.
 
         Semantics (exactly ordered-replay): per key, the max-``_seq``
-        FULL event is the base row (patch-carrier rows sit at
-        ``CARRIER_SEQ`` and lose to any full event); per payload
-        column, the max patch-seq overlay applies iff its seq beats the
-        base's. Deletes win as base (a patch never resurrects a row),
-        but surviving overlays are RETAINED on tombstones so an
-        out-of-order full event arriving later is still patched.
+        row is the base row (a tie on ``_seq`` breaks field by field
+        over the payload, then ``_deleted``). A plain table stops
+        there. On a patch-enabled
+        table patch-carrier rows sit at ``CARRIER_SEQ`` and lose to any
+        full event as base, and per payload column the max patch-seq
+        overlay applies iff its seq beats the base's. Deletes win as
+        base (a patch never resurrects a row), but surviving overlays
+        are RETAINED on tombstones so an out-of-order full event
+        arriving later is still patched.
 
         Everything is a max — partially aggregable and a semilattice
         (the reduce's output rows are valid inputs), so map-side
-        combine, salting, and cross-batch/compaction merging all
-        compose exactly.
+        combine, salting, cross-batch/compaction merging and a
+        ``where``-restricted second set of maxes all compose exactly.
         """
-        base = F.max(F.struct(SEQ_COL, *payload, DELETED_COL)).alias("_b")
-        overlays = [
-            F.max(
-                F.when(
-                    F.col(PS_PREFIX + c).isNotNull(),
-                    F.struct(
-                        F.col(PS_PREFIX + c).alias("ps"), F.col(c).alias("v")
+        payload = snap.payload_cols()
+
+        def agg(expr: Column, name: str) -> Column:
+            if where is not None:
+                expr = F.when(where, expr)
+            return F.max(expr).alias(prefix + name)
+
+        aggs = [agg(F.struct(SEQ_COL, *payload, DELETED_COL), "_b")]
+        if snap.patch_enabled:
+            aggs += [
+                agg(
+                    F.when(
+                        F.col(PS_PREFIX + c).isNotNull(),
+                        F.struct(
+                            F.col(PS_PREFIX + c).alias("ps"), F.col(c).alias("v")
+                        ),
                     ),
+                    f"_o_{c}",
                 )
-            ).alias(f"_o_{c}")
-            for c in payload
-        ]
-        group = [key_col] if salt_col is None else [key_col, salt_col]
-        packed = df.groupBy(*group).agg(base, *overlays)
-        fseq = F.col(f"_b.{SEQ_COL}")
-        deleted = F.col(f"_b.{DELETED_COL}")
+                for c in payload
+            ]
+        return aggs
+
+    @staticmethod
+    def _latest_cols(snap: Snapshot, prefix: str = "") -> list[Column]:
+        """The payload and hidden storage columns of the state that
+        ``_latest_aggs(snap, prefix=prefix)`` aggregated (the key is
+        the caller's group column)."""
+        payload = snap.payload_cols()
+        fseq = F.col(f"{prefix}_b.{SEQ_COL}")
+        deleted = F.col(f"{prefix}_b.{DELETED_COL}")
         out_vals, out_ps = [], []
         for c in payload:
-            o = F.col(f"_o_{c}")
-            applied = o.isNotNull() & (o["ps"] > fseq)
-            out_vals.append(
-                F.when(applied, o["v"])
-                .otherwise(
-                    F.when(deleted, F.lit(None)).otherwise(F.col(f"_b.{c}"))
+            # A plain tombstone's payload is already null (``_resolve``
+            # writes it so); a patch carrier's base row holds the
+            # patch's values, so a deleted base contributes none.
+            val = F.col(f"{prefix}_b.{c}")
+            if snap.patch_enabled:
+                o = F.col(f"{prefix}_o_{c}")
+                applied = o.isNotNull() & (o["ps"] > fseq)
+                val = F.when(applied, o["v"]).otherwise(
+                    F.when(deleted, F.lit(None)).otherwise(val)
                 )
-                .alias(c)
-            )
-            out_ps.append(F.when(applied, o["ps"]).alias(PS_PREFIX + c))
-        return packed.select(
-            key_col,
+                out_ps.append(F.when(applied, o["ps"]).alias(PS_PREFIX + c))
+            out_vals.append(val.alias(c))
+        return [
             *out_vals,
             fseq.alias(SEQ_COL),
             deleted.alias(DELETED_COL),
             *out_ps,
-        )
+        ]
 
     def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
         path = os.path.join(self.meta_dir, f"snapshot-{snapshot_id}.json")
@@ -975,7 +976,7 @@ class LakeTable:
         # over py4j, planning, two stages around the reduce's exchange)
         # and ~35 ms read here with pyarrow, on a 4-vCPU host.
         # Patch-enabled tables stay on Spark: their per-column overlay
-        # reduce would be a second copy of _reduce_latest_patch.
+        # reduce would be a second copy of _reduce.
         conf = self.spark._jsparkSession.sessionState().conf()
         size = sum(
             f.bytes or os.path.getsize(os.path.join(self.root, f.path))
@@ -1039,14 +1040,16 @@ class LakeTable:
             rows = top.slice(0, 0 if winners[0][DELETED_COL] else 1)
         return rows.select(snap.schema.fieldNames())
 
-    def _version_expr(self, snap: Snapshot):
+    def _version_expr(self, snap: Snapshot, of: str = ""):
         """Per-row change version: the highest event seq that shaped
         this row's state — monotone under applied events, constant
-        under losing/no-op events (patch overlays count via _ps)."""
+        under losing/no-op events (patch overlays count via _ps).
+        ``of`` prefixes the column names, e.g. ``"_old."`` to read a
+        state held in a struct column."""
         if not snap.patch_enabled:
-            return F.col(SEQ_COL)
-        parts = [F.col(SEQ_COL)] + [
-            F.coalesce(F.col(PS_PREFIX + c), F.lit(CARRIER_SEQ))
+            return F.col(of + SEQ_COL)
+        parts = [F.col(of + SEQ_COL)] + [
+            F.coalesce(F.col(of + PS_PREFIX + c), F.lit(CARRIER_SEQ))
             for c in snap.payload_cols()
         ]
         return F.greatest(*parts) if len(parts) > 1 else parts[0]
@@ -1054,35 +1057,35 @@ class LakeTable:
     def changes(
         self,
         since_snapshot_id: int,
-        include_old: bool = False,
         until_snap: "Snapshot | None" = None,
     ) -> DataFrame:
         """Incremental changes feed (Iceberg incremental-read analog):
         the net per-key change between ``since_snapshot_id`` and the
         current snapshot, as a changelog of (op 'U'|'D', key, payload,
-        _seq, …) rows carrying each changed key's NEW full state.
+        _seq, …) rows carrying each changed key's NEW full state, plus
+        its PREVIOUS payload as ``_old_<col>`` columns (null for a key
+        absent or deleted at the base). Derived views that must retract
+        old contributions read those, e.g. the inverted token index
+        (postings for tokens REMOVED by an update); other consumers
+        select what they need.
 
         Cost is O(new data + touched buckets of the base state), never
         O(table): only files added since the base snapshot are scanned
-        for the window, and the base state is read bucket-pruned to the
-        buckets those files touch (compaction output files are included
-        in the window scan but produce no false changes — a key's
-        change *version*, the max event seq shaping its state incl.
-        patch overlays, only moves when a new event wins). Downstream
-        training pipelines consume this instead of re-reading the
-        table.
+        for the window, and the base files are read bucket-pruned to
+        the buckets those files touch. Base and window rows go through
+        ONE ``groupBy(key)`` holding two sets of the reduce's maxes:
+        over all rows (the new state) and over base rows only (the old
+        state). Each base file is scanned once and nothing is joined.
+        Compaction output files are included in the window scan but
+        produce no false changes — a key's change *version*, the max
+        event seq shaping its state incl. patch overlays, only moves
+        when a new event wins. Downstream training pipelines consume
+        this instead of re-reading the table.
 
         Correctness precondition: no ``compact(gc_before_seq=...)``
         inside the window may have GC'd a tombstone this feed hasn't
         delivered yet (see ``compact``'s contract) — otherwise the net
         delete is unobservable from the file diff.
-
-        ``include_old=True`` additionally attaches the key's PREVIOUS
-        payload as ``_old_<col>`` columns (null for newly-inserted
-        keys) — free here (the base state is already joined for the
-        version comparison) and required by derived views that must
-        retract old contributions, e.g. the inverted token index
-        (postings for tokens REMOVED by an update).
 
         ``until_snap`` pins the window's upper bound to an explicit
         snapshot (default: refresh to the current head). Consumers
@@ -1104,68 +1107,59 @@ class LakeTable:
             ) from None
         base_paths = {f.path for f in base.files}
         added = [f for f in snap.files if f.path not in base_paths]
-        payload = snap.payload_cols()
-        out_schema = T.StructType(
-            [T.StructField("op", T.StringType())]
-            + list(snap.storage_schema().fields)
-            + (
-                [
-                    T.StructField(f"_old_{f.name}", f.dataType)
-                    for f in snap.schema.fields
-                    if f.name != snap.key_col
-                ]
-                if include_old
-                else []
-            )
-        )
-        if not added:
-            return self._empty(out_schema)
-
-        touched = set()
-        for f in added:
-            touched.add(f.bucket)
-        # Base state, bucket-pruned + reduced (tombstones kept — a
-        # delete followed by re-insert must read as a change). The base
+        touched = {f.bucket for f in added}
+        # With nothing added both scans are empty local relations, and
+        # the optimizer folds the whole plan to an empty one. The base
         # FILES are scanned under the CURRENT snapshot's storage schema
         # (snap.schemas keeps every historical fingerprint), so both
-        # sides align even across mid-window schema evolution.
+        # sides align even across mid-window schema evolution. The old
+        # state keeps tombstones: a delete followed by re-insert must
+        # read as a change.
         base_files = [f for f in base.files if f.bucket in touched]
-        base_state = self._reduce(self.scan_files(files=base_files, snap=snap), snap)
-        win = self.scan_files(files=added, snap=snap)
-        new_state = self._reduce(base_state.unionByName(win), snap)
-        ver = self._version_expr(snap)
-        old_cols = []
-        if include_old:
-            old_cols = [
-                F.when(~F.col("_base_del"), F.col(f"_old_{c}")).alias(
-                    f"_old_{c}"
+        rows = (
+            self.scan_files(files=base_files, snap=snap)
+            .withColumn("_in_base", F.lit(True))
+            .unionByName(
+                self.scan_files(files=added, snap=snap).withColumn(
+                    "_in_base", F.lit(False)
                 )
-                for c in payload
-            ]
-        base_vers = base_state.select(
-            F.col(snap.key_col),
-            ver.alias("_base_ver"),
-            F.col(DELETED_COL).alias("_base_del"),
-            *[F.col(c).alias(f"_old_{c}") for c in (payload if include_old else [])],
-        )
-        base_absent = F.col("_base_ver").isNull() | F.col("_base_del")
-        changed = (
-            new_state.join(base_vers, snap.key_col, "left")
-            .where(
-                F.col("_base_ver").isNull() | (ver > F.col("_base_ver"))
             )
+        )
+        state = (
+            rows.groupBy(snap.key_col)
+            .agg(
+                *self._latest_aggs(snap),
+                *self._latest_aggs(snap, where=F.col("_in_base"), prefix="_old"),
+            )
+            .select(
+                snap.key_col,
+                *self._latest_cols(snap),
+                F.struct(*self._latest_cols(snap, prefix="_old")).alias("_old"),
+            )
+        )
+        # _old._seq is null iff the key has no base row; the old
+        # version cannot say so (on patch tables it never reads null).
+        base_absent = F.col(f"_old.{SEQ_COL}").isNull()
+        old_ver = self._version_expr(snap, of="_old.")
+        changed = state.where(
+            base_absent | (self._version_expr(snap) > old_ver)
+        ).where(
             # a key absent at the base (never existed, or tombstoned)
             # that is still/again deleted now is not a net change
-            .where(~(F.col(DELETED_COL) & base_absent))
+            ~(F.col(DELETED_COL) & (base_absent | F.col(f"_old.{DELETED_COL}")))
         )
-        out = changed.select(
+        return changed.select(
             F.when(F.col(DELETED_COL), F.lit("D"))
             .otherwise(F.lit("U"))
             .alias("op"),
-            *[F.col(c) for c in win.columns],
-            *old_cols,
+            *snap.storage_schema().fieldNames(),
+            *[
+                F.when(~F.col(f"_old.{DELETED_COL}"), F.col(f"_old.{c}")).alias(
+                    f"_old_{c}"
+                )
+                for c in snap.payload_cols()
+            ],
         )
-        return out
 
     # ---------------------------------------------------------------- merge
 

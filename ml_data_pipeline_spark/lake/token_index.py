@@ -15,8 +15,8 @@ sync appends, for every changed document:
 
 * ``present=true``  rows for the NEW state's distinct tokens,
 * ``present=false`` rows for tokens REMOVED by the update (old minus
-  new — via ``changes(include_old=True)``) or for ALL old tokens on
-  a delete,
+  new — from the ``_old_<tokens>`` column ``changes()`` carries) or
+  for ALL old tokens on a delete,
 
 each stamped with the document's change version ``ver``. A read
 reduces per (token, doc_id) by max ``ver`` (present flag rides
@@ -42,7 +42,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ml_data_pipeline_spark.lake.feed import ChangesFeed
@@ -122,6 +122,24 @@ class TokenIndex:
             F.lit(self.meta["n_buckets"]),
         ).cast("int")
 
+    def _without_stop(self, toks: Column) -> Column:
+        """The token array ``toks`` minus the index's stop tokens."""
+        stop = self.meta.get("stop_tokens") or []
+        if not stop:
+            return toks
+        return F.array_except(toks, F.array(*[F.lit(int(t)) for t in stop]))
+
+    def _append(self, postings: DataFrame) -> None:
+        """Write ``postings`` as one new window, one directory per
+        token bucket."""
+        out_dir = os.path.join(self.root, f"win-{uuid.uuid4().hex}")
+        (
+            postings.withColumn("bucket", self._bucket_expr(F.col("token")))
+            .repartition(F.col("bucket"))
+            .write.partitionBy("bucket")
+            .parquet(out_dir)
+        )
+
     # ---------------------------------------------------------------- sync
 
     def sync(self, feed: ChangesFeed) -> dict:
@@ -131,13 +149,10 @@ class TokenIndex:
         window's append — a crash in between re-appends the same
         window, which reduces to the same state.
         """
-        meta = self.meta
-        tokens_col = meta["tokens_col"]
-        stop = meta.get("stop_tokens") or []
-        stop_lit = F.array(*[F.lit(int(t)) for t in stop])
+        tokens_col = self.meta["tokens_col"]
         windows = 0
         while True:
-            df, target = feed.poll(include_old=True)
+            df, target = feed.poll()
             if df is None:
                 return {"windows": windows, "cursor": feed.cursor}
             key = feed.table.snapshot.key_col
@@ -146,19 +161,20 @@ class TokenIndex:
             # column is NULL (legal update) must retract all its old
             # postings, not silently keep them (array_except(x, NULL)
             # is NULL → no delete rows emitted)
-            new_tok = F.coalesce(
-                F.when(
-                    ~F.col(DELETED_COL), F.array_distinct(F.col(tokens_col))
-                ),
-                F.array().cast("array<int>"),
+            new_tok = self._without_stop(
+                F.coalesce(
+                    F.when(
+                        ~F.col(DELETED_COL), F.array_distinct(F.col(tokens_col))
+                    ),
+                    F.array().cast("array<int>"),
+                )
             )
-            old_tok = F.coalesce(
-                F.array_distinct(F.col(f"_old_{tokens_col}")),
-                F.array().cast("array<int>"),
+            old_tok = self._without_stop(
+                F.coalesce(
+                    F.array_distinct(F.col(f"_old_{tokens_col}")),
+                    F.array().cast("array<int>"),
+                )
             )
-            if stop:
-                new_tok = F.array_except(new_tok, stop_lit)
-                old_tok = F.array_except(old_tok, stop_lit)
             base = df.select(
                 F.col(key).alias("doc_id"),
                 ver,
@@ -177,14 +193,7 @@ class TokenIndex:
                 "ver",
                 F.lit(False).alias("present"),
             )
-            postings = adds.unionByName(dels)
-            out_dir = os.path.join(self.root, f"win-{uuid.uuid4().hex}")
-            (
-                postings.withColumn("bucket", self._bucket_expr(F.col("token")))
-                .repartition(F.col("bucket"))
-                .write.partitionBy("bucket")
-                .parquet(out_dir)
-            )
+            self._append(adds.unionByName(dels))
             feed.commit(target)
             windows += 1
 
@@ -208,18 +217,12 @@ class TokenIndex:
                 "recreate the index directory (safe: the index is a "
                 "derived view), then rebuild"
             )
-        meta = self.meta
-        tokens_col = meta["tokens_col"]
-        stop = meta.get("stop_tokens") or []
+        tokens_col = self.meta["tokens_col"]
         snap = feed.table.refresh()
         ver = feed.table._version_expr(snap).alias("ver")
         key = snap.key_col
         state = feed.table.read(include_hidden=True)
-        toks = F.array_distinct(F.col(tokens_col))
-        if stop:
-            toks = F.array_except(
-                toks, F.array(*[F.lit(int(t)) for t in stop])
-            )
+        toks = self._without_stop(F.array_distinct(F.col(tokens_col)))
         postings = state.select(
             F.col(key).alias("doc_id"), ver, toks.alias("_t")
         ).select(
@@ -228,13 +231,7 @@ class TokenIndex:
             "ver",
             F.lit(True).alias("present"),
         )
-        out_dir = os.path.join(self.root, f"win-{uuid.uuid4().hex}")
-        (
-            postings.withColumn("bucket", self._bucket_expr(F.col("token")))
-            .repartition(F.col("bucket"))
-            .write.partitionBy("bucket")
-            .parquet(out_dir)
-        )
+        self._append(postings)
         feed.commit(snap.snapshot_id)
         return {"rebuilt": True, "cursor": snap.snapshot_id}
 
@@ -406,15 +403,7 @@ class TokenIndex:
         if not paths:
             return {"folded_windows": 0}
         raw = self.spark.read.schema(POSTING_SCHEMA).parquet(*paths)
-        reduced = self._reduce(raw).withColumn(
-            "bucket", self._bucket_expr(F.col("token"))
-        )
-        out_dir = os.path.join(self.root, f"win-{uuid.uuid4().hex}")
-        (
-            reduced.repartition(F.col("bucket"))
-            .write.partitionBy("bucket")
-            .parquet(out_dir)
-        )
+        self._append(self._reduce(raw))
         import shutil
 
         for d in victims:

@@ -344,9 +344,17 @@ def csv_infer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e.write.mode("overwrite").option("header", True).csv(out)
     back = read_csv_inferred(spark, out)
-    assert isinstance(back.schema["converted"].dataType, T.BooleanType)
-    assert isinstance(back.schema["event_id"].dataType, T.LongType)
-    assert isinstance(back.schema["value"].dataType, T.DoubleType)
+    for name, want in (
+        ("converted", T.BooleanType),
+        ("event_id", T.LongType),
+        ("value", T.DoubleType),
+    ):
+        got = back.schema[name].dataType
+        if not isinstance(got, want):
+            raise TypeError(
+                f"CSV inference typed {name!r} as {got.simpleString()}, "
+                f"expected {want.typeName()}"
+            )
     return (
         back.groupBy("converted")
         .agg(

@@ -263,3 +263,27 @@ def test_oracle_check_survives_python_O(tmp_path, case):
     assert proc.returncode != 0, proc.stdout
     assert "not running under python -O" not in proc.stderr
     assert "AssertionError" in proc.stderr, proc.stderr[-2000:]
+
+
+def test_package_has_no_bare_asserts():
+    """``python -O`` strips ``assert`` statements, so no check in the
+    package may rest on one: raise explicitly instead."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "ml_data_pipeline_spark",
+    )
+    found = []
+    for d, _, names in os.walk(pkg):
+        for n in names:
+            if n.endswith(".py"):
+                path = os.path.join(d, n)
+                with open(path) as f:
+                    tree = ast.parse(f.read(), path)
+                found += [
+                    f"{os.path.relpath(path, pkg)}:{node.lineno}"
+                    for node in ast.walk(tree)
+                    if isinstance(node, ast.Assert)
+                ]
+    assert not found, found

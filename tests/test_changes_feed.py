@@ -3,11 +3,14 @@ bucket-pruned point lookup."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from ml_data_pipeline_spark.cdc.apply import create_docs_table
-from ml_data_pipeline_spark.cdc.events import change_events_df
+from ml_data_pipeline_spark.cdc.events import DOC_SCHEMA, change_events_df
 from ml_data_pipeline_spark.cdc.oracle import expected_state
 from ml_data_pipeline_spark.lake.table import LakeTable
 
@@ -45,10 +48,8 @@ def test_changes_feed_matches_state_diff(spark, tmp_path):
     t.compact()
     t.merge_batch(ev1, batch_id=1)
 
-    got = {
-        r["doc_id"]: (r["op"], _tok(r["tokens"]))
-        for r in t.changes(snap_a).collect()
-    }
+    rows = t.changes(snap_a).collect()
+    got = {r["doc_id"]: (r["op"], _tok(r["tokens"])) for r in rows}
     want = _oracle_diff(ev0.toPandas(), ev0.unionByName(ev1).toPandas())
     assert set(got) == set(want), (
         f"missing={sorted(set(want) - set(got))[:5]} "
@@ -58,15 +59,36 @@ def test_changes_feed_matches_state_diff(spark, tmp_path):
         assert got[k][0] == op, (k, got[k], op)
         if op == "U":
             assert got[k][1] == tok, k
+    # _old_tokens is the key's state at the base: null for a key new
+    # in the window (or deleted at the base)
+    base = _state_map(expected_state(ev0.toPandas()))
+    olds = {r["doc_id"]: _tok(r["_old_tokens"]) for r in rows}
+    assert any(k in base for k in olds) and any(k not in base for k in olds)
+    for k, old in olds.items():
+        assert old == base.get(k), (k, old, base.get(k))
     # feed of an unchanged window is empty
     assert t.changes(t.snapshot.snapshot_id).count() == 0
 
 
-def test_changes_feed_scans_only_new_and_touched(spark, tmp_path):
+def _plan_nodes(plan: str) -> list[str]:
+    """The operator names of a plan's tree string, one per node."""
+    return [re.sub(r"^[\s:+\-]*", "", line).split(" ")[0] for line in plan.splitlines()]
+
+
+@pytest.mark.parametrize("patch", [False, True])
+def test_changes_feed_scans_only_new_and_touched(spark, tmp_path, patch):
     """O(new data) contract: the changelog plan reads only files added
     since the base snapshot plus the touched buckets' base files —
-    never the whole table."""
-    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=8)
+    never the whole table — and each of those base files once. Base
+    and window rows meet in one aggregate: one exchange, no join."""
+    t = LakeTable.create(
+        spark,
+        str(tmp_path / "tbl"),
+        DOC_SCHEMA,
+        key_col="doc_id",
+        n_buckets=8,
+        properties={"patch.enabled": "true"} if patch else None,
+    )
     ev0 = change_events_df(spark, 200, 2000, seed=9)
     t.merge_batch(ev0, batch_id=0)
     snap_a = t.snapshot.snapshot_id
@@ -79,15 +101,24 @@ def test_changes_feed_scans_only_new_and_touched(spark, tmp_path):
     ]
     touched = {f.bucket for f in added}
     assert len(touched) < 8  # really pruned
-    plan = t.changes(snap_a)._jdf.queryExecution().executedPlan().toString()
-    base_untouched = [
-        f for f in t.snapshot_by_id(snap_a).files if f.bucket not in touched
-    ]
-    # no untouched-bucket base file appears in the scan plan
-    import os
-
-    for f in base_untouched[:5]:
-        assert os.path.basename(f.path) not in plan
+    # list every path of a scan in the plan string (default: truncated)
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1000000")
+    try:
+        plan = t.changes(snap_a)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    base = t.snapshot_by_id(snap_a).files
+    for f in base:
+        # no untouched-bucket base file appears in the scan plan; each
+        # touched one appears in exactly one scan
+        want = 1 if f.bucket in touched else 0
+        assert plan.count(f.path) == want, (f.path, plan)
+    nodes = _plan_nodes(plan)
+    assert nodes.count("FileScan") == 2, plan
+    assert not [n for n in nodes if "Join" in n], plan
+    assert len([n for n in nodes if n.endswith("Exchange")]) == 1, plan
 
 
 def test_poll_window_pinned_to_reported_target(spark, tmp_path):
@@ -145,8 +176,6 @@ def test_bootstrap_lagging_consumer_lifecycle(spark, tmp_path):
     src.vacuum(keep_snapshots=1, orphan_grace_sec=0.0)
 
     feed = ChangesFeed(src, str(tmp_path / "cursor.json"))
-    import pytest
-
     with pytest.raises(ValueError, match="re-bootstrap"):
         feed.poll()
 
@@ -202,8 +231,6 @@ def test_bootstrap_lagging_consumer_lifecycle(spark, tmp_path):
 def test_changes_feed_patch_table(spark, tmp_path):
     """Patch overlays move a key's change version: a patch-only window
     emits the key's NEW merged full state."""
-    from ml_data_pipeline_spark.cdc.events import DOC_SCHEMA
-
     t = LakeTable.create(
         spark,
         str(tmp_path / "tblp"),
@@ -239,9 +266,15 @@ def test_changes_feed_patch_table(spark, tmp_path):
     assert n_keys > 0 and all(r["op"] == "U" for r in ch)
     # emitted rows carry the MERGED state: patched source, base tokens
     full = {r["doc_id"]: r for r in t.read().collect()}
+    old = {
+        r["doc_id"]: r["source"]
+        for r in t.read(as_of_snapshot=snap_a).collect()
+    }
     for r in ch:
         assert r["source"] == "patched"
         assert _tok(r["tokens"]) == _tok(full[r["doc_id"]]["tokens"])
+        # ... and the state at the base as _old_<col>
+        assert r["_old_source"] == old[r["doc_id"]]
 
 
 def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
