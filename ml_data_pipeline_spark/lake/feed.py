@@ -114,7 +114,7 @@ class ChangesFeed:
         if df is None:
             return {"advanced": False, "cursor": target}
         snap = self.table.snapshot
-        key = snap.key_col
+        keys = snap.key_cols
         payload = snap.payload_cols()
         # seq = the row's change VERSION (max event seq that shaped its
         # state, incl. patch overlays), not the raw base _seq: a state
@@ -124,7 +124,7 @@ class ChangesFeed:
         events = df.select(
             "op",
             ver.alias("seq"),
-            key,
+            *keys,
             *payload,
         )
         res = dest.merge_batch(
@@ -196,12 +196,12 @@ class ChangesFeed:
                 "dest table): a full-state load cannot emit delete "
                 "tombstones for stale keys a lagging replica may hold"
             )
-        key = snap.key_col
+        keys = snap.key_cols
         payload = snap.payload_cols()
         ver = self.table._version_expr(snap)
         state = self.table.read(include_hidden=True)
         events = state.select(
-            F.lit("U").alias("op"), ver.alias("seq"), key, *payload
+            F.lit("U").alias("op"), ver.alias("seq"), *keys, *payload
         )
         res = dest.merge_batch(
             events,

@@ -172,6 +172,9 @@ class Snapshot:
     # (reference analog: the parquet writer's properties,
     # ml-data-readers/src/parquet/writer.rs:37-56).
     properties: dict = field(default_factory=dict)
+    # Key columns after ``key_col`` on a composite-key table: a row's
+    # identity is the tuple, while ``key_col`` alone buckets and blooms.
+    key_rest: list[str] = field(default_factory=list)
 
     @property
     def schema(self) -> T.StructType:
@@ -181,8 +184,13 @@ class Snapshot:
     def patch_enabled(self) -> bool:
         return self.properties.get(PATCH_PROP) == "true"
 
+    @property
+    def key_cols(self) -> list[str]:
+        return [self.key_col, *self.key_rest]
+
     def payload_cols(self) -> list[str]:
-        return [f.name for f in self.schema.fields if f.name != self.key_col]
+        keys = self.key_cols
+        return [f.name for f in self.schema.fields if f.name not in keys]
 
     def storage_schema(self) -> T.StructType:
         fields = list(self.schema.fields) + [
@@ -213,6 +221,7 @@ class Snapshot:
             schemas=dict(self.schemas),
             watermarks=dict(self.watermarks),
             properties=dict(self.properties),
+            key_rest=self.key_rest,
         )
 
     def to_json(self) -> dict:
@@ -227,6 +236,7 @@ class Snapshot:
             "watermarks": self.watermarks,
             "summary": self.summary,
             "properties": self.properties,
+            "key_rest": self.key_rest,
         }
 
     @staticmethod
@@ -242,6 +252,7 @@ class Snapshot:
             watermarks=d.get("watermarks", {}),
             summary=d.get("summary", {}),
             properties=d.get("properties", {}),
+            key_rest=d.get("key_rest", []),
         )
 
 
@@ -298,14 +309,19 @@ class LakeTable:
         spark: SparkSession,
         root: str,
         schema: T.StructType,
-        key_col: str,
+        key_col: str | Sequence[str],
         n_buckets: int = 16,
         properties: dict | None = None,
     ) -> "LakeTable":
+        """``key_col`` names the key column, or a sequence of them for a
+        composite key: rows are then identified by the tuple, and
+        bucketed and bloomed on its first column."""
         if cls.exists(root):
             raise ValueError(f"table already exists at {root}")
-        if key_col not in schema.fieldNames():
-            raise SchemaMismatch(f"key column {key_col!r} not in schema")
+        keys = [key_col] if isinstance(key_col, str) else list(key_col)
+        for k in keys:
+            if k not in schema.fieldNames():
+                raise SchemaMismatch(f"key column {k!r} not in schema")
         assert_lake_payload_type(schema)
         t = cls(spark, root)
         os.makedirs(t.meta_dir, exist_ok=True)
@@ -314,9 +330,10 @@ class LakeTable:
             snapshot_id=0,
             parent_id=None,
             schema_json=schema.jsonValue(),
-            key_col=key_col,
+            key_col=keys[0],
             n_buckets=n_buckets,
             properties=dict(properties or {}),
+            key_rest=keys[1:],
         )
         t._write_snapshot(snap)
         return t
@@ -778,11 +795,12 @@ class LakeTable:
         ``salt_col`` groups by (key, salt) for the first phase of a
         salted two-phase reduce (exact: the reduce is a semilattice).
         """
-        group = [snap.key_col] if salt_col is None else [snap.key_col, salt_col]
+        keys = snap.key_cols
+        group = keys if salt_col is None else [*keys, salt_col]
         return (
             df.groupBy(*group)
             .agg(*cls._latest_aggs(snap))
-            .select(snap.key_col, *cls._latest_cols(snap))
+            .select(*keys, *cls._latest_cols(snap))
         )
 
     @staticmethod
@@ -967,8 +985,14 @@ class LakeTable:
         (``spark.sql.files.maxPartitionBytes``) the read and reduce run
         on the driver and the answer is a local relation: collecting it
         starts no Spark job. Larger inputs, patch-enabled tables and a
-        max-``_seq`` tie between differing rows take the Spark plan."""
+        max-``_seq`` tie between differing rows take the Spark plan.
+        A composite-key table has no point lookup (``ValueError``)."""
         snap = self.refresh()
+        if snap.key_rest:
+            raise ValueError(
+                f"lookup needs a single-column key; this table's key is "
+                f"{snap.key_cols}"
+            )
         cand = self.lookup_files(key_value, snap=snap)
         # Input that fits one split would run as a single Spark task
         # anyway, so a job buys no parallelism and is all of the cost: a
@@ -1126,13 +1150,13 @@ class LakeTable:
             )
         )
         state = (
-            rows.groupBy(snap.key_col)
+            rows.groupBy(*snap.key_cols)
             .agg(
                 *self._latest_aggs(snap),
                 *self._latest_aggs(snap, where=F.col("_in_base"), prefix="_old"),
             )
             .select(
-                snap.key_col,
+                *snap.key_cols,
                 *self._latest_cols(snap),
                 F.struct(*self._latest_cols(snap, prefix="_old")).alias("_old"),
             )
@@ -1327,10 +1351,12 @@ class LakeTable:
         Returns the payload columns the batch carries, the table schema
         with the batch's merged in, and the per-event quarantine reason
         (null for a valid event). Raises ``SchemaMismatch`` when the
-        batch's schema cannot merge, and on any change to the key
-        column's type: rows are bucketed by the key's ``xxhash64``,
-        which differs for an int and the same value as a bigint, so a
-        widened key would put an existing key in a second bucket.
+        batch's schema cannot merge, and on any change to a key
+        column's type: rows are bucketed by the first key column's
+        ``xxhash64``, which differs for an int and the same value as a
+        bigint, so a widened key would put an existing key in a second
+        bucket; and a row's identity is the key, which must compare
+        equal across batches.
         """
         drop = {EVENT_SEQ, EVENT_OP, *exclude_cols}
         incoming = T.StructType(
@@ -1338,20 +1364,23 @@ class LakeTable:
         )
         assert_lake_payload_type(incoming)
         merged = merge_schemas(snap.schema, incoming)
-        key = snap.key_col
-        if merged[key].dataType != snap.schema[key].dataType:
-            raise SchemaMismatch(
-                f"key column {key!r} cannot change type "
-                f"{snap.schema[key].dataType.simpleString()} -> "
-                f"{incoming[key].dataType.simpleString()}: rows are "
-                f"bucketed by its hash"
-            )
+        null_key = None
+        for key in snap.key_cols:
+            if merged[key].dataType != snap.schema[key].dataType:
+                raise SchemaMismatch(
+                    f"key column {key!r} cannot change type "
+                    f"{snap.schema[key].dataType.simpleString()} -> "
+                    f"{incoming[key].dataType.simpleString()}: rows are "
+                    f"bucketed and identified by the key"
+                )
+            c = F.col(key).isNull()
+            null_key = c if null_key is None else (null_key | c)
         # Bad-record quarantine (reference C1: corrupt-record detection,
         # ml-data-readers/src/binary.rs:238-270): invalid events must
         # not poison the table NOR abort the batch.
         ops = ("I", "U", "D", "P") if snap.patch_enabled else ("I", "U", "D")
         reason = (
-            F.when(F.col(key).isNull(), "null_key")
+            F.when(null_key, "null_key")
             .when(F.col(EVENT_SEQ).isNull(), "null_seq")
             # NULL op must be its own branch: ~isin(...) is NULL
             # (not true) for NULL, which would let the row through
@@ -1381,6 +1410,7 @@ class LakeTable:
         schema already includes the batch's. ``have`` names the payload
         columns the events carry; the others are null."""
         patch = snap.patch_enabled
+        keys = snap.key_cols
         payload = snap.payload_cols()
         ps = [PS_PREFIX + c for c in payload] if patch else []
         aligned = _align(snap.schema, have)
@@ -1395,7 +1425,7 @@ class LakeTable:
         rows = rows.select(
             *[
                 F.col(f.name)
-                if f.name == snap.key_col
+                if f.name in keys
                 else F.when(F.col(DELETED_COL), F.lit(None).cast(f.dataType))
                 .otherwise(F.col(f.name))
                 .alias(f.name)

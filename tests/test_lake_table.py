@@ -799,3 +799,108 @@ def test_driver_write_in_small_batches(spark, tmp_path, batch_rows):
     assert len(files_a) == len({f.bucket for f in files_a}) == 4
     assert _bucket_rows(files_a) == _bucket_rows(files_b)
     _assert_same_tables(a, b, [f"d{i}" for i in range(40)])
+
+
+# ------------------------------------------------------------ composite key
+
+PAIR_SCHEMA = T.StructType(
+    [
+        T.StructField("a", T.IntegerType()),
+        T.StructField("b", T.StringType()),
+        T.StructField("v", T.LongType()),
+    ]
+)
+
+
+def _pair_events(spark, rows):
+    return spark.createDataFrame(rows, "seq long, op string, a int, b string, v long")
+
+
+def _pair_state(rows):
+    """(a, b) -> (seq, op, v) of the max-seq event: the independent
+    reducer the table must agree with."""
+    out = {}
+    for seq, op, a, b, v in rows:
+        if (a, b) not in out or seq > out[(a, b)][0]:
+            out[(a, b)] = (seq, op, v)
+    return out
+
+
+def test_composite_key_merge_compact_changes(spark, tmp_path):
+    """On an (int, string) key a row is the pair: keys sharing ``a``
+    share a bucket but stay distinct rows through merges, deletes, a
+    delete -> re-insert, compaction and ``changes()``."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), PAIR_SCHEMA, key_col=("a", "b"), n_buckets=4
+    )
+    batches = [
+        [(1, "I", 1, "x", 10), (2, "I", 1, "y", 11), (3, "I", 2, "x", 12),
+         (4, "U", 1, "x", 13), (5, "I", 3, "x", 14)],
+        [(6, "D", 1, "y", None), (2, "U", 2, "x", 99), (7, "I", 2, "y", 15),
+         (8, "D", 3, "x", None)],
+        [(9, "I", 1, "y", 16), (10, "U", 2, "y", 17)],
+    ]
+    log, prefix = [], {t.snapshot.snapshot_id: 0}
+    for i, rows in enumerate(batches):
+        t.merge_batch(_pair_events(spark, rows), batch_id=i)
+        log += rows
+        prefix[t.snapshot.snapshot_id] = len(log)
+        if i == 1:
+            t.compact()
+            prefix[t.snapshot.snapshot_id] = len(log)
+
+    def live(state):
+        return {k: v for k, (_s, op, v) in state.items() if op != "D"}
+
+    want = live(_pair_state(log))
+    assert {(r["a"], r["b"]): r["v"] for r in t.read().collect()} == want
+    t.compact()
+    assert t.delta_file_count() == 0
+    assert {(r["a"], r["b"]): r["v"] for r in t.read().collect()} == want
+
+    new = _pair_state(log)
+    for since, n in prefix.items():
+        old = _pair_state(log[:n])
+        exp = {}
+        for k, (s, op, v) in new.items():
+            o = old.get(k)
+            old_live = o is not None and o[1] != "D"
+            if (o is not None and o[0] == s) or (op == "D" and not old_live):
+                continue
+            exp[k] = ("D" if op == "D" else "U", v, o[2] if old_live else None)
+        got = {
+            (r["a"], r["b"]): (r["op"], r["v"], r["_old_v"])
+            for r in t.changes(since).collect()
+        }
+        assert got == exp, since
+
+
+def test_composite_key_validation_and_lookup(spark, tmp_path):
+    """A null in any key column is quarantined as ``null_key``; a
+    composite-key table has no point lookup. A type change on the
+    second key column is refused like one on the first: here that
+    column is an int, so ``merge_schemas`` alone would widen it."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), PAIR_SCHEMA, key_col=("a", "b"), n_buckets=4
+    )
+    res = t.merge_batch(
+        _pair_events(spark, [(1, "I", 1, "x", 1), (2, "I", 2, None, 2)]),
+        batch_id=0,
+    )
+    assert (res["events_in"], res["events_invalid"]) == (2, 1)
+    q = spark.read.parquet(os.path.join(t.root, "quarantine"))
+    assert [(r["b"], r["_reason"]) for r in q.collect()] == [(None, "null_key")]
+    assert [tuple(r) for r in t.read().collect()] == [(1, "x", 1)]
+    with pytest.raises(ValueError, match="single-column key"):
+        t.lookup(1)
+
+    u = LakeTable.create(
+        spark, str(tmp_path / "u"), PAIR_SCHEMA, key_col=("b", "a"), n_buckets=4
+    )
+    u.merge_batch(_pair_events(spark, [(1, "I", 1, "x", 1)]), batch_id=0)
+    wide = spark.createDataFrame(
+        [(2, "U", 1, "x", 2)], "seq long, op string, a bigint, b string, v long"
+    )
+    with pytest.raises(SchemaMismatch, match="key column 'a'"):
+        u.merge_batch(wide, batch_id=1)
+    assert u.refresh().snapshot_id == 1

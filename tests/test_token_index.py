@@ -88,13 +88,9 @@ def test_token_index_tracks_updates_deletes(spark, tmp_path):
     assert out["windows"] == 1
     _check_full(ix, t)
 
-    # compaction folds windows; results unchanged, one dir remains
-    import os
-
-    res = ix.compact()
-    assert res["folded_windows"] >= 2
-    wins = [d for d in os.listdir(ix.root) if d.startswith("win-")]
-    assert len(wins) == 1
+    # compaction folds the index's deltas; results unchanged
+    ix.compact()
+    assert ix.table.delta_file_count() == 0
     _check_full(ix, t)
 
     # contamination primitive: docs containing the whole token set
@@ -242,7 +238,7 @@ def test_stop_tokens_bound_skew_and_still_verify(spark, tmp_path):
     )
     ix.sync(feed)
     # no postings rows exist for the stop token anywhere in the index
-    raw = ix._scan()
+    raw = ix.table.scan_files()
     assert raw.where("token = 7").count() == 0
     with pytest.raises(ValueError):
         ix.postings(7)
@@ -279,3 +275,60 @@ def test_null_tokens_update_retracts_postings(spark, tmp_path):
     ix.sync(feed)
     assert ix.postings(1).count() == 0
     assert ix.postings(2).count() == 0
+
+
+def test_probe_built_before_compact_still_reads(spark, tmp_path):
+    """A postings frame built before the index is compacted reads the
+    files of the snapshot it was built on: compaction deletes none, so
+    collecting the frame afterwards returns the same documents."""
+    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=2)
+    ix = TokenIndex.create(spark, str(tmp_path / "ix"), n_buckets=4)
+    feed = ChangesFeed(t, str(tmp_path / "cursor.json"))
+    for i, rows in enumerate(
+        [
+            [(1, "I", "a", [10, 11], 2, "web", None),
+             (2, "I", "b", [10], 1, "web", None)],
+            [(3, "I", "c", [10, 12], 2, "web", None),
+             (4, "D", "b", None, None, None, None)],
+        ]
+    ):
+        apply_batch(t, _events(spark, rows), batch_id=i, write_metrics=False)
+        ix.sync(feed)
+    p = ix.postings(10)
+    ix.compact()
+    assert {r["doc_id"] for r in p.collect()} == {"a", "c"}
+    _check_full(ix, t)
+
+
+def test_int_keyed_source(spark, tmp_path):
+    """The index holds document ids as strings: sync and rebuild cast
+    an int key, and contaminated_docs casts its candidates back to
+    find and verify them in the int-keyed table."""
+    from pyspark.sql import types as T
+
+    from ml_data_pipeline_spark.lake.table import LakeTable
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.IntegerType(), False),
+            T.StructField("tokens", T.ArrayType(T.IntegerType())),
+        ]
+    )
+    t = LakeTable.create(spark, str(tmp_path / "tbl"), schema, key_col="k", n_buckets=4)
+    t.merge_batch(
+        spark.createDataFrame(
+            [(k + 1, "I", k, [k, 1, 2, 3]) for k in range(40)],
+            "seq long, op string, k int, tokens array<int>",
+        ),
+        batch_id=0,
+    )
+    every = {str(k) for k in range(40)}
+    ix = TokenIndex.create(spark, str(tmp_path / "ix"), n_buckets=4)
+    ix.sync(ChangesFeed(t, str(tmp_path / "cursor.json")))
+    assert {r["doc_id"] for r in ix.postings(2).collect()} == every
+    got = [r["k"] for r in ix.contaminated_docs(t, [1, 2, 3]).collect()]
+    assert sorted(got) == list(range(40))
+
+    ix2 = TokenIndex.create(spark, str(tmp_path / "ix2"), n_buckets=4)
+    ix2.rebuild(ChangesFeed(t, str(tmp_path / "cursor2.json")))
+    assert {r["doc_id"] for r in ix2.postings(2).collect()} == every
