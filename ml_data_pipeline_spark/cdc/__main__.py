@@ -165,7 +165,8 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="full re-sync of a FRESH index from the table's live "
              "state (the recovery for a feed cursor expired by "
-             "vacuum), then continue syncing incrementally",
+             "vacuum), then continue syncing incrementally; also "
+             "repairs a crashed rebuild's lost cursor commit",
     )
 
     ip = sub.add_parser("index-probe",

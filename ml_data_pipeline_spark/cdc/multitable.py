@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from ml_data_pipeline_spark.cdc.apply import apply_batch
 from ml_data_pipeline_spark.cdc.events import CHANGE_SCHEMA
+from ml_data_pipeline_spark.cdc.stream import run_available_now
 from ml_data_pipeline_spark.lake.table import LakeTable
 
 MULTI_CHANGE_SCHEMA = T.StructType(
@@ -74,26 +75,8 @@ def run_multi_table_replay(
         finally:
             batch_df.unpersist()
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("recursiveFileLookup", "true")
-        .parquet(events_dir)
+    reader = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", max_files_per_trigger
     )
-    q = (
-        reader.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-            q.awaitTermination(30)
-    if not finished:
-        raise TimeoutError(
-            f"multi-table replay did not terminate within {timeout_sec}s"
-        )
+    run_available_now(reader, events_dir, checkpoint_dir, handle, timeout_sec)
     return stats

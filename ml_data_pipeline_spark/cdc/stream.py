@@ -130,24 +130,35 @@ def run_replay(
         reader = reader.option("maxBytesPerTrigger", int(max_bytes_per_trigger))
     else:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    reader = (
+    run_available_now(reader, events_dir, checkpoint_dir, handle, timeout_sec)
+    return stats
+
+
+def run_available_now(
+    reader, events_dir: str, checkpoint_dir: str, handle, timeout_sec: float
+) -> None:
+    """Replay the change-log directory ``events_dir`` through
+    ``reader`` (a ``DataStreamReader`` holding the schema and admission
+    limit) into ``handle(batch_df, batch_id)`` as one ``availableNow``
+    query, until every file present at start is processed or
+    ``handle`` raises ``_StopReplay``. Raises ``TimeoutError`` if the
+    query does not terminate within ``timeout_sec``."""
+    q = (
         # Binlog segments live in chunk=K/ subdirectories; recursive
         # lookup reads them without partition-column inference.
-        reader.option("recursiveFileLookup", "true").parquet(events_dir)
-    )
-    q = (
-        reader.writeStream.foreachBatch(handle)
+        reader.option("recursiveFileLookup", "true")
+        .parquet(events_dir)
+        .writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     timed_out = False
     try:
-        finished = q.awaitTermination(timeout_sec)
         # awaitTermination(timeout) returns False on timeout WITHOUT
         # raising — a hung replay must not return partial stats that
         # look like a completed one.
-        timed_out = not finished
+        timed_out = not q.awaitTermination(timeout_sec)
     except Exception as e:  # noqa: BLE001 — surface real failures
         if not _is_stop(e):
             raise
@@ -157,10 +168,8 @@ def run_replay(
             q.awaitTermination(30)
     if timed_out:
         raise TimeoutError(
-            f"CDC replay did not terminate within {timeout_sec}s "
-            f"(applied {stats['batches']} batches before the timeout)"
+            f"replay of {events_dir} did not terminate within {timeout_sec}s"
         )
-    return stats
 
 
 class _StopReplay(Exception):

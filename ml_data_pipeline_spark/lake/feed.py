@@ -17,6 +17,10 @@ Delivery contract:
   snapshot id as the merge ``batch_id``, so the re-delivered window is
   skipped by the destination's own watermark — the same idempotence
   machinery the primary CDC path uses.
+* **One sink protocol** — ``pump_into``/``pump_all``/``bootstrap``
+  poll, merge and commit for every sink; sinks differ only in their
+  projection of window rows to change events: ``replica_events`` (the
+  default) or e.g. ``TokenIndex``'s postings.
 * **Resumable** — the cursor is a JSON file written with the same
   fsync + atomic-rename protocol as table snapshots; a new
   ``ChangesFeed`` at the same cursor path resumes where the dead one
@@ -36,10 +40,21 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from ml_data_pipeline_spark.lake.table import LakeTable
+from ml_data_pipeline_spark.lake.table import LakeTable, Snapshot
+
+# A sink's projection: (window rows, source snapshot) -> the destination's
+# change events. Rows are ``LakeTable.changes``' plus ``seq``, their version.
+Projection = Callable[[DataFrame, Snapshot], DataFrame]
+
+
+def replica_events(rows: DataFrame, snap: Snapshot) -> DataFrame:
+    """The replica projection: each window row as a change event of the
+    source's own key and payload columns."""
+    return rows.select("op", "seq", *snap.key_cols, *snap.payload_cols())
 
 
 class ChangesFeed:
@@ -77,7 +92,8 @@ class ChangesFeed:
         (None, cursor) when there is nothing new. Does NOT advance the
         cursor — call ``commit(target)`` after the window is applied.
         The rows are ``LakeTable.changes``' (new state plus the previous
-        payload as ``_old_<col>``); a sink selects the columns it needs.
+        payload as ``_old_<col>``); a sink's projection selects the
+        columns it needs.
         """
         cur = self.cursor
         head_snap = self.table.refresh()
@@ -97,44 +113,25 @@ class ChangesFeed:
     def pump_into(
         self,
         dest: LakeTable,
+        project: Projection = replica_events,
         *,
         stream_id: str = "changes-feed",
         salt: int | None = None,
     ) -> dict:
         """Apply one polled window into another LakeTable, exactly-once.
 
-        The window's target snapshot id doubles as the merge batch id:
-        a crash after merge but before cursor commit re-polls the same
+        ``project`` turns the window's rows into the destination's
+        change events (default ``replica_events``: a replica). The
+        window's target snapshot id doubles as the merge batch id: a
+        crash after merge but before cursor commit re-polls the same
         window, and the destination's watermark skips it — no
-        double-apply, no gap. Feed rows are already net per-key change
-        events (op/seq/payload), so they go through the ordinary CDC
+        double-apply, no gap. The events go through the ordinary CDC
         merge path, salting and all.
         """
         df, target = self.poll()
         if df is None:
             return {"advanced": False, "cursor": target}
-        snap = self.table.snapshot
-        keys = snap.key_cols
-        payload = snap.payload_cols()
-        # seq = the row's change VERSION (max event seq that shaped its
-        # state, incl. patch overlays), not the raw base _seq: a state
-        # whose latest change was a per-column patch must outrank the
-        # previously delivered full row in the destination's reduce.
-        ver = self.table._version_expr(snap)
-        events = df.select(
-            "op",
-            ver.alias("seq"),
-            *keys,
-            *payload,
-        )
-        res = dest.merge_batch(
-            events,
-            batch_id=target,
-            stream_id=stream_id,
-            exclude_cols=(),
-            salt=salt,
-        )
-        self.commit(target)
+        res = self._sink(dest, project, df, target, stream_id, salt)
         return {
             "advanced": True,
             "cursor": target,
@@ -142,20 +139,43 @@ class ChangesFeed:
             "upsert_rows": res.get("upsert_rows"),
         }
 
-    def pump_all(self, dest: LakeTable, **kw) -> int:
+    def pump_all(
+        self, dest: LakeTable, project: Projection = replica_events, **kw
+    ) -> int:
         """Pump until the feed is drained; returns number of windows."""
         n = 0
-        while True:
-            out = self.pump_into(dest, **kw)
-            if not out["advanced"]:
-                return n
+        while (window := self.poll())[0] is not None:
+            self._sink(dest, project, *window, **kw)
             n += 1
+        return n
+
+    def _sink(
+        self, dest, project, rows, target, stream_id="changes-feed", salt=None
+    ) -> dict:
+        """Merge ``project``'s events of the window ``rows`` into
+        ``dest`` as batch ``target``, then commit the cursor there."""
+        snap = self.table.snapshot
+        # seq = the row's change VERSION (max event seq that shaped its
+        # state, incl. patch overlays), not the raw base _seq: a state
+        # whose latest change was a per-column patch must outrank the
+        # previously delivered full row in the destination's reduce.
+        rows = rows.withColumn("seq", self.table._version_expr(snap))
+        res = dest.merge_batch(
+            project(rows, snap),
+            batch_id=target,
+            stream_id=stream_id,
+            exclude_cols=(),
+            salt=salt,
+        )
+        self.commit(target)
+        return res
 
     # ---------------------------------------------------------- bootstrap
 
     def bootstrap(
         self,
         dest: LakeTable,
+        project: Projection = replica_events,
         *,
         stream_id: str = "changes-feed",
         salt: int | None = None,
@@ -164,11 +184,11 @@ class ChangesFeed:
         incrementally — the recovery `changes()` directs you to when
         the cursor predates vacuum retention.
 
-        Delivers the source's CURRENT state as upsert events carrying
-        each row's change version as ``seq`` into an EMPTY destination,
-        with ``batch_id`` = the source snapshot id, then commits the
-        cursor there — after which ``poll``/``pump_into`` resume
-        incrementally with no gap.
+        Delivers the source's CURRENT state, in window shape (every
+        row ``op='U'`` with null ``_old_<col>``), through the same
+        ``project`` into an EMPTY destination, with ``batch_id`` = the
+        source snapshot id, then commits the cursor there — after which
+        ``poll``/``pump_into`` resume incrementally with no gap.
 
         The destination must be EMPTY (recreate it to re-bootstrap):
         a full-state load cannot synthesize correct delete tombstones
@@ -192,25 +212,20 @@ class ChangesFeed:
             return {"bootstrapped": False, "recovered": True, "cursor": wm}
         if dsnap.files:
             raise ValueError(
-                "bootstrap requires an EMPTY destination (recreate the "
-                "dest table): a full-state load cannot emit delete "
-                "tombstones for stale keys a lagging replica may hold"
+                "bootstrap requires an EMPTY destination (recreate it): "
+                "a full-state load cannot emit delete tombstones for "
+                "stale keys a lagging sink may hold"
             )
-        keys = snap.key_cols
-        payload = snap.payload_cols()
-        ver = self.table._version_expr(snap)
-        state = self.table.read(include_hidden=True)
-        events = state.select(
-            F.lit("U").alias("op"), ver.alias("seq"), *keys, *payload
+        state = self.table.read(include_hidden=True, as_of_snapshot=snap.snapshot_id)
+        state = state.select(
+            F.lit("U").alias("op"),
+            "*",
+            *[
+                F.lit(None).cast(snap.schema[c].dataType).alias(f"_old_{c}")
+                for c in snap.payload_cols()
+            ],
         )
-        res = dest.merge_batch(
-            events,
-            batch_id=snap.snapshot_id,
-            stream_id=stream_id,
-            exclude_cols=(),
-            salt=salt,
-        )
-        self.commit(snap.snapshot_id)
+        res = self._sink(dest, project, state, snap.snapshot_id, stream_id, salt)
         return {
             "bootstrapped": True,
             "recovered": False,

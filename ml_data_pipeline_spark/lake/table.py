@@ -314,8 +314,8 @@ class LakeTable:
         properties: dict | None = None,
     ) -> "LakeTable":
         """``key_col`` names the key column, or a sequence of them for a
-        composite key: rows are then identified by the tuple, and
-        bucketed and bloomed on its first column."""
+        composite key: rows are then identified by the tuple and
+        bucketed on its first column, and files carry no key bloom."""
         if cls.exists(root):
             raise ValueError(f"table already exists at {root}")
         keys = [key_col] if isinstance(key_col, str) else list(key_col)
@@ -514,9 +514,9 @@ class LakeTable:
                 f"{sorted(_supported)})",
                 stacklevel=2,
             )
-        # Captured DRIVER-side so the switch works regardless of how
-        # executor worker processes inherit their environment.
-        skip_bloom = bool(os.environ.get("LAKE_SKIP_BLOOM"))
+        # Key blooms serve point lookups only, and a composite-key table
+        # has none (``lookup`` raises): its files carry no bloom.
+        with_bloom = not snap.key_rest
 
         # SINGLE-PASS write + manifest: ``_write`` streams Arrow batches
         # sorted by bucket straight into parquet — one bucket (= one
@@ -576,12 +576,8 @@ class LakeTable:
                 # O(files), bloom bytes are read only by point
                 # lookups, only for the probed bucket's files, and
                 # are GC'd with their data file by vacuum.
-                # LAKE_SKIP_BLOOM: bench A/B switch isolating the
-                # bloom-build cost (lookups degrade to bucket-pruned
-                # only — blooms are optional in FileEntry).
-                if skip_bloom:
-                    out["sidecar"].append(False)
-                else:
+                out["sidecar"].append(with_bloom)
+                if with_bloom:
                     b = bloom_build(
                         pa.chunked_array(st["keys"]).combine_chunks()
                     )
@@ -589,7 +585,6 @@ class LakeTable:
                     with open(btmp, "w") as bf:
                         bf.write(b)
                     os.replace(btmp, st["final"] + ".bloom")
-                    out["sidecar"].append(True)
 
             for batch in batches:
                 names = batch.schema.names
@@ -903,19 +898,20 @@ class LakeTable:
             snap = self.snapshot_by_id(as_of_snapshot)
         else:
             snap = self.refresh()
-        raw = self.scan_files(buckets=buckets, snap=snap)
+        bset = None if buckets is None else set(buckets)
+        files = [f for f in snap.files if bset is None or f.bucket in bset]
         # Buckets whose files are all base files and carry no deltas are
-        # already reduced; only delta-bearing buckets need the groupBy.
-        delta_buckets = {f.bucket for f in snap.files if f.kind == "delta"}
-        if buckets is not None:
-            delta_buckets &= set(buckets)
+        # already reduced; only delta-bearing buckets' files go through
+        # the groupBy. Split by file list, each file is scanned once.
+        delta_buckets = {f.bucket for f in files if f.kind == "delta"}
+        reduced = self.scan_files(
+            files=[f for f in files if f.bucket not in delta_buckets], snap=snap
+        )
         if delta_buckets:
-            bexpr = self.bucket_expr(snap=snap)
-            need = raw.where(bexpr.isin([int(b) for b in delta_buckets]))
-            done = raw.where(~bexpr.isin([int(b) for b in delta_buckets]))
-            reduced = self._reduce(need, snap).unionByName(done)
-        else:
-            reduced = raw
+            need = [f for f in files if f.bucket in delta_buckets]
+            reduced = self._reduce(
+                self.scan_files(files=need, snap=snap), snap
+            ).unionByName(reduced)
         live = reduced.where(~F.col(DELETED_COL))
         if include_hidden:
             return live
@@ -935,9 +931,8 @@ class LakeTable:
                 with open(os.path.join(self.root, f.path + ".bloom")) as bf:
                     self._bloom_cache[f.path] = bf.read()
             except FileNotFoundError:
-                # genuinely absent (e.g. written with LAKE_SKIP_BLOOM)
-                # — cache the miss, it will never appear for an
-                # immutable file
+                # genuinely absent (e.g. deleted) — cache the miss, it
+                # will never appear for an immutable file
                 self._bloom_cache[f.path] = None
             except OSError:
                 # transient read failure (EMFILE, EIO, NFS blip): skip

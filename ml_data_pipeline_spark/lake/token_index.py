@@ -9,21 +9,24 @@ view kept up to date from the table's ``ChangesFeed`` — the consumer
 side of the CDC engine eating its own output.
 
 Layout: the index is itself a ``LakeTable`` whose key is the pair
-``(token, doc_id)``, bucketed and bloomed on ``token``, with no
-payload columns. A posting is one of its rows: ``_seq`` is the
-document's change version and ``_deleted`` means the document no
-longer holds the token. Per feed window the sync merges, for every
-changed document:
+``(token, doc_id)``, bucketed on ``token``, with no payload columns
+and no key blooms (nothing looks a posting up by key). A posting is
+one of its rows: ``_seq`` is the document's change version and
+``_deleted`` means the document no longer holds the token.
+
+The index is a feed sink: ``sync`` is ``ChangesFeed.pump_all`` and
+``rebuild`` is ``ChangesFeed.bootstrap``, both with the postings
+projection, which emits for every changed document:
 
 * ``U`` events for the NEW state's distinct tokens,
 * ``D`` events for tokens REMOVED by the update (old minus new — from
   the ``_old_<tokens>`` column ``changes()`` carries) or for ALL old
   tokens on a delete,
 
-each at the document's change version, as one ``merge_batch`` whose
-batch id is the window's target snapshot — the ``pump_into`` pattern.
-The table's max-``_seq`` reduce is the same LWW semilattice as the
-main table's, and its watermark makes the sync exactly-once.
+each at the document's change version. The feed merges them as one
+``merge_batch`` per window whose batch id is the window's target
+snapshot. The table's max-``_seq`` reduce is the same LWW semilattice
+as the main table's, and its watermark makes the sync exactly-once.
 Snapshots, compaction and vacuum are the table's own, so a probe
 keeps reading the files of the snapshot it was built on while the
 index is compacted. The source's tokens column and the stop tokens
@@ -46,7 +49,12 @@ from pyspark.sql import types as T
 
 from ml_data_pipeline_spark.lake.bloom import bucket_of
 from ml_data_pipeline_spark.lake.feed import ChangesFeed
-from ml_data_pipeline_spark.lake.table import DELETED_COL, SEQ_COL, LakeTable
+from ml_data_pipeline_spark.lake.table import (
+    DELETED_COL,
+    SEQ_COL,
+    LakeTable,
+    Snapshot,
+)
 
 POSTING_SCHEMA = T.StructType(
     [
@@ -56,6 +64,9 @@ POSTING_SCHEMA = T.StructType(
 )
 TOKENS_PROP = "index.tokens_col"
 STOP_PROP = "index.stop_tokens"
+# The stream id of the index's merge watermark: merge_batch's default,
+# which every index has recorded its windows under.
+WATERMARK = "default"
 
 
 class TokenIndex:
@@ -105,107 +116,81 @@ class TokenIndex:
     def load(cls, spark: SparkSession, root: str) -> "TokenIndex":
         return cls(LakeTable.load(spark, root))
 
-    def _without_stop(self, toks: Column) -> Column:
-        """The token array ``toks`` minus the index's stop tokens."""
-        stop = self.table.snapshot.properties[STOP_PROP]
-        if not stop:
-            return toks
-        return F.array_except(toks, F.array(*[F.lit(int(t)) for t in stop]))
-
     # ---------------------------------------------------------------- sync
+
+    def _postings(self, rows: DataFrame, snap: Snapshot) -> DataFrame:
+        """The index's feed-sink projection: per changed document, a
+        ``U`` event for each distinct non-stop token of its new state
+        and a ``D`` for each one the change removed (old minus new; all
+        old tokens on a delete), at the document's change version.
+
+        One ``posexplode`` over the new tokens followed by the removed
+        ones, whose position tells ``U`` from ``D``: a union of an adds
+        and a deletes projection would plan the window's ``changes()``
+        aggregate once per side.
+        """
+        props = self.table.snapshot.properties
+        toks = props[TOKENS_PROP]
+        stop = F.array(*map(F.lit, props[STOP_PROP])).cast("array<int>")
+
+        def bag(c: Column) -> Column:
+            # The distinct non-stop tokens. NULL is empty: a live row
+            # whose tokens column is NULL (legal update) must retract all
+            # its old postings, and array_except(old, NULL) is NULL.
+            return F.array_except(F.coalesce(c, F.array().cast("array<int>")), stop)
+
+        return (
+            rows.select(
+                "seq",
+                F.col(snap.key_col).cast("string").alias("doc_id"),
+                bag(F.when(~F.col(DELETED_COL), F.col(toks))).alias("_new"),
+                bag(F.col(f"_old_{toks}")).alias("_old"),
+            )
+            .select(
+                "seq",
+                "doc_id",
+                F.size("_new").alias("_n"),
+                F.posexplode(F.concat("_new", F.array_except("_old", "_new"))),
+            )
+            .select(
+                F.when(F.col("pos") < F.col("_n"), "U").otherwise("D").alias("op"),
+                "seq",
+                F.col("col").alias("token"),
+                "doc_id",
+            )
+        )
 
     def sync(self, feed: ChangesFeed) -> dict:
         """Drain the feed into the index, one window at a time,
-        exactly-once end-to-end: each window is one merge whose batch
-        id is its target snapshot, and the cursor commits after it. A
-        crash in between re-polls the window; the index's watermark
-        skips it, or, if the window has grown since, the re-merged
-        postings carry the same versions and reduce to the same state.
+        exactly-once end-to-end (``ChangesFeed.pump_all``): each window
+        is one merge whose batch id is its target snapshot, and the
+        cursor commits after it. A crash in between re-polls the
+        window; the index's watermark skips it, or, if the window has
+        grown since, the re-merged postings carry the same versions and
+        reduce to the same state.
         """
-        tokens_col = self.table.snapshot.properties[TOKENS_PROP]
-        windows = 0
-        while True:
-            df, target = feed.poll()
-            if df is None:
-                return {"windows": windows, "cursor": feed.cursor}
-            src = feed.table.snapshot
-            # coalesce BOTH sides to empty: a live row whose tokens
-            # column is NULL (legal update) must retract all its old
-            # postings, not silently keep them (array_except(x, NULL)
-            # is NULL → no delete rows emitted)
-            new_tok = self._without_stop(
-                F.coalesce(
-                    F.when(
-                        ~F.col(DELETED_COL), F.array_distinct(F.col(tokens_col))
-                    ),
-                    F.array().cast("array<int>"),
-                )
-            )
-            old_tok = self._without_stop(
-                F.coalesce(
-                    F.array_distinct(F.col(f"_old_{tokens_col}")),
-                    F.array().cast("array<int>"),
-                )
-            )
-            base = df.select(
-                F.col(src.key_col).cast("string").alias("doc_id"),
-                feed.table._version_expr(src).alias("seq"),
-                new_tok.alias("_new"),
-                old_tok.alias("_old"),
-            )
-            adds = base.select(
-                F.lit("U").alias("op"),
-                "seq",
-                F.explode("_new").alias("token"),
-                "doc_id",
-            )
-            dels = base.select(
-                F.lit("D").alias("op"),
-                "seq",
-                F.explode(F.array_except("_old", "_new")).alias("token"),
-                "doc_id",
-            )
-            self.table.merge_batch(
-                adds.unionByName(dels), batch_id=target, exclude_cols=()
-            )
-            feed.commit(target)
-            windows += 1
+        windows = feed.pump_all(self.table, project=self._postings, stream_id=WATERMARK)
+        return {"windows": windows, "cursor": feed.cursor}
 
     def rebuild(self, feed: ChangesFeed) -> dict:
         """Full re-sync for an index whose feed cursor predates vacuum
-        retention (``changes()`` raises ValueError): one scan of the
-        table's CURRENT live state is merged as postings, and the
-        cursor commits at the scanned snapshot — after which ``sync``
-        resumes incrementally with no gap.
+        retention (``changes()`` raises ValueError): the table's
+        CURRENT live state is merged as postings and the cursor commits
+        at its snapshot (``ChangesFeed.bootstrap``), after which
+        ``sync`` resumes incrementally with no gap.
 
         Requires an index with NO files (recreate it): a full-state
-        load carries no retraction rows for stale postings an old
-        index may hold — the same exact-over-almost-right stance as
-        ``ChangesFeed.bootstrap``. A rebuild that crashed between its
-        merge and the cursor commit leaves files behind; the error
-        message says to recreate, which is always safe.
+        load carries no retraction rows for stale postings an old index
+        may hold. A rebuild whose merge committed but whose cursor
+        commit was lost is repaired instead: the cursor advances to the
+        index's watermark and nothing is rewritten (``recovered``).
         """
-        if self.table.refresh().files:
-            raise ValueError(
-                "rebuild requires an index with no files — delete and "
-                "recreate the index directory (safe: the index is a "
-                "derived view), then rebuild"
-            )
-        tokens_col = self.table.snapshot.properties[TOKENS_PROP]
-        snap = feed.table.refresh()
-        state = feed.table.read(include_hidden=True)
-        toks = self._without_stop(F.array_distinct(F.col(tokens_col)))
-        events = state.select(
-            F.lit("U").alias("op"),
-            feed.table._version_expr(snap).alias("seq"),
-            F.explode(toks).alias("token"),
-            F.col(snap.key_col).cast("string").alias("doc_id"),
-        )
-        self.table.merge_batch(
-            events, batch_id=snap.snapshot_id, exclude_cols=()
-        )
-        feed.commit(snap.snapshot_id)
-        return {"rebuilt": True, "cursor": snap.snapshot_id}
+        out = feed.bootstrap(self.table, project=self._postings, stream_id=WATERMARK)
+        return {
+            "rebuilt": out["bootstrapped"],
+            "recovered": out["recovered"],
+            "cursor": out["cursor"],
+        }
 
     # ---------------------------------------------------------------- read
 

@@ -208,6 +208,53 @@ def test_bucket_pruned_read(spark, tmp_path):
     assert sorted(map(tuple, got)) == sorted(map(tuple, full))
 
 
+def _scanned_files(df) -> list[str]:
+    """Every data file of every file scan in ``df``'s physical plan,
+    once per scan that reads it."""
+    jvm = df.sparkSession._jvm
+    plan = df._jdf.queryExecution().sparkPlan()
+    out = []
+    for node in jvm.scala.jdk.javaapi.CollectionConverters.asJava(plan.collectLeaves()):
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            out += list(node.relation().location().inputFiles())
+    return out
+
+
+def test_read_scans_each_file_once(spark, tmp_path):
+    """``read`` reduces only the files of delta-bearing buckets and
+    passes the other files through, scanning each file once, with the
+    rows of a full reduce at every snapshot: the compaction test's
+    table, plus a partial compaction that leaves base-only buckets
+    beside delta-bearing ones."""
+    t = _mk_table(spark, tmp_path)
+    t.merge_batch(_events(spark, E), batch_id=0)
+    t.compact()
+    t.merge_batch(_events(spark, [(10, "I", "d4", [4], 1, "web", None)]), batch_id=1)
+    t.merge_batch(
+        _events(spark, [(11, "I", f"e{i}", [i], 1, "web", None) for i in range(20)]),
+        batch_id=2,
+    )
+    t.compact(buckets=[0, 1])
+    t.merge_batch(_events(spark, [(12, "D", "d1", None, None, None, None)]), batch_id=3)
+    for snap in t.history():
+        sid = snap.snapshot_id
+        for buckets in (None, [0, 2], [3]):
+            got = t.read(include_hidden=True, buckets=buckets, as_of_snapshot=sid)
+            scanned = _scanned_files(got)
+            files = [
+                "file://" + os.path.join(t.root, f.path)
+                for f in snap.files
+                if buckets is None or f.bucket in buckets
+            ]
+            assert sorted(scanned) == sorted(files), (sid, buckets)
+            full = LakeTable._reduce(
+                t.scan_files(buckets=buckets, snap=snap), snap
+            ).where(~F.col("_deleted"))
+            assert sorted(map(tuple, got.collect())) == sorted(
+                map(tuple, full.select(got.columns).collect())
+            ), (sid, buckets)
+
+
 # ---------------------------------------------------------------- evolution
 
 
@@ -379,24 +426,22 @@ def test_driver_side_bucket_parity(spark):
             assert bucket_of(r["k"], 16, key_type) == r["b"], (ddl, r["k"])
 
 
-def test_lookup_correct_without_blooms(spark, tmp_path, monkeypatch):
-    """LAKE_SKIP_BLOOM (the bench A/B switch) must only widen the
+def test_lookup_correct_without_blooms(spark, tmp_path):
+    """A file whose bloom sidecar is missing must only widen the
     lookup's file set, never change its answer."""
-    monkeypatch.setenv("LAKE_SKIP_BLOOM", "1")
     t = LakeTable.create(
         spark, str(tmp_path / "tbl"), DOC_SCHEMA, key_col="doc_id", n_buckets=2
     )
     rows = [(i, "I", f"d{i}", [i], 1, "web", None) for i in range(10)]
-    # both write paths honour it
+    # files of both write paths
     assert t.merge_batch(_events(spark, rows), batch_id=0)["write_path"] == "executors"
     late = _parquet_events(spark, tmp_path, [(20, "U", "d9", [9, 9], 2, "web", None)])
     assert t.merge_batch(late, batch_id=1)["write_path"] == "driver"
     snap = t.refresh()
     assert len(snap.files) > 2
-    assert all(not f.bloom_sidecar and not f.key_bloom for f in snap.files)
-    assert not any(
-        name.endswith(".bloom") for _d, _s, names in os.walk(t.data_dir) for name in names
-    )
+    for f in snap.files:
+        os.remove(os.path.join(t.root, f.path + ".bloom"))
+    t = LakeTable.load(spark, t.root)
     got = t.lookup("d3").collect()
     assert len(got) == 1 and got[0]["tokens"] == [3]
     assert t.lookup("absent").count() == 0

@@ -332,3 +332,119 @@ def test_int_keyed_source(spark, tmp_path):
     ix2 = TokenIndex.create(spark, str(tmp_path / "ix2"), n_buckets=4)
     ix2.rebuild(ChangesFeed(t, str(tmp_path / "cursor2.json")))
     assert {r["doc_id"] for r in ix2.postings(2).collect()} == every
+
+
+def test_rebuild_repairs_lost_cursor_commit(spark, tmp_path):
+    """A rebuild whose merge committed but whose cursor commit was lost
+    is finished, not refused: the cursor advances to the index's
+    watermark, no file is rewritten, and syncing resumes from there."""
+    import os
+
+    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=4)
+    apply_batch(
+        t,
+        _events(
+            spark,
+            [
+                (1, "I", "a", [10, 11], 2, "web", None),
+                (2, "I", "b", [11, 12], 2, "web", None),
+            ],
+        ),
+        batch_id=0,
+        write_metrics=False,
+    )
+    ix = TokenIndex.create(spark, str(tmp_path / "ix"), n_buckets=4)
+    feed = ChangesFeed(t, str(tmp_path / "cursor.json"))
+    assert ix.rebuild(feed)["rebuilt"]
+    os.remove(feed.cursor_path)  # the lost cursor commit
+    before = ix.table.refresh()
+    out = ix.rebuild(feed)
+    assert out == {
+        "rebuilt": False,
+        "recovered": True,
+        "cursor": t.snapshot.snapshot_id,
+    }
+    assert feed.cursor == t.snapshot.snapshot_id
+    after = ix.table.refresh()
+    assert after.snapshot_id == before.snapshot_id
+    assert [f.path for f in after.files] == [f.path for f in before.files]
+    _check_full(ix, t)
+
+    apply_batch(
+        t,
+        _events(spark, [(3, "U", "a", [10, 13], 2, "web", None)]),
+        batch_id=1,
+        write_metrics=False,
+    )
+    assert ix.sync(feed)["windows"] == 1
+    _check_full(ix, t)
+
+
+def test_index_files_carry_no_bloom(spark, tmp_path):
+    """The index's key is (token, doc_id), which has no point lookup,
+    so its files get no key bloom; the source table's files keep
+    theirs."""
+    import os
+
+    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=2)
+    ix = TokenIndex.create(spark, str(tmp_path / "ix"), n_buckets=4)
+    feed = ChangesFeed(t, str(tmp_path / "cursor.json"))
+    apply_batch(
+        t,
+        _events(
+            spark,
+            [(i, "I", f"d{i}", [i, i + 1], 2, "web", None) for i in range(20)],
+        ),
+        batch_id=0,
+        write_metrics=False,
+    )
+    ix.sync(feed)
+    ix.compact()
+    files = ix.table.refresh().files
+    assert files and not any(f.bloom_sidecar or f.key_bloom for f in files)
+    assert not [
+        n for _d, _s, names in os.walk(ix.table.data_dir) for n in names
+        if n.endswith(".bloom")
+    ]
+    assert all(f.bloom_sidecar for f in t.refresh().files)
+    _check_full(ix, t)
+
+
+def _plan_nodes(plan: str) -> list[str]:
+    """The operator names of a plan's tree string, one per node."""
+    import re
+
+    return [re.match(r"[\s:+\-]*(\w*)", line)[1] for line in plan.splitlines()]
+
+
+def test_index_merge_input_plans_changes_once(spark, tmp_path, monkeypatch):
+    """The postings of a window come from ONE copy of its ``changes()``
+    aggregate (partial and final): adds and deletes are one explode,
+    not a union of two projections that each plan the aggregate. The
+    only union left is the aggregate's own input (base files beside
+    window files); a window from the empty table has none."""
+    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=4)
+    ix = TokenIndex.create(spark, str(tmp_path / "ix"), n_buckets=4)
+    feed = ChangesFeed(t, str(tmp_path / "cursor.json"))
+    plans = []
+    merge = ix.table.merge_batch
+
+    def spy(events, **kw):
+        plans.append(events._jdf.queryExecution().executedPlan().toString())
+        return merge(events, **kw)
+
+    monkeypatch.setattr(ix.table, "merge_batch", spy)
+    batches = [
+        [(i, "I", f"d{i}", [i, 7], 2, "web", None) for i in range(1, 20)],
+        [(30, "U", "d1", [8], 1, "web", None), (31, "D", "d2", None, None, None, None)],
+    ]
+    for i, rows in enumerate(batches):
+        apply_batch(t, _events(spark, rows), batch_id=i, write_metrics=False)
+        assert ix.sync(feed)["windows"] == 1
+    _check_full(ix, t)
+    first, second = (_plan_nodes(p) for p in plans)
+    for nodes, plan in ((first, plans[0]), (second, plans[1])):
+        aggs = [i for i, n in enumerate(nodes) if n.endswith("Aggregate")]
+        assert len(aggs) == 2, plan
+        assert "Union" not in nodes[: aggs[0]], plan
+    assert "Union" not in first, plans[0]
