@@ -134,7 +134,6 @@ def main(argv: list[str] | None = None) -> int:
     fd.add_argument("--table", required=True)
     fd.add_argument("--dest", required=True)
     fd.add_argument("--cursor", required=True)
-    fd.add_argument("--salt", type=int, default=None)
     fd.add_argument(
         "--bootstrap",
         action="store_true",
@@ -321,8 +320,8 @@ def main(argv: list[str] | None = None) -> int:
         feed = ChangesFeed(t, args.cursor)
         boot = None
         if args.bootstrap:
-            boot = feed.bootstrap(dest, salt=args.salt)
-        windows = feed.pump_all(dest, salt=args.salt)
+            boot = feed.bootstrap(dest)
+        windows = feed.pump_all(dest)
         out = {
             "windows": windows,
             "cursor": feed.cursor,

@@ -10,6 +10,7 @@ table's atomic snapshot commit, and the reference's ``PipelineStats``
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 
@@ -26,6 +27,8 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("snapshot_id", T.LongType(), True),
         T.StructField("skipped", T.BooleanType(), False),
         T.StructField("upsert_rows", T.LongType(), True),
+        T.StructField("events_in", T.LongType(), True),
+        T.StructField("events_invalid", T.LongType(), True),
         T.StructField("n_buckets_touched", T.IntegerType(), True),
         T.StructField("schema_evolved", T.BooleanType(), True),
         T.StructField("wall_ms", T.DoubleType(), False),
@@ -110,40 +113,19 @@ def apply_batch(
 # bounded at ADVISORY_FOLD_AT regardless of replay length.
 ADVISORY_FOLD_AT = 16
 
-_METRICS_PA = None
-_LINEAGE_PA = None
 
-
+@functools.cache
 def _pa_schemas():
-    global _METRICS_PA, _LINEAGE_PA
+    """The advisory tables' pyarrow schemas, derived from the Spark ones.
+    Every field is nullable, as in the parts already written: a fold
+    reads old and new parts under one schema."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    if _METRICS_PA is None:
-        _METRICS_PA = pa.schema(
-            [
-                ("stream_id", pa.string()),
-                ("batch_id", pa.int64()),
-                ("snapshot_id", pa.int64()),
-                ("skipped", pa.bool_()),
-                ("upsert_rows", pa.int64()),
-                ("n_buckets_touched", pa.int32()),
-                ("schema_evolved", pa.bool_()),
-                ("wall_ms", pa.float64()),
-                ("committed_at", pa.timestamp("us", tz="UTC")),
-            ]
-        )
-        _LINEAGE_PA = pa.schema(
-            [
-                ("stream_id", pa.string()),
-                ("batch_id", pa.int64()),
-                ("snapshot_id", pa.int64()),
-                ("input_file", pa.string()),
-                ("bucket", pa.int32()),
-                ("output_file", pa.string()),
-                ("rows", pa.int64()),
-            ]
-        )
-    return _METRICS_PA, _LINEAGE_PA
+    return tuple(
+        pa.schema([f.with_nullable(True) for f in to_arrow_schema(s)])
+        for s in (METRICS_SCHEMA, LINEAGE_SCHEMA)
+    )
 
 
 def _advisory_append(dir_path: str, batch) -> None:
@@ -220,6 +202,8 @@ def _record(table: LakeTable, res: dict) -> None:
         "snapshot_id": [res.get("snapshot_id")],
         "skipped": [bool(res.get("skipped"))],
         "upsert_rows": [res.get("upsert_rows")],
+        "events_in": [res.get("events_in")],
+        "events_invalid": [res.get("events_invalid")],
         "n_buckets_touched": [len(res.get("touched_buckets") or [])],
         "schema_evolved": [bool(res.get("schema_evolved"))],
         "wall_ms": [float(res.get("wall_ms", 0.0))],

@@ -48,6 +48,11 @@ from ml_data_pipeline_spark.lake.table import LakeTable, Snapshot
 
 # A sink's projection: (window rows, source snapshot) -> the destination's
 # change events. Rows are ``LakeTable.changes``' plus ``seq``, their version.
+# The window holds one row per source key, and the projection must keep its
+# events unique per DESTINATION key (the replica's one row per source key,
+# the index's distinct (token, doc_id) pairs): the sink merges them without
+# the in-batch reduce. A duplicate would cost rows written, not correctness:
+# reads and compaction reduce each bucket again.
 Projection = Callable[[DataFrame, Snapshot], DataFrame]
 
 
@@ -116,7 +121,6 @@ class ChangesFeed:
         project: Projection = replica_events,
         *,
         stream_id: str = "changes-feed",
-        salt: int | None = None,
     ) -> dict:
         """Apply one polled window into another LakeTable, exactly-once.
 
@@ -126,12 +130,13 @@ class ChangesFeed:
         crash after merge but before cursor commit re-polls the same
         window, and the destination's watermark skips it — no
         double-apply, no gap. The events go through the ordinary CDC
-        merge path, salting and all.
+        merge path, minus its in-batch reduce: a window holds one row per
+        key, so there is nothing to reduce (see ``Projection``).
         """
         df, target = self.poll()
         if df is None:
             return {"advanced": False, "cursor": target}
-        res = self._sink(dest, project, df, target, stream_id, salt)
+        res = self._sink(dest, project, df, target, stream_id)
         return {
             "advanced": True,
             "cursor": target,
@@ -149,11 +154,11 @@ class ChangesFeed:
             n += 1
         return n
 
-    def _sink(
-        self, dest, project, rows, target, stream_id="changes-feed", salt=None
-    ) -> dict:
+    def _sink(self, dest, project, rows, target, stream_id="changes-feed") -> dict:
         """Merge ``project``'s events of the window ``rows`` into
-        ``dest`` as batch ``target``, then commit the cursor there."""
+        ``dest`` as batch ``target``, then commit the cursor there. The
+        events are key-unique (``Projection``), so the merge skips its
+        in-batch reduce."""
         snap = self.table.snapshot
         # seq = the row's change VERSION (max event seq that shaped its
         # state, incl. patch overlays), not the raw base _seq: a state
@@ -165,7 +170,7 @@ class ChangesFeed:
             batch_id=target,
             stream_id=stream_id,
             exclude_cols=(),
-            salt=salt,
+            _key_unique=True,
         )
         self.commit(target)
         return res
@@ -178,7 +183,6 @@ class ChangesFeed:
         project: Projection = replica_events,
         *,
         stream_id: str = "changes-feed",
-        salt: int | None = None,
     ) -> dict:
         """Full (re-)sync for a consumer that cannot read its window
         incrementally — the recovery `changes()` directs you to when
@@ -225,7 +229,7 @@ class ChangesFeed:
                 for c in snap.payload_cols()
             ],
         )
-        res = self._sink(dest, project, state, snap.snapshot_id, stream_id, salt)
+        res = self._sink(dest, project, state, snap.snapshot_id, stream_id)
         return {
             "bootstrapped": True,
             "recovered": False,

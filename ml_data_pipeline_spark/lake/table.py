@@ -256,17 +256,18 @@ class Snapshot:
         )
 
 
+def _aligned(f: T.StructField, have: set[str]) -> Column:
+    """``f`` read from a frame holding the columns ``have``: cast to its
+    type, or null when the frame lacks it."""
+    return (F.col(f.name) if f.name in have else F.lit(None)).cast(f.dataType)
+
+
 def _align(schema: T.StructType, have: Iterable[str]) -> list[Column]:
     """Project a frame holding the columns ``have`` onto ``schema``:
     each field cast to its type, a field the frame lacks (added after
     the frame's data was written) as null."""
     have = set(have)
-    return [
-        (F.col(f.name) if f.name in have else F.lit(None))
-        .cast(f.dataType)
-        .alias(f.name)
-        for f in schema.fields
-    ]
+    return [_aligned(f, have).alias(f.name) for f in schema.fields]
 
 
 def _schema_fp(schema: T.StructType) -> str:
@@ -288,6 +289,9 @@ class LakeTable:
         # Data files are immutable, so entries never invalidate; the
         # cache holds only buckets this handle actually probed.
         self._bloom_cache: dict[str, str | None] = {}
+        # Column lists of merges and writes, keyed by the schemas they
+        # were built from (``_memo``).
+        self._exprs: dict[tuple, object] = {}
 
     # ------------------------------------------------------------- lifecycle
 
@@ -459,6 +463,48 @@ class LakeTable:
         key = F.col(snap.key_col) if key is None else key
         return F.pmod(F.xxhash64(key), F.lit(snap.n_buckets)).cast("int")
 
+    # Bound on the column lists one handle keeps: a long-lived handle sees
+    # a new input or table schema only on schema evolution.
+    MEMO_ENTRIES = 64
+
+    def _memo(self, key: tuple, build: Callable[[], object]):
+        """``build()``, computed once per ``key`` on this handle. A merge
+        builds its Column lists from two schemas, the input's and the
+        table's, one py4j call per expression node: building them took
+        ~330 of the ~500 py4j calls of a 2k-event merge (4-vCPU host).
+        The key names everything a list depends on, so a cached list is
+        reused only while both schemas are unchanged. ``build`` raising
+        caches nothing."""
+        try:
+            return self._exprs[key]
+        except KeyError:
+            if len(self._exprs) >= self.MEMO_ENTRIES:
+                self._exprs.clear()
+            value = self._exprs[key] = build()
+            return value
+
+    def _size_estimate(self, df: DataFrame) -> int:
+        """The optimizer's size estimate of ``df`` in bytes: file sizes for
+        parquet-backed input, Long.MaxValue when unknown (RDD-backed
+        frames)."""
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        return int(str(stats.sizeInBytes()))
+
+    def _write_cols(self, snap: Snapshot) -> list[Column]:
+        """The write projection of ``snap``'s storage rows: each column
+        cast to its storage type, plus ``_bucket`` hashed from the cast
+        key."""
+        storage = snap.storage_schema()
+
+        def build():
+            key = F.col(snap.key_col).cast(storage[snap.key_col].dataType)
+            cast = [F.col(f.name).cast(f.dataType).alias(f.name) for f in storage]
+            return [*cast, self.bucket_expr(key, snap).alias("_bucket")]
+
+        return self._memo(
+            ("write", storage.json(), snap.key_col, snap.n_buckets), build
+        )
+
     def _write_files(
         self, df: DataFrame, kind: str, snap: Snapshot | None = None
     ) -> tuple[list[FileEntry], str]:
@@ -475,9 +521,7 @@ class LakeTable:
         """
         snap = snap or self.snapshot
         storage = snap.storage_schema()
-        df = df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in storage.fields]
-        )
+        bucketed = df.select(*self._write_cols(snap))
         fp = _schema_fp(storage)
         write_id = uuid.uuid4().hex
         out_dir = os.path.join(self.data_dir, write_id)
@@ -650,7 +694,6 @@ class LakeTable:
                     ),
                 )
 
-        bucketed = df.withColumn("_bucket", self.bucket_expr(snap=snap))
         # Driver path, for rows whose optimizer size estimate is at most
         # DRIVER_WRITE_MAX_BYTES (the measured crossover, above) and at
         # most one input split (spark.sql.files.maxPartitionBytes). The
@@ -669,8 +712,7 @@ class LakeTable:
         # rows, not a second sorted copy. An unknown estimate (RDD-backed
         # frames report Long.MaxValue) takes the executor path.
         conf = self.spark._jsparkSession.sessionState().conf()
-        stats = bucketed._jdf.queryExecution().optimizedPlan().stats()
-        est = int(str(stats.sizeInBytes()))
+        est = self._size_estimate(bucketed)
         if est <= min(DRIVER_WRITE_MAX_BYTES, conf.filesMaxPartitionBytes()):
             import pyarrow.compute as pc
 
@@ -1194,6 +1236,7 @@ class LakeTable:
         stream_id: str = "default",
         exclude_cols: Sequence[str] = ("ts", "chunk"),
         salt: int | None = None,
+        _key_unique: bool = False,
     ) -> dict:
         """Apply one micro-batch of change events. Returns metrics dict.
 
@@ -1222,6 +1265,13 @@ class LakeTable:
 
         Exactly-once: if ``batch_id`` is at-or-below the stream's
         committed watermark the call is a no-op (replay after restart).
+
+        ``_key_unique`` is set by ``ChangesFeed._sink`` alone: its events
+        hold at most one row per key, so the in-batch reduce would return
+        them unchanged and is skipped. Readers and compaction reduce each
+        bucket's files again (the reduce is a semilattice), so input that
+        broke the promise would change the rows written, never the
+        table's state.
         """
         # Re-resolve the committed pointer: another handle to the same
         # table (CLI, streaming runner) may have committed since this
@@ -1239,19 +1289,33 @@ class LakeTable:
 
         if batch_id is not None and self.already_applied(stream_id, batch_id):
             return skipped(snap)
-        have, schema, reason = self._validate(events, snap, exclude_cols)
+        have, schema, validate, counts = self._merge_exprs(
+            events, snap, tuple(exclude_cols)
+        )
+        rows = events
+        if salt is None and not _key_unique:
+            # Input whose bytes fit the smallest split Spark sizes (never
+            # below min(maxPartitionBytes, openCostInBytes), 1 MB in this
+            # engine's session) runs as one task, even when it spans a few
+            # files: the resolve's aggregate then needs no exchange, and
+            # the merge is one job instead of a map stage plus the
+            # write's collect (perfbench lake_serve's 2k-event commits:
+            # p50 110 -> 90 ms, 4-vCPU host). Larger and salted input keep
+            # the map-side combine behind an exchange, which spreads hot
+            # keys.
+            conf = self.spark._jsparkSession.sessionState().conf()
+            one_split = min(
+                conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+            )
+            if self._size_estimate(events) <= one_split:
+                rows = events.coalesce(1)
         # The reason is observed during the delta write (no extra
         # pass); the quarantine write runs only when invalid rows exist.
         obs = Observation()
         valid = (
-            events.withColumn("_reason", reason)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("events_in"),
-                F.count("_reason").alias("events_invalid"),
-            )
+            rows.select(*validate)
+            .observe(obs, *counts)
             .where(F.col("_reason").isNull())
-            .drop("_reason")
         )
         # self._snapshot is NOT touched until _write_snapshot's commit
         # succeeds: if the write or the commit fails, the handle still
@@ -1259,7 +1323,9 @@ class LakeTable:
         # real state.
         target = snap.child(schema.jsonValue())
         new_files, write_path = self._write_files(
-            self._resolve(valid, target, have, salt), kind="delta", snap=target
+            self._resolve(valid, target, have, salt, reduce=not _key_unique),
+            kind="delta",
+            snap=target,
         )
         n_rows = sum(f.rows for f in new_files)
         touched = sorted({f.bucket for f in new_files})
@@ -1317,7 +1383,7 @@ class LakeTable:
         events_invalid = int(got.get("events_invalid") or 0)
         if events_invalid > 0:
             (
-                events.withColumn("_reason", reason)
+                events.select(*validate)
                 .where(F.col("_reason").isNotNull())
                 .withColumn("_batch_id", F.lit(batch_id).cast("long"))
                 .withColumn("_stream_id", F.lit(stream_id))
@@ -1337,6 +1403,38 @@ class LakeTable:
             "new_files": [f.to_json() for f in new_files],
             "write_path": write_path,
         }
+
+    def _merge_exprs(
+        self, events: DataFrame, snap: Snapshot, exclude_cols: tuple[str, ...]
+    ) -> tuple[list[str], T.StructType, list[Column], list[Column]]:
+        """``_validate``'s verdict on ``events`` against ``snap``: the
+        payload columns the batch carries, the merged table schema, the
+        validate projection (every input column plus ``_reason``) and the
+        Observation's counts. Built once per (input schema, table
+        schema): a schema not seen before is validated again, so an
+        incompatible batch raises before anything is written."""
+
+        def build():
+            have, merged, reason = self._validate(events, snap, exclude_cols)
+            return (
+                have,
+                merged,
+                [F.col("*"), reason.alias("_reason")],
+                [
+                    F.count(F.lit(1)).alias("events_in"),
+                    F.count("_reason").alias("events_invalid"),
+                ],
+            )
+
+        key = (
+            "merge",
+            events.schema.json(),
+            json.dumps(snap.schema_json, sort_keys=True),
+            tuple(snap.key_cols),
+            snap.patch_enabled,
+            exclude_cols,
+        )
+        return self._memo(key, build)
 
     def _validate(
         self, events: DataFrame, snap: Snapshot, exclude_cols: Sequence[str]
@@ -1399,66 +1497,99 @@ class LakeTable:
         snap: Snapshot,
         have: Sequence[str],
         salt: int | None,
+        *,
+        reduce: bool = True,
     ) -> DataFrame:
         """Valid ``events`` reduced per key (max ``seq`` wins inside the
         batch) to storage rows of ``snap``, the in-flight snapshot whose
         schema already includes the batch's. ``have`` names the payload
-        columns the events carry; the others are null."""
-        patch = snap.patch_enabled
-        keys = snap.key_cols
-        payload = snap.payload_cols()
-        ps = [PS_PREFIX + c for c in payload] if patch else []
-        aligned = _align(snap.schema, have)
-        # Full events (I/U/D): ordinary rows, no overlays.
-        rows = (
-            (events.where(F.col(EVENT_OP) != "P") if patch else events)
-            .withColumn(SEQ_COL, F.col(EVENT_SEQ).cast("long"))
-            .withColumn(DELETED_COL, F.col(EVENT_OP) == F.lit("D"))
-            .select(*aligned, SEQ_COL, DELETED_COL)
+        columns the events carry; the others are null. ``reduce=False``
+        returns the storage rows unreduced, for events that hold at most
+        one row per key."""
+        full, patches = self._memo(
+            (
+                "resolve",
+                json.dumps(snap.schema_json, sort_keys=True),
+                tuple(snap.key_cols),
+                snap.patch_enabled,
+                tuple(have),
+            ),
+            lambda: self._resolve_exprs(snap, have),
         )
-        # Null out payload on deletes so tombstones carry no stale data.
-        rows = rows.select(
-            *[
-                F.col(f.name)
-                if f.name in keys
-                else F.when(F.col(DELETED_COL), F.lit(None).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                for f in snap.schema.fields
-            ],
-            SEQ_COL,
-            DELETED_COL,
-            *[F.lit(None).cast("long").alias(c) for c in ps],
-        )
-        if patch:
-            # Patch events: carrier rows at CARRIER_SEQ (lose to any
-            # full event as base; _deleted=true so an all-patch history
-            # materializes no row) carrying per-column overlay seqs.
-            pseq = F.col(EVENT_SEQ).cast("long")
-            patches = events.where(F.col(EVENT_OP) == "P").select(
-                *aligned,
-                F.lit(CARRIER_SEQ).cast("long").alias(SEQ_COL),
-                F.lit(True).alias(DELETED_COL),
-                *[
-                    (
-                        F.when(F.col(c).isNotNull(), pseq)
-                        if c in have
-                        else F.lit(None).cast("long")
-                    ).alias(PS_PREFIX + c)
-                    for c in payload
-                ],
+        if patches is None:
+            rows = events.select(*full)
+        else:
+            rows = (
+                events.where(F.col(EVENT_OP) != "P")
+                .select(*full)
+                .unionByName(events.where(F.col(EVENT_OP) == "P").select(*patches))
             )
-            rows = rows.unionByName(patches)
+        if not reduce:
+            return rows
         if salt:
             # Two-phase salted reduce for pathologically hot keys: the
             # salt spreads one key over `salt` reducers, then a second
             # tiny reduce finishes (exact: both reduces are
             # semilattices).
+            ps = (
+                [PS_PREFIX + c for c in snap.payload_cols()]
+                if snap.patch_enabled
+                else []
+            )
             salted = rows.withColumn(
                 "_salt", F.pmod(F.xxhash64(SEQ_COL, *ps), F.lit(salt))
             )
             rows = self._reduce(salted, snap, salt_col="_salt")
         return self._reduce(rows, snap)
+
+    @staticmethod
+    def _resolve_exprs(
+        snap: Snapshot, have: Sequence[str]
+    ) -> tuple[list[Column], list[Column] | None]:
+        """``_resolve``'s projections of change events to storage rows of
+        ``snap``: one for full events, and on a patch-enabled table one
+        for patch events (None otherwise)."""
+        keys = snap.key_cols
+        payload = snap.payload_cols()
+        have = set(have)
+        deleted = F.col(EVENT_OP) == F.lit("D")
+        # Full events (I/U/D): ordinary rows, no overlays. A delete's
+        # payload is null so tombstones carry no stale data.
+        full = [
+            (
+                _aligned(f, have)
+                if f.name in keys
+                else F.when(deleted, F.lit(None).cast(f.dataType)).otherwise(
+                    _aligned(f, have)
+                )
+            ).alias(f.name)
+            for f in snap.schema.fields
+        ]
+        full += [
+            F.col(EVENT_SEQ).cast("long").alias(SEQ_COL),
+            deleted.alias(DELETED_COL),
+        ]
+        if not snap.patch_enabled:
+            return full, None
+        full += [F.lit(None).cast("long").alias(PS_PREFIX + c) for c in payload]
+        # Patch events: carrier rows at CARRIER_SEQ (lose to any full
+        # event as base; _deleted=true so an all-patch history
+        # materializes no row) carrying per-column overlay seqs.
+        pseq = F.col(EVENT_SEQ).cast("long")
+        patches = [
+            *_align(snap.schema, have),
+            F.lit(CARRIER_SEQ).cast("long").alias(SEQ_COL),
+            F.lit(True).alias(DELETED_COL),
+            *[
+                (
+                    F.when(F.col(c).isNotNull(), pseq)
+                    if c in have
+                    else F.lit(None).cast("long")
+                ).alias(PS_PREFIX + c)
+                for c in payload
+            ],
+        ]
+        return full, patches
 
     def _commit(
         self, base: Snapshot, build: Callable[[Snapshot], Snapshot | None]

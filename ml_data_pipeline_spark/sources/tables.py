@@ -45,8 +45,27 @@ SPREAD_TARGET_FILE_BYTES = int(
 )
 
 
+def _local_table_path(sf_dir: str, name: str) -> str:
+    """The table's path on the local filesystem. ``sf_dir`` is a plain
+    path or a ``file:`` URI; any other scheme raises ``ValueError``, since
+    the size and row-group probes below read the local filesystem, where
+    a remote table would look empty and unsplittable."""
+    from urllib.parse import urlparse
+
+    url = urlparse(sf_dir)
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        sf_dir = url.path
+    elif url.scheme:
+        raise ValueError(
+            f"{sf_dir!r} is not a local path (scheme {url.scheme!r}): input "
+            f"size and scan parallelism are read from the local filesystem; "
+            f"pass a plain path or a file: URI"
+        )
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def _input_bytes(sf_dir: str, name: str) -> int:
-    p = os.path.join(sf_dir, f"{name}.parquet")
+    p = _local_table_path(sf_dir, name)
     if os.path.isfile(p):
         return os.path.getsize(p)
     total = 0
@@ -65,7 +84,7 @@ def _effective_scan_parallelism(sf_dir: str, name: str) -> int:
     file (one cheap footer read). Spark's split count is NOT usable
     here — minPartitionNum inflates it with empty splits while the
     row group remains the real unit."""
-    p = os.path.join(sf_dir, f"{name}.parquet")
+    p = _local_table_path(sf_dir, name)
     if os.path.isdir(p):
         return sum(
             1

@@ -150,6 +150,54 @@ def test_advisory_tables_bounded_files_over_many_batches(spark, tmp_path):
     assert read_lineage(t).select("batch_id").distinct().count() == 50
 
 
+def test_advisory_fold_mixes_parts_without_the_event_counts(spark, tmp_path):
+    """A metrics part written before ``events_in``/``events_invalid``
+    joined ``METRICS_SCHEMA`` folds together with new parts: the fold
+    reads every part under the current schema, the old row reads null
+    counts, and the new rows carry each merge's counts."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ml_data_pipeline_spark.cdc.apply import ADVISORY_FOLD_AT
+    from ml_data_pipeline_spark.cdc.events import CHANGE_SCHEMA
+
+    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=2)
+    # A part in the layout of the nine columns before the counts.
+    old = pa.table(
+        {
+            "stream_id": ["cdc"],
+            "batch_id": pa.array([-1], pa.int64()),
+            "snapshot_id": pa.array([0], pa.int64()),
+            "skipped": [False],
+            "upsert_rows": pa.array([0], pa.int64()),
+            "n_buckets_touched": pa.array([0], pa.int32()),
+            "schema_evolved": [False],
+            "wall_ms": [1.0],
+            "committed_at": pa.array(
+                [datetime.datetime(2020, 1, 1)], pa.timestamp("us", tz="UTC")
+            ),
+        }
+    )
+    os.makedirs(os.path.join(t.root, "metrics"))
+    pq.write_table(old, os.path.join(t.root, "metrics", "part-old.parquet"))
+    for b in range(ADVISORY_FOLD_AT - 1):
+        rows = [(b * 10 + i, "I", f"d{b}_{i}", [b, i], 2, "web", None) for i in range(3)]
+        rows += [(b * 10 + 9, "X", "bad", [b], 1, "web", None)] * (b % 2)
+        apply_batch(t, spark.createDataFrame(rows, CHANGE_SCHEMA), batch_id=b)
+    files = os.listdir(os.path.join(t.root, "metrics"))
+    assert [f for f in files if f.endswith(".parquet")] == [
+        f for f in files if f.startswith("fold-")
+    ]
+    m = {r["batch_id"]: r for r in read_metrics(t).collect()}
+    assert len(m) == ADVISORY_FOLD_AT
+    assert (m[-1]["events_in"], m[-1]["events_invalid"]) == (None, None)
+    for b in range(ADVISORY_FOLD_AT - 1):
+        assert (m[b]["events_in"], m[b]["events_invalid"]) == (3 + b % 2, b % 2)
+        assert m[b]["upsert_rows"] == 3
+
+
 def test_advisory_fold_race_never_raises(tmp_path, monkeypatch):
     """Two processes sharing an advisory dir can race the fold; the
     loser hitting a file its rival already claimed (removed) must

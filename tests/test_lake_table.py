@@ -784,18 +784,18 @@ def test_write_paths_agree(spark, tmp_path, split_bytes, patch):
 
 
 def test_small_write_job_counts(spark, tmp_path):
-    """A small parquet-backed merge runs two Spark jobs (the resolve's
-    map stage, then the Arrow collect of the resolved rows), and so does
-    a small compaction (the reduce's map stage, then the collect). There
-    is no bucket exchange and no Python stage; a change that adds a job
-    to either fails here."""
+    """A small parquet-backed merge runs one Spark job: its input fits one
+    split, so the resolve runs in the task of the Arrow collect, with no
+    exchange. A small compaction runs two (the reduce's map stage, then
+    the collect). There is no bucket exchange and no Python stage; a
+    change that adds a job to either fails here."""
     t = _mk_table(spark, tmp_path)
     rows = [(i, "I", f"d{i}", [i], 1, "web", None) for i in range(200)]
     t.merge_batch(_parquet_events(spark, tmp_path, rows), batch_id=0)
     ev = _parquet_events(spark, tmp_path, [(1000 + s, *r[1:]) for s, r in enumerate(rows)])
     before = _jobs(spark)
     assert t.merge_batch(ev, batch_id=1)["write_path"] == "driver"
-    assert len(_jobs(spark) - before) == 2
+    assert len(_jobs(spark) - before) == 1
     before = _jobs(spark)
     assert t.compact()["write_path"] == "driver"
     assert len(_jobs(spark) - before) == 2
@@ -949,3 +949,88 @@ def test_composite_key_validation_and_lookup(spark, tmp_path):
     with pytest.raises(SchemaMismatch, match="key column 'a'"):
         u.merge_batch(wide, batch_id=1)
     assert u.refresh().snapshot_id == 1
+
+
+def test_merge_exprs_follow_both_schemas(spark, tmp_path):
+    """A handle builds a merge's column lists once per (input schema,
+    table schema) and reuses them. One handle that merges, adds a column,
+    widens a type, is refused a key-type change and merges again must
+    leave the state a fresh handle per step leaves, at every step."""
+    schema = T.StructType(
+        [T.StructField("k", T.IntegerType()), T.StructField("v", T.IntegerType())]
+    )
+    roots = [str(tmp_path / n) for n in ("kept", "fresh")]
+    kept = LakeTable.create(spark, roots[0], schema, key_col="k", n_buckets=4)
+    LakeTable.create(spark, roots[1], schema, key_col="k", n_buckets=4)
+
+    def ev(ddl, rows):
+        return spark.createDataFrame(rows, f"seq long, op string, {ddl}")
+
+    steps = [
+        ("k int, v int", [(1, "I", k, k) for k in range(6)]),
+        ("k int, v int, w string", [(2, "U", k, -k, f"w{k}") for k in range(3)]),
+        ("k int, v bigint", [(3, "U", 4, 2**40), (3, "D", 5, None)]),
+        ("k int, v bigint", [(4, "U", 0, 7), (4, "I", 5, 8)]),
+        ("k bigint, v bigint", [(5, "U", 1, 1)]),
+        ("k int, v int", [(6, "U", 2, 9), (6, "D", 3, None)]),
+    ]
+    for i, (ddl, rows) in enumerate(steps):
+        states = []
+        for t in (kept, LakeTable.load(spark, roots[1])):
+            if ddl.startswith("k bigint"):
+                with pytest.raises(SchemaMismatch, match="cannot change type"):
+                    t.merge_batch(ev(ddl, rows), batch_id=i)
+            else:
+                t.merge_batch(ev(ddl, rows), batch_id=i)
+            t.refresh()
+            states.append((t.schema, sorted(map(tuple, t.read().collect()))))
+        assert states[0] == states[1], (i, ddl)
+    assert states[0][0].simpleString() == "struct<k:int,v:bigint,w:string>"
+
+
+def test_one_split_merge_runs_one_job(spark, tmp_path, monkeypatch):
+    """Merge input that fits one split runs as one task: the resolve's
+    partial and final aggregates sit in the write's job, with no
+    exchange. Input of several splits keeps the partial -> exchange ->
+    final resolve that combines map-side."""
+    t = _mk_table(spark, tmp_path)
+    written = []
+    write = t._write_files
+
+    def spy(df, kind, snap=None):
+        written.append(df)
+        return write(df, kind, snap=snap)
+
+    monkeypatch.setattr(t, "_write_files", spy)
+    path = str(tmp_path / "one")
+    rows = [(i, "I", f"d{i % 150}", [i], 1, "web", None) for i in range(300)]
+    spark.createDataFrame(rows, LOOSE).coalesce(1).write.parquet(path)
+    t.merge_batch(_events(spark, E), batch_id=0)
+    before = _jobs(spark)
+    res = t.merge_batch(spark.read.schema(LOOSE).parquet(path), batch_id=1)
+    assert (res["write_path"], res["upsert_rows"]) == ("driver", 150)
+    assert len(_jobs(spark) - before) == 1
+    plan = written[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert [s for s, _ in _agg_steps(written[-1])] == ["partial", "final"]
+
+    # Several splits: random token arrays that compress to over the 1 MB
+    # open cost, in four files.
+    path = str(tmp_path / "many")
+    spark.range(8000).selectExpr(
+        "id + 1000 as seq",
+        "'U' as op",
+        "concat('d', id % 3000) as doc_id",
+        "transform(sequence(1, 40), x -> cast(rand(7) * 2e9 as int)) as tokens",
+        "40 as n_tok",
+        "'web' as source",
+        "cast(null as timestamp) as ts",
+    ).repartition(4).write.parquet(path)
+    assert sum(os.path.getsize(os.path.join(path, f)) for f in os.listdir(path)) > 2**20
+    res = t.merge_batch(spark.read.schema(LOOSE).parquet(path), batch_id=2)
+    assert res["upsert_rows"] == 3000
+    assert _agg_steps(written[-1]) == [
+        ("partial", ("doc_id",)),
+        ("exchange", ("doc_id",)),
+        ("final", ("doc_id",)),
+    ]

@@ -8,6 +8,8 @@ here is a silent 100×-at-scale problem, not a correctness bug).
 
 from __future__ import annotations
 
+import pytest
+
 from ml_data_pipeline_spark.operators import dedup, relational as R
 
 
@@ -194,3 +196,31 @@ def test_spread_skips_already_splittable_inputs(spark, tmp_path):
     assert "Repartition" in plan2
     n = spread_partitions(spark, p.stat().st_size)
     assert 2 <= n <= spark.sparkContext.defaultParallelism * 3
+
+
+def test_spread_probes_reject_non_local_uris(tmp_path):
+    """The input-size and row-group probes behind ``load_table_spread``
+    read the local filesystem: a ``file:`` URI reads the same table as
+    its plain path, and any other scheme raises, naming it, instead of
+    reading as an empty, unsplittable input."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ml_data_pipeline_spark.sources.tables import (
+        _effective_scan_parallelism,
+        _input_bytes,
+    )
+
+    p = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": list(range(40))}), p, row_group_size=10)
+    for where in (str(tmp_path), tmp_path.as_uri(), f"file:{tmp_path}"):
+        assert _input_bytes(where, "documents") == p.stat().st_size
+        assert _effective_scan_parallelism(where, "documents") == 4
+    for where, scheme in (
+        ("s3a://bucket/sf1", "s3a"),
+        ("hdfs://namenode:8020/sf1", "hdfs"),
+        ("file://otherhost/sf1", "file"),
+    ):
+        for probe in (_input_bytes, _effective_scan_parallelism):
+            with pytest.raises(ValueError, match=f"not a local path .scheme '{scheme}'"):
+                probe(where, "documents")
