@@ -276,6 +276,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.out:
             old = [f"_old_{c}" for c in t.snapshot.payload_cols()]
             ch_df.drop(*old).write.mode("overwrite").parquet(args.out)
+            # count the written window instead of computing it again
+            ch_df = spark.read.parquet(args.out)
         from pyspark.sql import functions as F
 
         counts = {

@@ -21,6 +21,16 @@ Delivery contract:
   poll, merge and commit for every sink; sinks differ only in their
   projection of window rows to change events: ``replica_events`` (the
   default) or e.g. ``TokenIndex``'s postings.
+* **One window computation per source handle** — feeds that share a
+  source ``LakeTable`` handle and poll at the same cursor get one
+  computation of their window (``LakeTable._changes_once``): a window
+  within the driver's collect bound is collected once and held on the
+  handle, keyed by its two snapshot ids, until the handle's other feeds
+  at that cursor have taken it or the next window replaces it. A
+  replica pump and an index sync at one cursor thus pay the
+  ``changes()`` aggregate, old state included, once between them. A
+  feed with no other feed of its handle at its cursor gets the lazy
+  ``changes()`` frame and holds nothing.
 * **Resumable** — the cursor is a JSON file written with the same
   fsync + atomic-rename protocol as table snapshots; a new
   ``ChangesFeed`` at the same cursor path resumes where the dead one
@@ -68,6 +78,8 @@ class ChangesFeed:
     def __init__(self, table: LakeTable, cursor_path: str):
         self.table = table
         self.cursor_path = os.path.abspath(cursor_path)
+        # a feed that shares its source handle may share its windows
+        table._feeds.add(self)
 
     # ------------------------------------------------------------- cursor
 
@@ -109,7 +121,7 @@ class ChangesFeed:
         # bound, so a commit racing this poll cannot widen the
         # delivered window past the cursor/batch-id we hand back.
         return (
-            self.table.changes(cur, until_snap=head_snap),
+            self.table._changes_once(cur, head_snap, self),
             head_snap.snapshot_id,
         )
 
@@ -158,8 +170,13 @@ class ChangesFeed:
         """Merge ``project``'s events of the window ``rows`` into
         ``dest`` as batch ``target``, then commit the cursor there. The
         events are key-unique (``Projection``), so the merge skips its
-        in-batch reduce."""
+        in-batch reduce. The projection reads the window's own snapshot:
+        a commit through the shared source handle since the poll may have
+        moved ``self.table.snapshot`` (and added a column the window
+        lacks)."""
         snap = self.table.snapshot
+        if snap.snapshot_id != target:
+            snap = self.table.snapshot_by_id(target)
         # seq = the row's change VERSION (max event seq that shaped its
         # state, incl. patch overlays), not the raw base _seq: a state
         # whose latest change was a per-column patch must outrank the

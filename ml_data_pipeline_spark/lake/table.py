@@ -59,6 +59,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+import weakref
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, Sequence
 
@@ -292,6 +293,12 @@ class LakeTable:
         # Column lists of merges and writes, keyed by the schemas they
         # were built from (``_memo``).
         self._exprs: dict[tuple, object] = {}
+        # The ChangesFeeds reading this handle (each registers itself),
+        # and the last small changes() window, held for those of them at
+        # its cursor that have not taken it yet, as ((since, until)
+        # snapshot ids, local relation, feeds): see ``_changes_once``.
+        self._feeds: weakref.WeakSet = weakref.WeakSet()
+        self._window: tuple[tuple[int, int], DataFrame, weakref.WeakSet] | None = None
 
     # ------------------------------------------------------------- lifecycle
 
@@ -489,6 +496,13 @@ class LakeTable:
         frames)."""
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         return int(str(stats.sizeInBytes()))
+
+    def _driver_max_bytes(self) -> int:
+        """The largest size estimate of rows this handle collects onto
+        the driver as Arrow: DRIVER_WRITE_MAX_BYTES, and at most one input
+        split (``spark.sql.files.maxPartitionBytes``)."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return min(DRIVER_WRITE_MAX_BYTES, conf.filesMaxPartitionBytes())
 
     def _write_cols(self, snap: Snapshot) -> list[Column]:
         """The write projection of ``snap``'s storage rows: each column
@@ -712,8 +726,7 @@ class LakeTable:
         # rows, not a second sorted copy. An unknown estimate (RDD-backed
         # frames report Long.MaxValue) takes the executor path.
         conf = self.spark._jsparkSession.sessionState().conf()
-        est = self._size_estimate(bucketed)
-        if est <= min(DRIVER_WRITE_MAX_BYTES, conf.filesMaxPartitionBytes()):
+        if self._size_estimate(bucketed) <= self._driver_max_bytes():
             import pyarrow.compute as pc
 
             write_path = "driver"
@@ -1115,6 +1128,58 @@ class LakeTable:
         ]
         return F.greatest(*parts) if len(parts) > 1 else parts[0]
 
+    def _base_snapshot(self, since_snapshot_id: int) -> Snapshot:
+        """The base snapshot of a ``changes()`` window; ValueError if
+        vacuum has expired it."""
+        try:
+            return self.snapshot_by_id(since_snapshot_id)
+        except FileNotFoundError:
+            raise ValueError(
+                f"base snapshot {since_snapshot_id} has been expired by "
+                f"vacuum — this consumer's cursor predates the retention "
+                f"window; re-bootstrap it (full read + current snapshot "
+                f"as the new cursor) or raise vacuum keep_snapshots to "
+                f"cover the slowest consumer's lag"
+            ) from None
+
+    def _changes_once(
+        self, since_snapshot_id: int, until_snap: Snapshot, feed: object
+    ) -> DataFrame:
+        """``changes(since_snapshot_id, until_snap)`` for ``feed``, computed
+        once per snapshot pair while other feeds on this handle are at the
+        same cursor. Committed snapshots never change, so the window is a
+        pure function of the two ids, and feeds on one handle at one cursor
+        (a replica pump and an index sync) can share its rows.
+
+        A feed with no other feed of this handle at its cursor gets the
+        lazy ``changes()`` frame, as does any window whose size estimate
+        is above ``_driver_max_bytes``. Otherwise the window is collected
+        once as Arrow and held as a local relation in one slot, replacing
+        the last one, until each of those other feeds has taken it. A hit
+        still reads the base snapshot, so an expired cursor raises
+        ValueError even when its window is held. In perfbench lake_serve
+        (4-vCPU host) the index sync went 0.47 -> 0.21 s and the pump,
+        which pays the collect plus a small job over the held rows, 0.34
+        -> 0.41 s."""
+        key = (since_snapshot_id, until_snap.snapshot_id)
+        if self._window is not None and self._window[0] == key:
+            self._base_snapshot(since_snapshot_id)
+            _, rows, waiting = self._window
+            waiting.discard(feed)
+            if not waiting:
+                self._window = None
+            return rows
+        self._window = None
+        rows = self.changes(since_snapshot_id, until_snap=until_snap)
+        others = weakref.WeakSet(
+            f for f in self._feeds if f is not feed and f.cursor == since_snapshot_id
+        )
+        if not others or self._size_estimate(rows) > self._driver_max_bytes():
+            return rows
+        rows = self.spark.createDataFrame(rows.toArrow(), rows.schema)
+        self._window = (key, rows, others)
+        return rows
+
     def changes(
         self,
         since_snapshot_id: int,
@@ -1156,16 +1221,7 @@ class LakeTable:
         widens the delivered window past the recorded cursor.
         """
         snap = until_snap or self.refresh()
-        try:
-            base = self.snapshot_by_id(since_snapshot_id)
-        except FileNotFoundError:
-            raise ValueError(
-                f"base snapshot {since_snapshot_id} has been expired by "
-                f"vacuum — this consumer's cursor predates the retention "
-                f"window; re-bootstrap it (full read + current snapshot "
-                f"as the new cursor) or raise vacuum keep_snapshots to "
-                f"cover the slowest consumer's lag"
-            ) from None
+        base = self._base_snapshot(since_snapshot_id)
         base_paths = {f.path for f in base.files}
         added = [f for f in snap.files if f.path not in base_paths]
         touched = {f.bucket for f in added}

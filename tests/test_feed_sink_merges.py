@@ -8,7 +8,11 @@ the frame the sink writes plans no aggregate beyond the window's own,
 ``upsert_rows`` equals the rows written, and that count equals a pandas
 model of the window (changed documents for the replica, their postings
 for the index), computed from the source's states at the window's two
-snapshots.
+snapshots. Every scenario runs twice: with each window held on the source
+handle as a local relation (the sink's input plans no aggregate), then
+with the driver bound forced to 0, so that each window is the lazy
+``changes()`` frame (the input plans the window's own partial and final
+aggregate).
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from pyspark.sql import types as T
 
 from ml_data_pipeline_spark.cdc.apply import create_docs_table
 from ml_data_pipeline_spark.cdc.events import CHANGE_SCHEMA, DOC_SCHEMA
+from ml_data_pipeline_spark.lake import table as table_mod
 from ml_data_pipeline_spark.lake.feed import ChangesFeed
 from ml_data_pipeline_spark.lake.table import PS_PREFIX, SEQ_COL, LakeTable
 from ml_data_pipeline_spark.lake.token_index import TokenIndex
@@ -95,10 +100,25 @@ def _window_model(old: dict, new: dict, stop: set) -> tuple[int, int]:
     return len(changed), postings
 
 
-def _drive(spark, tmp_path, monkeypatch, src, schema, batches, stop=()):
+def _drive(spark, tmp_path, monkeypatch, make_src, schema, batches, stop=()):
+    """``_run`` over windows held on the source handle (the sinks' input
+    plans no aggregate), then over lazy windows, the driver bound forced
+    to 0 (the input plans the window's own partial and final aggregate).
+    ``make_src(dir)`` creates each run's source; returns the held run's."""
+    with monkeypatch.context() as m:
+        m.setattr(table_mod, "DRIVER_WRITE_MAX_BYTES", 0)
+        lazy = make_src(tmp_path / "lazy")
+        _run(spark, tmp_path / "lazy", monkeypatch, lazy, schema, batches, 2, stop)
+    src = make_src(tmp_path / "held")
+    _run(spark, tmp_path / "held", monkeypatch, src, schema, batches, 0, stop)
+    return src
+
+
+def _run(spark, tmp_path, monkeypatch, src, schema, batches, aggs, stop):
     """Commit ``batches`` to ``src`` one by one, then a compaction, and
     after each commit pump the window into a replica and sync it into a
-    token index, checking both merges against the model."""
+    token index, checking both merges against the model and that each
+    merge's input plans ``aggs`` aggregates."""
     replica = LakeTable.create(
         spark, str(tmp_path / "replica"), schema, key_col=src.key_col, n_buckets=4
     )
@@ -123,9 +143,11 @@ def _drive(spark, tmp_path, monkeypatch, src, schema, batches, stop=()):
             _states(src, base), _states(src, src.snapshot.snapshot_id), set(stop)
         )
         assert rfeed.pump_into(replica)["advanced"]
-        assert rsink.last()[1] == want[0]
+        m, rows = rsink.last()
+        assert (m["in_aggs"], rows) == (aggs, want[0])
         assert ix.sync(ifeed)["windows"] == 1
-        assert isink.last()[1] == want[1]
+        m, rows = isink.last()
+        assert (m["in_aggs"], rows) == (aggs, want[1])
         windows.append(want)
     # Every batch changed documents; the compaction's window changed none.
     assert all(rows and postings for rows, postings in windows[:-1]), windows
@@ -144,7 +166,8 @@ def test_sinks_write_windows_unreduced(spark, tmp_path, monkeypatch):
     """Inserts, updates that drop tokens, deletes, re-inserts, NULL token
     arrays and a stop token, then a window holding only a compaction; a
     bootstrap into an empty replica writes the source's state as is."""
-    src = create_docs_table(spark, str(tmp_path / "src"), n_buckets=4)
+    def make_src(root):
+        return create_docs_table(spark, str(root / "src"), n_buckets=4)
 
     def ev(rows):
         return spark.createDataFrame(rows, CHANGE_SCHEMA)
@@ -171,7 +194,7 @@ def test_sinks_write_windows_unreduced(spark, tmp_path, monkeypatch):
             ]
         ),
     ]
-    _drive(spark, tmp_path, monkeypatch, src, DOC_SCHEMA, batches, stop=[7])
+    src = _drive(spark, tmp_path, monkeypatch, make_src, DOC_SCHEMA, batches, stop=[7])
 
     fresh = LakeTable.create(
         spark, str(tmp_path / "fresh"), DOC_SCHEMA, key_col="doc_id", n_buckets=4
@@ -187,14 +210,15 @@ def test_sinks_write_windows_unreduced(spark, tmp_path, monkeypatch):
 def test_sinks_of_a_patch_table(spark, tmp_path, monkeypatch):
     """A patch moves a row's change version without a full event; the
     sinks still receive one row per changed document."""
-    src = LakeTable.create(
-        spark,
-        str(tmp_path / "src"),
-        DOC_SCHEMA,
-        key_col="doc_id",
-        n_buckets=4,
-        properties={"patch.enabled": "true"},
-    )
+    def make_src(root):
+        return LakeTable.create(
+            spark,
+            str(root / "src"),
+            DOC_SCHEMA,
+            key_col="doc_id",
+            n_buckets=4,
+            properties={"patch.enabled": "true"},
+        )
 
     def ev(rows):
         return spark.createDataFrame(rows, CHANGE_SCHEMA)
@@ -212,7 +236,7 @@ def test_sinks_of_a_patch_table(spark, tmp_path, monkeypatch):
             ]
         ),
     ]
-    _drive(spark, tmp_path, monkeypatch, src, DOC_SCHEMA, batches)
+    _drive(spark, tmp_path, monkeypatch, make_src, DOC_SCHEMA, batches)
 
 
 def test_sinks_of_an_int_keyed_source(spark, tmp_path, monkeypatch):
@@ -224,9 +248,10 @@ def test_sinks_of_an_int_keyed_source(spark, tmp_path, monkeypatch):
             T.StructField("tokens", T.ArrayType(T.IntegerType())),
         ]
     )
-    src = LakeTable.create(
-        spark, str(tmp_path / "src"), schema, key_col="k", n_buckets=4
-    )
+    def make_src(root):
+        return LakeTable.create(
+            spark, str(root / "src"), schema, key_col="k", n_buckets=4
+        )
 
     def ev(rows):
         return spark.createDataFrame(rows, "seq long, op string, k int, tokens array<int>")
@@ -236,4 +261,4 @@ def test_sinks_of_an_int_keyed_source(spark, tmp_path, monkeypatch):
         ev([(40, "U", 1, [2]), (41, "D", 2, None), (42, "U", 3, None)]),
         ev([(43, "I", 2, [4]), (44, "D", 3, None)]),  # re-insert, delete
     ]
-    _drive(spark, tmp_path, monkeypatch, src, schema, batches)
+    _drive(spark, tmp_path, monkeypatch, make_src, schema, batches)
