@@ -6,7 +6,7 @@ Ship the package as a zip and run any subcommand on a cluster:
     spark-submit --py-files dist/mlp_spark.zip \
         ml_data_pipeline_spark/cdc/__main__.py replay \
         --table /lake/docs --events /binlog/docs \
-        --checkpoint /ckpt/docs --salt 16
+        --checkpoint /ckpt/docs
 
 Subcommands:
     create-table  — initialize the lake table (input_hint schema)
@@ -76,7 +76,6 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--max-bytes-per-trigger", type=int, default=None,
                    help="byte-denominated batch budget (replaces the "
                         "file-count cap when set)")
-    r.add_argument("--salt", type=int, default=None)
     r.add_argument("--compact-every", type=int, default=None)
     r.add_argument("--policy-compact", action="store_true",
                    help="size-tiered per-bucket compaction policy")
@@ -243,7 +242,6 @@ def main(argv: list[str] | None = None) -> int:
             schema=schema,
             max_files_per_trigger=args.max_files_per_trigger,
             max_bytes_per_trigger=args.max_bytes_per_trigger,
-            salt=args.salt,
             compact_every=args.compact_every,
             compaction_policy=policy,
             vacuum_every_compactions=args.vacuum_every_compactions,

@@ -64,7 +64,6 @@ def apply_batch(
     batch_id: int | None = None,
     *,
     stream_id: str = "cdc",
-    salt: int | None = None,
     write_metrics: bool = True,
     collect_input_lineage: bool = False,
 ) -> dict:
@@ -92,12 +91,7 @@ def apply_batch(
             ]
     except Exception:
         input_files = []
-    res = table.merge_batch(
-        batch_df,
-        batch_id=batch_id,
-        stream_id=stream_id,
-        salt=salt,
-    )
+    res = table.merge_batch(batch_df, batch_id=batch_id, stream_id=stream_id)
     wall_ms = (time.monotonic() - t0) * 1000.0
     res["wall_ms"] = wall_ms
     res["input_files"] = input_files

@@ -14,7 +14,7 @@ Streaming query:
   independently (a crash after committing table A but before table B
   re-applies only B);
 * per-table merges are ordinary ``merge_batch`` calls — bucket
-  pruning, salting, schema evolution all apply per table.
+  pruning, map-side combine, schema evolution all apply per table.
 """
 
 from __future__ import annotations
@@ -41,7 +41,6 @@ def run_multi_table_replay(
     stream_id: str = "cdc",
     schema: T.StructType | None = None,
     max_files_per_trigger: int = 8,
-    salt: int | None = None,
     write_metrics: bool = False,
     timeout_sec: float = 600.0,
 ) -> dict:
@@ -67,7 +66,6 @@ def run_multi_table_replay(
                     part,
                     batch_id,
                     stream_id=f"{stream_id}:{name}",
-                    salt=salt,
                     write_metrics=write_metrics,
                 )
                 if not res.get("skipped"):

@@ -33,7 +33,6 @@ def run_replay(
     schema=None,
     max_files_per_trigger: int = 4,
     max_bytes_per_trigger: int | None = None,
-    salt: int | None = None,
     compact_every: int | None = None,
     compaction_policy=None,
     vacuum_every_compactions: int | None = None,
@@ -80,7 +79,6 @@ def run_replay(
             batch_df,
             batch_id,
             stream_id=stream_id,
-            salt=salt,
             write_metrics=write_metrics,
             collect_input_lineage=collect_input_lineage,
         )

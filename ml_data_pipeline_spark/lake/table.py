@@ -832,9 +832,7 @@ class LakeTable:
         return out
 
     @classmethod
-    def _reduce(
-        cls, df: DataFrame, snap: Snapshot, salt_col: str | None = None
-    ) -> DataFrame:
+    def _reduce(cls, df: DataFrame, snap: Snapshot) -> DataFrame:
         """Per-key latest state of ``snap``'s storage rows ``df``.
 
         ``groupBy + max(struct(...))`` rather than a window
@@ -842,13 +840,10 @@ class LakeTable:
         combines map-side before the shuffle — a hot key collapses to
         one row per map task instead of shipping every version to a
         single reducer. This is the skew-proof reduction primitive.
-        ``salt_col`` groups by (key, salt) for the first phase of a
-        salted two-phase reduce (exact: the reduce is a semilattice).
         """
         keys = snap.key_cols
-        group = keys if salt_col is None else [*keys, salt_col]
         return (
-            df.groupBy(*group)
+            df.groupBy(*keys)
             .agg(*cls._latest_aggs(snap))
             .select(*keys, *cls._latest_cols(snap))
         )
@@ -875,7 +870,7 @@ class LakeTable:
 
         Everything is a max — partially aggregable and a semilattice
         (the reduce's output rows are valid inputs), so map-side
-        combine, salting, cross-batch/compaction merging and a
+        combine, cross-batch/compaction merging and a
         ``where``-restricted second set of maxes all compose exactly.
         """
         payload = snap.payload_cols()
@@ -1291,7 +1286,6 @@ class LakeTable:
         batch_id: int | None = None,
         stream_id: str = "default",
         exclude_cols: Sequence[str] = ("ts", "chunk"),
-        salt: int | None = None,
         _key_unique: bool = False,
     ) -> dict:
         """Apply one micro-batch of change events. Returns metrics dict.
@@ -1315,9 +1309,8 @@ class LakeTable:
 
         Invalid events (see ``_validate``) are kept out of the table
         and appended with their reason to ``<table>/quarantine``; the
-        rest of the batch commits. ``salt`` splits the in-batch reduce
-        in two phases, spreading each key over ``salt`` reducers first
-        (for pathologically hot keys).
+        rest of the batch commits. The in-batch reduce combines map-side,
+        so a hot key reaches its reducer as at most one row per map task.
 
         Exactly-once: if ``batch_id`` is at-or-below the stream's
         committed watermark the call is a no-op (replay after restart).
@@ -1349,16 +1342,16 @@ class LakeTable:
             events, snap, tuple(exclude_cols)
         )
         rows = events
-        if salt is None and not _key_unique:
+        if not _key_unique:
             # Input whose bytes fit the smallest split Spark sizes (never
             # below min(maxPartitionBytes, openCostInBytes), 1 MB in this
             # engine's session) runs as one task, even when it spans a few
             # files: the resolve's aggregate then needs no exchange, and
             # the merge is one job instead of a map stage plus the
             # write's collect (perfbench lake_serve's 2k-event commits:
-            # p50 110 -> 90 ms, 4-vCPU host). Larger and salted input keep
-            # the map-side combine behind an exchange, which spreads hot
-            # keys.
+            # p50 110 -> 90 ms, 4-vCPU host). Larger input keeps the
+            # map-side combine in front of an exchange, which a hot key
+            # then reaches as one row per map task.
             conf = self.spark._jsparkSession.sessionState().conf()
             one_split = min(
                 conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
@@ -1379,7 +1372,7 @@ class LakeTable:
         # real state.
         target = snap.child(schema.jsonValue())
         new_files, write_path = self._write_files(
-            self._resolve(valid, target, have, salt, reduce=not _key_unique),
+            self._resolve(valid, target, have, reduce=not _key_unique),
             kind="delta",
             snap=target,
         )
@@ -1552,7 +1545,6 @@ class LakeTable:
         events: DataFrame,
         snap: Snapshot,
         have: Sequence[str],
-        salt: int | None,
         *,
         reduce: bool = True,
     ) -> DataFrame:
@@ -1580,23 +1572,7 @@ class LakeTable:
                 .select(*full)
                 .unionByName(events.where(F.col(EVENT_OP) == "P").select(*patches))
             )
-        if not reduce:
-            return rows
-        if salt:
-            # Two-phase salted reduce for pathologically hot keys: the
-            # salt spreads one key over `salt` reducers, then a second
-            # tiny reduce finishes (exact: both reduces are
-            # semilattices).
-            ps = (
-                [PS_PREFIX + c for c in snap.payload_cols()]
-                if snap.patch_enabled
-                else []
-            )
-            salted = rows.withColumn(
-                "_salt", F.pmod(F.xxhash64(SEQ_COL, *ps), F.lit(salt))
-            )
-            rows = self._reduce(salted, snap, salt_col="_salt")
-        return self._reduce(rows, snap)
+        return self._reduce(rows, snap) if reduce else rows
 
     @staticmethod
     def _resolve_exprs(

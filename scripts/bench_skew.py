@@ -2,17 +2,18 @@
 
 Evidence for the skew-defense design claim: the per-key resolve is a
 partially-aggregable max-struct (hot keys collapse map-side before the
-shuffle), so throughput should degrade only mildly as an increasing
-fraction of all change events target a single doc_id; the optional
-two-phase salted reduce covers the pathological tail. The sweep
-measures events/sec at hot fractions 0 / 5% / 20% with and without
-salting.
+shuffle, to at most one row per map task), so throughput should
+degrade only mildly as an increasing fraction of all change events
+target a single doc_id. The sweep measures events/sec at each hot
+fraction in ``SKEW_FRACTIONS`` (default 0 / 5% / 20%) on
+``SKEW_CORES`` cores (default: the host's, ``SPARK_GRAFT_CPUS`` else
+``os.cpu_count()``).
 
 Run standalone (NOT alongside any other Spark job — timing):
     python scripts/bench_skew.py
 Prints one JSON line:
-    {"metric": "cdc_hot_key_sweep", "cores": 8, "n_events": ...,
-     "points": {"0.0": {"plain": ev_s, "salted": ev_s}, ...}}
+    {"metric": "cdc_hot_key_sweep", "cores": 4, "n_events": ...,
+     "points": {"0.0": ev_s, ...}}
 """
 
 from __future__ import annotations
@@ -25,13 +26,14 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CORES = int(os.environ.get("SKEW_CORES", "8"))
+from ml_data_pipeline_spark.session import default_parallelism  # noqa: E402
+
+CORES = int(os.environ.get("SKEW_CORES") or default_parallelism())
 DOCS = int(os.environ.get("SKEW_DOCS", "200000"))
 EVENTS = int(os.environ.get("SKEW_EVENTS", "8000000"))
 FRACTIONS = [
     float(x) for x in os.environ.get("SKEW_FRACTIONS", "0.0,0.05,0.2").split(",")
 ]
-SALT = int(os.environ.get("SKEW_SALT", "32"))
 REPS = int(os.environ.get("SKEW_REPS", "2"))
 
 
@@ -45,7 +47,7 @@ def main() -> None:
     spark = build_session(
         app_name="cdc-skew-sweep", cores=CORES, shuffle_partitions=CORES * 3
     )
-    points: dict[str, dict[str, float]] = {}
+    points: dict[str, float] = {}
     try:
         warmed = False
         for frac in FRACTIONS:
@@ -62,31 +64,27 @@ def main() -> None:
                     shuffle_window=10_000,
                     max_tokens=48,
                 )
-                entry: dict[str, float] = {}
-                for label, salt in (("plain", None), ("salted", SALT)):
-                    best = float("inf")
-                    reps = REPS + (0 if warmed else 1)
-                    for i in range(reps):
-                        work = tempfile.mkdtemp(prefix="cdc-skew-")
-                        t = create_docs_table(
-                            spark, os.path.join(work, "tbl"), n_buckets=64
-                        )
-                        stats = run_replay(
-                            spark,
-                            t.root,
-                            events_dir,
-                            os.path.join(work, "ckpt"),
-                            max_files_per_trigger=64,
-                            salt=salt,
-                            write_metrics=False,
-                            timeout_sec=1200,
-                        )
-                        if not (i == 0 and not warmed):  # drop JIT warmup rep
-                            best = min(best, stats["apply_wall_s"])
-                        shutil.rmtree(work, ignore_errors=True)
-                    warmed = True
-                    entry[label] = round(EVENTS / best, 1)
-                points[str(frac)] = entry
+                best = float("inf")
+                reps = REPS + (0 if warmed else 1)
+                for i in range(reps):
+                    work = tempfile.mkdtemp(prefix="cdc-skew-")
+                    t = create_docs_table(
+                        spark, os.path.join(work, "tbl"), n_buckets=64
+                    )
+                    stats = run_replay(
+                        spark,
+                        t.root,
+                        events_dir,
+                        os.path.join(work, "ckpt"),
+                        max_files_per_trigger=64,
+                        write_metrics=False,
+                        timeout_sec=1200,
+                    )
+                    if not (i == 0 and not warmed):  # drop JIT warmup rep
+                        best = min(best, stats["apply_wall_s"])
+                    shutil.rmtree(work, ignore_errors=True)
+                warmed = True
+                points[str(frac)] = round(EVENTS / best, 1)
             finally:
                 shutil.rmtree(events_dir, ignore_errors=True)
         print(
@@ -96,7 +94,6 @@ def main() -> None:
                     "cores": CORES,
                     "n_docs": DOCS,
                     "n_events": EVENTS,
-                    "salt": SALT,
                     "points": points,
                 }
             )

@@ -93,12 +93,11 @@ def test_kill_and_resume_from_checkpoint(spark, tmp_path):
     _check(t, ev_dir)
 
 
-def test_hot_key_skew_with_salt(spark, tmp_path):
+def test_hot_key_skew(spark, tmp_path):
     ev_dir = _gen(spark, tmp_path, hot_key_fraction=0.10)
     t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=8)
     run_replay(
-        spark, t.root, ev_dir, str(tmp_path / "ckpt"), salt=16,
-        max_files_per_trigger=4,
+        spark, t.root, ev_dir, str(tmp_path / "ckpt"), max_files_per_trigger=4
     )
     _check(t, ev_dir)
 

@@ -35,15 +35,15 @@ def test_everything_at_once(spark, tmp_path):
     )
     t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=8)
     ckpt = str(tmp_path / "ckpt")
-    # crash after 2 batches, then resume; salt on; compaction mid-run
+    # crash after 2 batches, then resume; compaction mid-run
     run_replay(
         spark, t.root, ev_dir, ckpt,
-        schema=v2, max_files_per_trigger=3, salt=8, compact_every=10,
+        schema=v2, max_files_per_trigger=3, compact_every=10,
         stop_after_batches=2,
     )
     stats = run_replay(
         spark, t.root, ev_dir, ckpt,
-        schema=v2, max_files_per_trigger=3, salt=8, compact_every=10,
+        schema=v2, max_files_per_trigger=3, compact_every=10,
     )
     assert stats["batches"] + stats["skipped"] >= 1
     t.refresh()

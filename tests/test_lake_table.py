@@ -96,17 +96,13 @@ def test_compaction_preserves_state_and_tombstones(spark, tmp_path):
     assert raw.where(F.col("_deleted")).count() == 0
 
 
-def test_salted_reduce_matches_plain(spark, tmp_path):
-    t1 = _mk_table(spark, tmp_path / "a")
-    t2 = _mk_table(spark, tmp_path / "b")
+def test_hot_key_reduce_keeps_latest_version(spark, tmp_path):
+    t = _mk_table(spark, tmp_path)
     hot = [(i, "U", "hot", [i], 1, "web", None) for i in range(200)] + list(E)
-    t1.merge_batch(_events(spark, hot), batch_id=0)
-    t2.merge_batch(_events(spark, hot), batch_id=0, salt=8)
-    a = sorted(map(tuple, t1.read().collect()))
-    b = sorted(map(tuple, t2.read().collect()))
-    assert a == b
-    hot_row = {r["doc_id"]: r for r in t1.read().collect()}["hot"]
-    assert hot_row["tokens"] == [199]
+    t.merge_batch(_events(spark, hot), batch_id=0)
+    rows = {r["doc_id"]: r for r in t.read().collect()}
+    assert sorted(rows) == ["d1", "d3", "hot"]
+    assert rows["hot"]["tokens"] == [199]
 
 
 def _agg_steps(df) -> list:
@@ -133,8 +129,7 @@ def _agg_steps(df) -> list:
 @pytest.mark.parametrize("patch", [False, True])
 def test_resolve_combines_map_side(spark, tmp_path, patch):
     """The in-batch resolve aggregates partially before each shuffle
-    (the map-side combine that defends against hot keys); salting
-    adds a (key, salt) phase in front of the per-key one."""
+    (the map-side combine that defends against hot keys)."""
     t = LakeTable.create(
         spark,
         str(tmp_path / "tbl"),
@@ -150,14 +145,59 @@ def test_resolve_combines_map_side(spark, tmp_path, patch):
         ("exchange", ("doc_id",)),
         ("final", ("doc_id",)),
     ]
-    plain = t._resolve(events, snap, DOC_SCHEMA.fieldNames(), salt=None)
-    assert _agg_steps(plain) == per_key
-    salted = t._resolve(events, snap, DOC_SCHEMA.fieldNames(), salt=8)
-    assert _agg_steps(salted) == [
-        ("partial", ("doc_id", "_salt")),
-        ("exchange", ("doc_id", "_salt")),
-        ("final", ("doc_id", "_salt")),
-    ] + per_key
+    assert _agg_steps(t._resolve(events, snap, DOC_SCHEMA.fieldNames())) == per_key
+
+
+def _stage_records(spark, before: set) -> list:
+    """(input, shuffle-write) record counts of every stage run by the
+    jobs started since the job ids ``before``."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    return [
+        (sd.inputRecords(), sd.shuffleWriteRecords())
+        for job in _jobs(spark) - before
+        for sd in map(store.lastStageAttempt, sc.statusTracker().getJobInfo(job).stageIds)
+    ]
+
+
+def test_hot_key_ships_one_row_per_map_task(spark, tmp_path, split_bytes):
+    """The bound that makes the resolve skew-proof: a batch whose events
+    all hit one key, read as P input partitions, sends exactly P rows
+    into the resolve's exchange (one per map task, after the map-side
+    combine), however many events each partition holds."""
+    parts, per_part = 3, 20_000
+    ev_dir = str(tmp_path / "ev")
+    tokens = [(F.rand(seed) * 2**31).cast("int") for seed in range(8)]
+    (
+        spark.range(parts * per_part)
+        .select(
+            F.col("id").alias("seq"),
+            F.lit("U").alias("op"),
+            F.lit("hot").alias("doc_id"),
+            F.array(*tokens).alias("tokens"),
+            F.lit(8).alias("n_tok"),
+            F.lit("web").alias("source"),
+            F.lit(None).cast("timestamp").alias("ts"),
+        )
+        .repartition(parts)
+        .write.parquet(ev_dir)
+    )
+    t = _mk_table(spark, tmp_path)
+    one_mb = 1024 * 1024
+    # A 1 MB split (the open cost) gives each file its own partition,
+    # and input above it skips the one-task path, so the exchange runs.
+    with split_bytes(str(one_mb)):
+        events = spark.read.schema(CHANGE_SCHEMA).parquet(ev_dir)
+        assert t._size_estimate(events) > one_mb
+        assert events.rdd.getNumPartitions() >= parts
+        before = _jobs(spark)
+        t.merge_batch(events, batch_id=0)
+    maps = [w for r, w in _stage_records(spark, before) if r == parts * per_part]
+    assert maps == [parts]
+    latest = events.orderBy(F.desc("seq")).first()
+    assert [tuple(r) for r in t.read().collect()] == [
+        ("hot", latest["tokens"], 8, "web")
+    ]
 
 
 def test_key_type_change_rejected_before_write(spark, tmp_path):

@@ -165,18 +165,6 @@ def test_patch_gc_keeps_tombstones_guarding_newer_overlays(spark, tmp_path):
     assert [tuple(r) for r in t.read().collect()] == [("a", [1], 1, "books")]
 
 
-def test_patch_salted_reduce_matches_plain(spark, tmp_path):
-    ev_dir = str(tmp_path / "events")
-    _write_chunked(_patch_stream(spark), ev_dir, n_chunks=1, seed=55)
-    ev = spark.read.option("recursiveFileLookup", "true").parquet(ev_dir)
-    t1 = _create_patch_table(spark, str(tmp_path / "t1"))
-    t1.merge_batch(ev, batch_id=0)
-    t2 = _create_patch_table(spark, str(tmp_path / "t2"))
-    t2.merge_batch(ev, batch_id=0, salt=8)
-    _check(t1, ev_dir)
-    _check(t2, ev_dir)
-
-
 def test_patch_with_schema_evolution(spark, tmp_path):
     """Batch 2 adds a new column (lang) AND patches that set ONLY the
     new column: the storage schema gains lang + _ps_lang, old files
