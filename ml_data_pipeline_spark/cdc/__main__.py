@@ -76,7 +76,6 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--max-bytes-per-trigger", type=int, default=None,
                    help="byte-denominated batch budget (replaces the "
                         "file-count cap when set)")
-    r.add_argument("--compact-every", type=int, default=None)
     r.add_argument("--policy-compact", action="store_true",
                    help="size-tiered per-bucket compaction policy")
     r.add_argument("--policy-max-delta-files", type=int, default=8)
@@ -242,7 +241,6 @@ def main(argv: list[str] | None = None) -> int:
             schema=schema,
             max_files_per_trigger=args.max_files_per_trigger,
             max_bytes_per_trigger=args.max_bytes_per_trigger,
-            compact_every=args.compact_every,
             compaction_policy=policy,
             vacuum_every_compactions=args.vacuum_every_compactions,
             vacuum_keep_snapshots=args.vacuum_keep,

@@ -64,26 +64,31 @@ def apply_batch(
     batch_id: int | None = None,
     *,
     stream_id: str = "cdc",
-    write_metrics: bool = True,
     collect_input_lineage: bool = False,
 ) -> dict:
     """Apply one micro-batch of change events; record metrics + lineage.
 
     Idempotent: a replayed ``batch_id`` (streaming restart re-delivers
     the last uncommitted batch) is skipped via the snapshot's per-stream
-    watermark, so the sink is exactly-once end-to-end.
+    watermark, so the sink is exactly-once end-to-end. Every call, a
+    skipped one too, appends one ``<table>/metrics`` row; an applied
+    batch also appends one ``<table>/lineage`` row per (written file,
+    input file) pair.
 
-    ``collect_input_lineage`` opts into the fallback that recovers
-    input file names with an extra ``input_file_name()`` scan when the
-    metadata-only ``inputFiles()`` call comes back empty (foreachBatch
-    DataFrames often report none). It is OFF by default because that
-    fallback re-reads the whole micro-batch input — roughly doubling
-    input IO per batch — for advisory lineage rows only.
+    Input files come from the metadata-only ``inputFiles()`` call. A
+    frame read straight from files reports them; a Structured
+    Streaming ``foreachBatch`` frame reports none (PySpark 4.1), so a
+    streaming replay's lineage rows carry a null ``input_file``.
+    ``collect_input_lineage`` opts into the fallback that recovers the
+    names with an extra ``input_file_name()`` scan when ``inputFiles()``
+    comes back empty. It is OFF by default because that fallback
+    re-reads the whole micro-batch input — roughly doubling input IO
+    per batch — for advisory lineage rows only.
     """
     t0 = time.monotonic()
     try:
         input_files = list(batch_df.inputFiles())
-        if not input_files and write_metrics and collect_input_lineage:
+        if not input_files and collect_input_lineage:
             input_files = [
                 r[0]
                 for r in batch_df.select(F.input_file_name()).distinct().collect()
@@ -95,8 +100,7 @@ def apply_batch(
     wall_ms = (time.monotonic() - t0) * 1000.0
     res["wall_ms"] = wall_ms
     res["input_files"] = input_files
-    if write_metrics:
-        _record(table, res)
+    _record(table, res)
     return res
 
 

@@ -73,7 +73,6 @@ def main() -> None:
                 events_dir,
                 os.path.join(work, "ckpt"),
                 max_files_per_trigger=128,  # 256 chunk files → 2 micro-batches
-                write_metrics=False,
             )
             walls.append(time.monotonic() - t0)
             apply_walls.append(stats["apply_wall_s"])

@@ -41,11 +41,12 @@ def run_multi_table_replay(
     stream_id: str = "cdc",
     schema: T.StructType | None = None,
     max_files_per_trigger: int = 8,
-    write_metrics: bool = False,
     timeout_sec: float = 600.0,
 ) -> dict:
     """Replay a multi-table changelog into ``table_roots`` (name→root).
 
+    Each table records a ``<table>/metrics`` row per micro-batch under
+    its own ``stream_id`` (see ``apply_batch``).
     Returns {"batches": n, "applied": {table: n_applied}}.
     """
     schema = schema or MULTI_CHANGE_SCHEMA
@@ -66,7 +67,6 @@ def run_multi_table_replay(
                     part,
                     batch_id,
                     stream_id=f"{stream_id}:{name}",
-                    write_metrics=write_metrics,
                 )
                 if not res.get("skipped"):
                     stats["applied"][name] += 1

@@ -33,11 +33,9 @@ def run_replay(
     schema=None,
     max_files_per_trigger: int = 4,
     max_bytes_per_trigger: int | None = None,
-    compact_every: int | None = None,
     compaction_policy=None,
     vacuum_every_compactions: int | None = None,
     vacuum_keep_snapshots: int = 2,
-    write_metrics: bool = True,
     collect_input_lineage: bool = False,
     stop_after_batches: int | None = None,
     timeout_sec: float = 600.0,
@@ -47,12 +45,14 @@ def run_replay(
     ``stop_after_batches`` kills the query mid-replay (the
     kill-and-resume test hook); rerunning with the same checkpoint
     resumes and converges to the same final state.
-    ``compaction_policy`` (see lake.compaction.SizeTieredPolicy)
-    supersedes the blunt ``compact_every`` file-count heuristic: after
-    each applied batch it selects the buckets whose delta tier warrants
-    folding, and only those buckets are compacted.
+    Every applied batch appends its ``<table>/metrics`` and
+    ``<table>/lineage`` rows (see ``apply_batch``).
+    ``compaction_policy`` (see lake.compaction.SizeTieredPolicy) is the
+    replay's only compaction trigger: after each applied batch it
+    selects the buckets whose delta tier warrants folding, and only
+    those buckets are compacted; without a policy nothing is compacted.
     ``vacuum_every_compactions`` bounds on-disk garbage on a long
-    replay: after every K compaction commits, files unreachable from
+    replay: after every K-th compaction commit, files unreachable from
     the ``vacuum_keep_snapshots`` newest snapshots are deleted and
     older snapshot metadata expires (the retention knob — time travel
     is traded for disk, exactly like Iceberg's expire_snapshots).
@@ -79,7 +79,6 @@ def run_replay(
             batch_df,
             batch_id,
             stream_id=stream_id,
-            write_metrics=write_metrics,
             collect_input_lineage=collect_input_lineage,
         )
         # Steady-state accounting: the summed apply walls (scan →
@@ -97,19 +96,15 @@ def run_replay(
                 if victims:
                     table.compact(buckets=victims)
                     stats["compactions"] += 1
-            elif compact_every and table.delta_file_count() >= compact_every:
-                table.compact()
-                stats["compactions"] += 1
-            if (
-                vacuum_every_compactions
-                and stats["compactions"] > 0
-                and stats["compactions"] % vacuum_every_compactions == 0
-                and stats["compactions"] // vacuum_every_compactions
-                > stats["vacuums"]
-            ):
-                res_v = table.vacuum(keep_snapshots=vacuum_keep_snapshots)
-                stats["vacuums"] += 1
-                stats["vacuumed_files"] += res_v["removed_files"]
+                    if (
+                        vacuum_every_compactions
+                        and stats["compactions"] % vacuum_every_compactions == 0
+                    ):
+                        res_v = table.vacuum(
+                            keep_snapshots=vacuum_keep_snapshots
+                        )
+                        stats["vacuums"] += 1
+                        stats["vacuumed_files"] += res_v["removed_files"]
         if (
             stop_after_batches is not None
             and stats["batches"] >= stop_after_batches

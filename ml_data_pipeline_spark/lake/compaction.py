@@ -1,7 +1,8 @@
 """Size-tiered, per-bucket compaction scheduling.
 
-Replaces the blunt "compact everything once N delta files exist"
-heuristic with the policy a real lakehouse maintenance loop runs
+The only compaction trigger of a replay (``run_replay(
+compaction_policy=)``, CLI ``replay --policy-compact``), and the policy
+a real lakehouse maintenance loop runs
 (reference analog: the pipeline's declared maintenance knobs,
 /root/reference/ml-data/ml-data-core/src/schedule.rs:33-42): each
 bucket is judged on its own delta tier, and only buckets whose deltas

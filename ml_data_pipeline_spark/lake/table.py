@@ -168,9 +168,10 @@ class Snapshot:
     watermarks: dict[str, int] = field(default_factory=dict)  # stream_id -> batch_id
     summary: dict = field(default_factory=dict)
     # Table properties: parquet writer knobs applied to every data-file
-    # write — e.g. "parquet.block.size" (row-group size),
-    # "parquet.bloom.filter.enabled#<col>", "parquet.enable.dictionary"
-    # (reference analog: the parquet writer's properties,
+    # write — "parquet.block.size" (row-group size),
+    # "parquet.enable.dictionary" and "parquet.compression"; any other
+    # parquet.* key warns and is ignored (_write_files) (reference
+    # analog: the parquet writer's properties,
     # ml-data-readers/src/parquet/writer.rs:37-56).
     properties: dict = field(default_factory=dict)
     # Key columns after ``key_col`` on a composite-key table: a row's

@@ -109,9 +109,3 @@ def build_session(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def get_or_create(cores: int | None = None) -> SparkSession:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        return active
-    return build_session(cores=cores)

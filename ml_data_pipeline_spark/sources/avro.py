@@ -168,19 +168,15 @@ def _decode_value(mv: memoryview, pos: int, dt: T.DataType):
 # ------------------------------------------------------------ container file
 
 
-def _sync_marker(sync: bytes | None) -> bytes:
-    """The container's 16-byte sync marker (random when not given)."""
+def _container(
+    schema: T.StructType, n_rows: int, block: bytes, sync: bytes | None
+) -> bytes:
+    """Frame one encoded row block as an Avro Object Container File
+    (null codec): header, then the block when it holds rows. The
+    16-byte sync marker is random when not given."""
     sync = sync or uuid.uuid4().bytes
     if len(sync) != 16:
         raise ValueError(f"avro sync marker must be 16 bytes, got {len(sync)}")
-    return sync
-
-
-def write_avro_bytes(
-    rows: list[tuple], schema: T.StructType, sync: bytes | None = None
-) -> bytes:
-    """Encode rows as one Avro Object Container File (null codec)."""
-    sync = _sync_marker(sync)
     buf = bytearray()
     buf += MAGIC
     meta = {
@@ -193,16 +189,23 @@ def write_avro_bytes(
         _write_bytes(buf, v)
     write_long(buf, 0)  # end of metadata map
     buf += sync
-    if rows:
-        block = bytearray()
-        for row in rows:
-            for v, f in zip(row, schema.fields):
-                _encode_value(block, v, f.dataType)
-        write_long(buf, len(rows))
+    if n_rows:
+        write_long(buf, n_rows)
         write_long(buf, len(block))
         buf += block
         buf += sync
     return bytes(buf)
+
+
+def write_avro_bytes(
+    rows: list[tuple], schema: T.StructType, sync: bytes | None = None
+) -> bytes:
+    """Encode rows as one Avro Object Container File (null codec)."""
+    block = bytearray()
+    for row in rows:
+        for v, f in zip(row, schema.fields):
+            _encode_value(block, v, f.dataType)
+    return _container(schema, len(rows), block, sync)
 
 
 def _encode_block_numpy(pdf, schema: T.StructType) -> bytes | None:
@@ -327,25 +330,7 @@ def write_avro_pandas(
         return write_avro_bytes(
             list(pdf.itertuples(index=False, name=None)), schema, sync
         )
-    sync = _sync_marker(sync)
-    buf = bytearray()
-    buf += MAGIC
-    meta = {
-        "avro.schema": avro_schema_json(schema).encode(),
-        "avro.codec": b"null",
-    }
-    write_long(buf, len(meta))
-    for k, v in meta.items():
-        _write_bytes(buf, k.encode())
-        _write_bytes(buf, v)
-    write_long(buf, 0)
-    buf += sync
-    if len(pdf):
-        write_long(buf, len(pdf))
-        write_long(buf, len(block))
-        buf += block
-        buf += sync
-    return bytes(buf)
+    return _container(schema, len(pdf), block, sync)
 
 
 def read_avro_bytes(blob: bytes, schema: T.StructType) -> list[tuple]:

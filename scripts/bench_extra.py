@@ -45,10 +45,9 @@ def main() -> None:
     args = ap.parse_args()
 
     from ml_data_pipeline_spark import queries as registry
-    from ml_data_pipeline_spark.session import build_session
+    from ml_data_pipeline_spark.session import build_session, default_parallelism
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(app_name="bench_extra", cores=cpus)
+    spark = build_session(app_name="bench_extra", cores=default_parallelism())
     qs = registry.queries()
     if args.queries:
         want = args.queries.split(",")

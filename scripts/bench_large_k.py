@@ -36,9 +36,9 @@ def main() -> None:
     args = ap.parse_args()
 
     from ml_data_pipeline_spark.operators import similarity as S
-    from ml_data_pipeline_spark.session import build_session
+    from ml_data_pipeline_spark.session import build_session, default_parallelism
 
-    spark = build_session(app_name="bench_large_k", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = build_session(app_name="bench_large_k", cores=default_parallelism())
 
     assert args.k > S.KM_ASSIGN_GEMM_CELLS, (
         f"k={args.k} must exceed KM_ASSIGN_GEMM_CELLS="

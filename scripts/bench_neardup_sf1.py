@@ -26,10 +26,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from ml_data_pipeline_spark.operators import similarity as S
-    from ml_data_pipeline_spark.session import build_session
+    from ml_data_pipeline_spark.session import build_session, default_parallelism
     from ml_data_pipeline_spark.sources.tables import load_table
 
-    spark = build_session(app_name="neardup-sf1", cores=16)
+    spark = build_session(app_name="neardup-sf1", cores=default_parallelism())
     n = load_table(spark, sf_dir, "embeddings").count()
     n_cells = S.derived_n_cells(n)
     cents = S.ivf_quantizer(spark, sf_dir)  # derived cells, sampled fit

@@ -13,7 +13,8 @@ This script measures a patch-heavy replay at N vs 4N cores:
      rationale as cdc/bench_worker.py), best-of-reps.
 
 Usage: python scripts/bench_patch_stream.py [--docs 200000]
-         [--events 4000000] [--reps 3] [--n 2]
+         [--events 4000000] [--reps 3] [--n N]
+N defaults to bench.py's pair: max(1, cores // 16).
 Prints one JSON line with events/sec at N and 4N and the efficiency.
 """
 
@@ -28,6 +29,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from ml_data_pipeline_spark.session import default_parallelism  # noqa: E402
 
 WORKER = "__patch_worker__"
 
@@ -87,11 +90,13 @@ def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == WORKER:
         _worker()
         return
+    cores = default_parallelism()
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=200000)
     ap.add_argument("--events", type=int, default=4000000)
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--n", type=int, default=2)
+    # N vs 4N pair as in bench.py: N = cores/16, at least 1.
+    ap.add_argument("--n", type=int, default=max(1, cores // 16))
     ap.add_argument("--patch-fraction", type=float, default=0.5)
     args = ap.parse_args()
 
@@ -100,8 +105,7 @@ def main() -> None:
     from ml_data_pipeline_spark.cdc.events import generate_change_stream
     from ml_data_pipeline_spark.session import build_session
 
-    spark = build_session(app_name="patch-bench-gen",
-                          cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = build_session(app_name="patch-bench-gen", cores=cores)
     raw = tempfile.mkdtemp(prefix="patch-raw-")
     out = tempfile.mkdtemp(prefix="patch-events-")
     generate_change_stream(

@@ -77,7 +77,6 @@ def main() -> None:
                         events_dir,
                         os.path.join(work, "ckpt"),
                         max_files_per_trigger=64,
-                        write_metrics=False,
                         timeout_sec=1200,
                     )
                     if not (i == 0 and not warmed):  # drop JIT warmup rep

@@ -14,7 +14,8 @@ Usage: python scripts/bench_state_scaling.py [events_dir]
   With no argument, generates 100M events / 2M docs into a temp dir
   (reused across both bucket levels, deleted at the end). Pass an
   existing events dir to skip generation. Env knobs:
-  STATE_DOCS / STATE_EVENTS / STATE_CORES / STATE_REPS / STATE_BUCKETS
+  STATE_DOCS / STATE_EVENTS / STATE_CORES (default: the host's cores,
+  SPARK_GRAFT_CPUS else os.cpu_count()) / STATE_REPS / STATE_BUCKETS
   (comma list, default "64,128").
 
 Prints one JSON line per bucket level plus a summary line.
@@ -33,9 +34,11 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+from ml_data_pipeline_spark.session import default_parallelism  # noqa: E402
+
 DOCS = int(os.environ.get("STATE_DOCS", "2000000"))
 EVENTS = int(os.environ.get("STATE_EVENTS", "100000000"))
-CORES = int(os.environ.get("STATE_CORES", "8"))
+CORES = int(os.environ.get("STATE_CORES") or default_parallelism())
 REPS = int(os.environ.get("STATE_REPS", "3"))
 BUCKETS = [
     int(x) for x in os.environ.get("STATE_BUCKETS", "64,128").split(",")
@@ -50,7 +53,7 @@ def main() -> None:
         from ml_data_pipeline_spark.cdc.events import generate_change_stream
         from ml_data_pipeline_spark.session import build_session
 
-        spark = build_session(app_name="state-gen", cores=32)
+        spark = build_session(app_name="state-gen", cores=default_parallelism())
         generate_change_stream(
             spark,
             events_dir,

@@ -8,8 +8,11 @@ the sweep quantifies the throughput side of that trade on this host.
 
 Run standalone (NOT alongside any other Spark job — timing):
     python scripts/bench_sweep.py
+Env knobs: SWEEP_CORES (default: the host's cores, SPARK_GRAFT_CPUS
+else os.cpu_count()) / SWEEP_DOCS / SWEEP_EVENTS / SWEEP_SIZES /
+SWEEP_REPS.
 Prints one JSON line:
-    {"metric": "cdc_batch_size_sweep", "cores": 8,
+    {"metric": "cdc_batch_size_sweep", "cores": N,
      "n_events": ..., "points": {"16": ev_s, "64": ..., ...}}
 """
 
@@ -23,11 +26,13 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CORES = int(os.environ.get("SWEEP_CORES", "8"))
+from ml_data_pipeline_spark.session import default_parallelism  # noqa: E402
+
+CORES = int(os.environ.get("SWEEP_CORES") or default_parallelism())
 DOCS = int(os.environ.get("SWEEP_DOCS", "200000"))
 EVENTS = int(os.environ.get("SWEEP_EVENTS", "8000000"))
-# The generator writes 8 chunks × 8 files at 8 cores = 64 binlog files,
-# so these sizes give 16 / 4 / 1 micro-batches respectively.
+# The generator writes 8 chunks × CORES files (64 binlog files at 8
+# cores, where these sizes give 16 / 4 / 1 micro-batches).
 SIZES = [int(x) for x in os.environ.get("SWEEP_SIZES", "4,16,64").split(",")]
 REPS = int(os.environ.get("SWEEP_REPS", "2"))
 
@@ -70,7 +75,6 @@ def main() -> None:
                     events_dir,
                     os.path.join(work, "ckpt"),
                     max_files_per_trigger=size,
-                    write_metrics=False,
                     timeout_sec=1200,
                 )
                 best = min(best, stats["apply_wall_s"])

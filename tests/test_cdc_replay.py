@@ -27,6 +27,7 @@ from ml_data_pipeline_spark.cdc.oracle import (
     load_events_pandas,
 )
 from ml_data_pipeline_spark.cdc.stream import run_replay
+from ml_data_pipeline_spark.lake.compaction import SizeTieredPolicy
 from ml_data_pipeline_spark.lake.table import LakeTable
 
 N_DOCS, N_EVENTS = 300, 3000
@@ -105,10 +106,12 @@ def test_hot_key_skew(spark, tmp_path):
 def test_replay_with_periodic_compaction(spark, tmp_path):
     ev_dir = _gen(spark, tmp_path)
     t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=8)
-    run_replay(
+    stats = run_replay(
         spark, t.root, ev_dir, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, compact_every=8,
+        max_files_per_trigger=1,
+        compaction_policy=SizeTieredPolicy(max_delta_files=4),
     )
+    assert stats["compactions"] >= 1
     _check(t, ev_dir)
 
 

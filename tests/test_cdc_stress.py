@@ -15,6 +15,7 @@ from ml_data_pipeline_spark.cdc.oracle import (
     load_events_pandas,
 )
 from ml_data_pipeline_spark.cdc.stream import run_replay
+from ml_data_pipeline_spark.lake.compaction import SizeTieredPolicy
 from ml_data_pipeline_spark.lake.table import LakeTable
 
 
@@ -36,16 +37,19 @@ def test_everything_at_once(spark, tmp_path):
     t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=8)
     ckpt = str(tmp_path / "ckpt")
     # crash after 2 batches, then resume; compaction mid-run
-    run_replay(
+    first = run_replay(
         spark, t.root, ev_dir, ckpt,
-        schema=v2, max_files_per_trigger=3, compact_every=10,
+        schema=v2, max_files_per_trigger=3,
+        compaction_policy=SizeTieredPolicy(max_delta_files=2),
         stop_after_batches=2,
     )
     stats = run_replay(
         spark, t.root, ev_dir, ckpt,
-        schema=v2, max_files_per_trigger=3, compact_every=10,
+        schema=v2, max_files_per_trigger=3,
+        compaction_policy=SizeTieredPolicy(max_delta_files=2),
     )
     assert stats["batches"] + stats["skipped"] >= 1
+    assert first["compactions"] + stats["compactions"] >= 1
     t.refresh()
     assert "lang" in t.schema.fieldNames()
     expected = expected_state(load_events_pandas(ev_dir))

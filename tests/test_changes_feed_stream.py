@@ -45,7 +45,7 @@ def test_feed_replicates_table_incrementally(spark, tmp_path):
         ],
     ]
     for i, rows in enumerate(batches):
-        apply_batch(a, _events(spark, rows), batch_id=i, write_metrics=False)
+        apply_batch(a, _events(spark, rows), batch_id=i)
         out = feed.pump_into(b)
         assert out["advanced"]
         assert _state(b) == _state(a)
@@ -72,7 +72,6 @@ def test_feed_replicates_table_incrementally(spark, tmp_path):
         a,
         _events(spark, [(8, "D", "d3", None, None, None, None)]),
         batch_id=3,
-        write_metrics=False,
     )
     assert feed2.pump_into(b)["advanced"]
     assert _state(b) == _state(a)
@@ -96,7 +95,6 @@ def test_feed_replicates_through_schema_evolution(spark, tmp_path):
         _events(spark, [(1, "I", "d1", [1], 1, "web", None),
                         (2, "I", "d2", [2], 1, "web", None)]),
         batch_id=0,
-        write_metrics=False,
     )
     feed.pump_into(b)
 
@@ -108,7 +106,7 @@ def test_feed_replicates_through_schema_evolution(spark, tmp_path):
          (4, "I", "d3", [3], 1, "code", None, "de")],
         v2,
     )
-    apply_batch(a, ev2, batch_id=1, write_metrics=False)
+    apply_batch(a, ev2, batch_id=1)
     feed.pump_into(b)
 
     assert "lang" in b.schema.fieldNames()

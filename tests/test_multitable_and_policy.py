@@ -8,7 +8,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from ml_data_pipeline_spark.cdc.apply import create_docs_table
+from ml_data_pipeline_spark.cdc.apply import create_docs_table, read_metrics
 from ml_data_pipeline_spark.cdc.events import (
     DOC_SCHEMA,
     change_events_df,
@@ -73,6 +73,34 @@ def test_multi_table_demux_replay(spark, tmp_path):
             events[events["table"] == name].drop(columns=["table"])
         )
         assert_state_equal(got, want)
+
+
+def test_every_applied_batch_records_metrics(spark, tmp_path):
+    """Both replay loops, with default arguments, append one
+    ``<table>/metrics`` row per applied batch."""
+    ev_dir = str(tmp_path / "events")
+    generate_change_stream(spark, ev_dir, 60, 600, n_chunks=2, seed=9)
+    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=4)
+    stats = run_replay(spark, t.root, ev_dir, str(tmp_path / "ckpt"))
+    m = read_metrics(t).toPandas()
+    assert stats["batches"] >= 1 and stats["skipped"] == 0
+    assert len(m) == stats["batches"]
+    assert sorted(m["batch_id"]) == list(range(stats["batches"]))
+    assert not m["skipped"].any()
+
+    multi_dir = str(tmp_path / "multi")
+    change_events_df(spark, 40, 400, seed=3).withColumn(
+        "table", F.lit("alpha")
+    ).repartition(12).write.parquet(multi_dir)
+    root = str(tmp_path / "t_alpha")
+    create_docs_table(spark, root, n_buckets=4)
+    mstats = run_multi_table_replay(
+        spark, {"alpha": root}, multi_dir, str(tmp_path / "ckpt_multi")
+    )
+    m = read_metrics(LakeTable.load(spark, root)).toPandas()
+    assert mstats["batches"] >= 2
+    assert len(m) == mstats["applied"]["alpha"] == mstats["batches"]
+    assert set(m["stream_id"]) == {"cdc:alpha"}
 
 
 def test_size_tiered_policy_selection():

@@ -65,7 +65,7 @@ def test_any_order_any_batching_converges(spark, tmp_path_factory, log):
     per = max(1, len(events) // n_batches)
     for i in range(0, len(events), per):
         batch = spark.createDataFrame(events[i : i + per], CHANGE_SCHEMA)
-        apply_batch(t, batch, batch_id=i, write_metrics=False)
+        apply_batch(t, batch, batch_id=i)
     expected = expected_state(
         pd.DataFrame(
             events,

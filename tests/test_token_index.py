@@ -58,7 +58,6 @@ def test_token_index_tracks_updates_deletes(spark, tmp_path):
             ],
         ),
         batch_id=0,
-        write_metrics=False,
     )
     ix.sync(feed)
     _check_full(ix, t)
@@ -74,7 +73,6 @@ def test_token_index_tracks_updates_deletes(spark, tmp_path):
             ],
         ),
         batch_id=1,
-        write_metrics=False,
     )
     ix.sync(feed)
     _check_full(ix, t)
@@ -127,7 +125,6 @@ def test_index_rebuild_after_vacuum_expired_cursor(spark, tmp_path):
             ],
         ),
         batch_id=0,
-        write_metrics=False,
     )
     ix.sync(feed)
     _check_full(ix, t)
@@ -138,7 +135,6 @@ def test_index_rebuild_after_vacuum_expired_cursor(spark, tmp_path):
         _events(spark, [(3, "U", "a", [10, 13], 2, "web", None),
                         (4, "D", "b", None, None, None, None)]),
         batch_id=1,
-        write_metrics=False,
     )
     t.compact()
     t.vacuum(keep_snapshots=1, orphan_grace_sec=0.0)
@@ -163,7 +159,6 @@ def test_index_rebuild_after_vacuum_expired_cursor(spark, tmp_path):
         t,
         _events(spark, [(5, "I", "c", [13, 14], 2, "code", None)]),
         batch_id=2,
-        write_metrics=False,
     )
     assert ix2.sync(feed2)["windows"] == 1
     _check_full(ix2, t)
@@ -189,7 +184,6 @@ def test_contaminated_docs_exact_subsequence(spark, tmp_path):
             ],
         ),
         batch_id=0,
-        write_metrics=False,
     )
     ix.sync(feed)
     got = {r["doc_id"] for r in ix.contaminated_docs(t, [1, 2, 3]).collect()}
@@ -234,7 +228,6 @@ def test_stop_tokens_bound_skew_and_still_verify(spark, tmp_path):
             ],
         ),
         batch_id=0,
-        write_metrics=False,
     )
     ix.sync(feed)
     # no postings rows exist for the stop token anywhere in the index
@@ -262,7 +255,6 @@ def test_null_tokens_update_retracts_postings(spark, tmp_path):
         t,
         _events(spark, [(1, "I", "a", [1, 2], 2, "web", None)]),
         batch_id=0,
-        write_metrics=False,
     )
     ix.sync(feed)
     assert {r["doc_id"] for r in ix.postings(1).collect()} == {"a"}
@@ -270,7 +262,6 @@ def test_null_tokens_update_retracts_postings(spark, tmp_path):
         t,
         _events(spark, [(2, "U", "a", None, None, "web", None)]),
         batch_id=1,
-        write_metrics=False,
     )
     ix.sync(feed)
     assert ix.postings(1).count() == 0
@@ -292,7 +283,7 @@ def test_probe_built_before_compact_still_reads(spark, tmp_path):
              (4, "D", "b", None, None, None, None)],
         ]
     ):
-        apply_batch(t, _events(spark, rows), batch_id=i, write_metrics=False)
+        apply_batch(t, _events(spark, rows), batch_id=i)
         ix.sync(feed)
     p = ix.postings(10)
     ix.compact()
@@ -351,7 +342,6 @@ def test_rebuild_repairs_lost_cursor_commit(spark, tmp_path):
             ],
         ),
         batch_id=0,
-        write_metrics=False,
     )
     ix = TokenIndex.create(spark, str(tmp_path / "ix"), n_buckets=4)
     feed = ChangesFeed(t, str(tmp_path / "cursor.json"))
@@ -374,7 +364,6 @@ def test_rebuild_repairs_lost_cursor_commit(spark, tmp_path):
         t,
         _events(spark, [(3, "U", "a", [10, 13], 2, "web", None)]),
         batch_id=1,
-        write_metrics=False,
     )
     assert ix.sync(feed)["windows"] == 1
     _check_full(ix, t)
@@ -396,7 +385,6 @@ def test_index_files_carry_no_bloom(spark, tmp_path):
             [(i, "I", f"d{i}", [i, i + 1], 2, "web", None) for i in range(20)],
         ),
         batch_id=0,
-        write_metrics=False,
     )
     ix.sync(feed)
     ix.compact()
@@ -439,7 +427,7 @@ def test_index_merge_input_plans_changes_once(spark, tmp_path, monkeypatch):
         [(30, "U", "d1", [8], 1, "web", None), (31, "D", "d2", None, None, None, None)],
     ]
     for i, rows in enumerate(batches):
-        apply_batch(t, _events(spark, rows), batch_id=i, write_metrics=False)
+        apply_batch(t, _events(spark, rows), batch_id=i)
         assert ix.sync(feed)["windows"] == 1
     _check_full(ix, t)
     first, second = (_plan_nodes(p) for p in plans)
