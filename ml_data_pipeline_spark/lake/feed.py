@@ -23,14 +23,16 @@ Delivery contract:
   default) or e.g. ``TokenIndex``'s postings.
 * **One window computation per source handle** — feeds that share a
   source ``LakeTable`` handle and poll at the same cursor get one
-  computation of their window (``LakeTable._changes_once``): a window
-  within the driver's collect bound is collected once and held on the
-  handle, keyed by its two snapshot ids, until the handle's other feeds
-  at that cursor have taken it or the next window replaces it. A
-  replica pump and an index sync at one cursor thus pay the
-  ``changes()`` aggregate, old state included, once between them. A
-  feed with no other feed of its handle at its cursor gets the lazy
-  ``changes()`` frame and holds nothing.
+  computation of their window (``LakeTable._changes_once``). A window
+  whose input is within the driver bound is computed by ``changes()``
+  on the driver as a local relation (a patch table's is collected once
+  from its Spark plan), and held on the handle, keyed by its two
+  snapshot ids, until the handle's other feeds at that cursor have
+  taken it or the next window replaces it. A replica pump and an index
+  sync at one cursor thus pay the window's reduce, old state included,
+  once between them. A window over the bound stays a lazy Spark plan and
+  is never held; a feed with no other feed of its handle at its cursor
+  gets the ``changes()`` frame as it is and holds nothing.
 * **Resumable** — the cursor is a JSON file written with the same
   fsync + atomic-rename protocol as table snapshots; a new
   ``ChangesFeed`` at the same cursor path resumes where the dead one

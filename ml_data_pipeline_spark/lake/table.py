@@ -280,6 +280,89 @@ def _schema_fp(schema: T.StructType) -> str:
     ).hexdigest()[:12]
 
 
+# Key types on which pyarrow's sort and equality group rows as Spark's
+# groupBy does: no NaN (a float key), no collation (a non-default string).
+_DRIVER_KEY_TYPES = (
+    T.StringType(),
+    T.BinaryType(),
+    T.ByteType(),
+    T.ShortType(),
+    T.IntegerType(),
+    T.LongType(),
+    T.DateType(),
+)
+
+
+def _latest_on_driver(rows, keys: Sequence[str], base=None):
+    """``LakeTable._reduce`` of a plain (non-patch) table's storage rows,
+    on the driver: ``rows`` is a pyarrow table, and the result is the
+    index of each key's max-``_seq`` row, in key order. With ``base`` (a
+    numpy bool mask over ``rows``) it is that and, aligned to it, the
+    index of each key's max-``_seq`` row among the ``base`` rows, -1 for
+    a key without one; else that and None.
+
+    Returns None when two DIFFERENT rows tie at a max ``_seq``: Spark's
+    ``max(struct(_seq, *payload, _deleted))`` breaks such a tie field by
+    field, so the caller takes the Spark plan. Identical rows tie often:
+    a compaction inside a ``changes()`` window leaves every key of a
+    rewritten bucket in both the old and the new base file. So the tied
+    pairs are compared column by column in Arrow, never row by row in
+    Python: for the 689 tied pairs of a ``lake_serve`` window a
+    ``to_pylist`` comparison took 22 ms, the Arrow one 0.9 ms. (A NaN
+    payload never compares equal, so its tie takes Spark too.)
+
+    Why a second reduce beside Spark's: a small input runs as one Spark
+    task anyway, so the job is all of the cost. On a 4-vCPU host a ~300
+    KB lookup took ~265 ms through Spark and ~35 ms here; a
+    ``lake_serve`` feed window and compaction are measured at
+    ``_changes_on_driver`` and ``_compact_on_driver``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if any(rows[k].null_count for k in keys):
+        return None  # Spark groups null keys as one; merges never write them
+    n = rows.num_rows
+    order = pc.sort_indices(
+        rows.select([*keys, SEQ_COL]),
+        sort_keys=[*((k, "ascending") for k in keys), (SEQ_COL, "descending")],
+    ).to_numpy()
+    # first[p]: sorted position p starts a key; run[p]: that key's number
+    first = np.ones(n, dtype=bool)
+    if n > 1:
+        first[1:] = False
+        for k in keys:
+            col = rows[k].take(order).combine_chunks()
+            first[1:] |= pc.not_equal(col[1:], col[:-1]).to_numpy(zero_copy_only=False)
+    run = np.cumsum(first) - 1
+    seq = rows[SEQ_COL].to_numpy()[order]
+    tied_a, tied_b = [], []
+
+    def latest(pos):
+        """Sorted positions ``pos`` (ascending) → each key's first one,
+        which holds its max ``_seq``; records the rows tied with it."""
+        head = np.ones(len(pos), dtype=bool)
+        head[1:] = run[pos[1:]] != run[pos[:-1]]
+        win = pos[head]
+        owner = win[np.cumsum(head) - 1]
+        tied = ~head & (seq[pos] == seq[owner])
+        tied_a.append(order[pos[tied]])
+        tied_b.append(order[owner[tied]])
+        return win
+
+    win = latest(np.arange(n))
+    old = None
+    if base is not None:
+        old_win = latest(np.flatnonzero(base[order]))
+        old = np.full(len(win), -1, dtype=np.int64)
+        old[run[old_win]] = order[old_win]
+    a, b = np.concatenate(tied_a), np.concatenate(tied_b)
+    if len(a):
+        rest = [c for c in rows.column_names if c not in keys and c != SEQ_COL]
+        if not rows.select(rest).take(a).equals(rows.select(rest).take(b)):
+            return None
+    return order[win], old
+
+
 class LakeTable:
     """Snapshot-isolated, bucketed, merge-on-read upsert table."""
 
@@ -499,9 +582,11 @@ class LakeTable:
         return int(str(stats.sizeInBytes()))
 
     def _driver_max_bytes(self) -> int:
-        """The largest size estimate of rows this handle collects onto
-        the driver as Arrow: DRIVER_WRITE_MAX_BYTES, and at most one input
-        split (``spark.sql.files.maxPartitionBytes``)."""
+        """The one driver bound: the largest input this handle handles on
+        the driver as Arrow, DRIVER_WRITE_MAX_BYTES and at most one input
+        split (``spark.sql.files.maxPartitionBytes``). ``_write_files``
+        compares a write's size estimate with it; the driver-side reduce
+        (``_reduces_on_driver``) its input files' bytes."""
         conf = self.spark._jsparkSession.sessionState().conf()
         return min(DRIVER_WRITE_MAX_BYTES, conf.filesMaxPartitionBytes())
 
@@ -535,9 +620,96 @@ class LakeTable:
         ``"driver"`` or ``"executors"`` (identical files either way).
         """
         snap = snap or self.snapshot
-        storage = snap.storage_schema()
         bucketed = df.select(*self._write_cols(snap))
-        fp = _schema_fp(storage)
+        # Driver path (``_write_arrow``), for rows whose optimizer size
+        # estimate is at most DRIVER_WRITE_MAX_BYTES (the measured
+        # crossover, above) and at most one input split
+        # (spark.sql.files.maxPartitionBytes). The estimate is of the
+        # compressed input (parquet file sizes): the collected Arrow rows
+        # were 0.8-1.6x it in the measurement (19 MB at a 12 MB estimate,
+        # for random token ids; better-compressing data expands more). An
+        # unknown estimate (RDD-backed frames report Long.MaxValue) takes
+        # the executor path.
+        if self._size_estimate(bucketed) <= self._driver_max_bytes():
+            return self._write_arrow(bucketed.toArrow(), kind, snap), "driver"
+        # Executor path: one shuffle, hash-partitioned then sorted by
+        # bucket → one file per bucket per write, one open writer at
+        # a time. Task retries are safe: the final file name is
+        # deterministic per (write_id, partition, bucket) and
+        # published by atomic rename, so a re-run attempt overwrites
+        # identical content; orphaned .tmp files of failed attempts
+        # are swept by vacuum. One assumption worth naming: with
+        # speculative execution a duplicate attempt can re-publish a
+        # bucket's file AFTER the winner's manifest row was
+        # collected, and shuffle-order nondeterminism means the
+        # re-published file may compress to a slightly different
+        # size — so FileEntry.bytes is advisory for the on-disk
+        # file. Row content and blooms are equivalent either way
+        # (same rows, set semantics), and the only consumer of
+        # `bytes` (SizeTieredPolicy) tolerates drift: tier
+        # thresholds are ratios over sums, not exact-match checks.
+        manifest = (
+            bucketed.repartition(F.col("_bucket"))
+            .sortWithinPartitions("_bucket")
+            .mapInArrow(
+                self._writer(snap),
+                "path string, bucket int, rows long, bytes long, sidecar boolean",
+            )
+            .collect()
+        )
+        return self._entries(manifest, kind, snap), "executors"
+
+    def _write_arrow(self, table, kind: str, snap: Snapshot) -> list[FileEntry]:
+        """``_write_files``' driver path: write the pyarrow ``table`` of
+        ``snap``'s storage rows plus ``_bucket`` with the same ``_write``,
+        in bucket order, batch by batch. That skips the bucket exchange
+        and the Python worker task, whose start-up is most of a small
+        write's cost: each task spent 150-250 ms in setup_spark_files(),
+        whose importlib.invalidate_caches() makes Python 3.11 re-read the
+        central directory of every zip on the worker path. A no-op
+        mapInArrow over 2,000 rows took ~250 ms against 38 ms without
+        Python (4-vCPU host). The driver holds the rows once plus one
+        sorted batch of arrowMaxRecordsPerBatch rows, not a second sorted
+        copy."""
+        import pyarrow.compute as pc
+
+        conf = self.spark._jsparkSession.sessionState().conf()
+        order = pc.sort_indices(table["_bucket"])  # stable
+        # (a limit of 0 or less means one batch, as in Spark)
+        step = conf.arrowMaxRecordsPerBatch()
+        step = step if step > 0 else max(len(order), 1)
+        batches = (
+            b
+            for i in range(0, len(order), step)
+            for b in table.take(order.slice(i, step)).to_batches()
+        )
+        write = self._writer(snap)
+        return self._entries(
+            [r for b in write(batches) for r in b.to_pylist()], kind, snap
+        )
+
+    def _entries(self, manifest, kind: str, snap: Snapshot) -> list[FileEntry]:
+        """The ``FileEntry`` of each manifest row ``_writer`` emitted."""
+        fp = _schema_fp(snap.storage_schema())
+        return [
+            FileEntry(
+                path=os.path.relpath(r["path"], self.root),
+                bucket=int(r["bucket"]),
+                kind=kind,
+                rows=int(r["rows"]),
+                schema_fp=fp,
+                bytes=int(r["bytes"]),
+                bloom_sidecar=bool(r["sidecar"]),
+            )
+            for r in manifest
+        ]
+
+    def _writer(self, snap: Snapshot):
+        """The ``_write`` generator of one write of ``snap``'s storage
+        rows into a fresh directory: Arrow batches sorted by ``_bucket``
+        in, one manifest batch (path, bucket, rows, bytes, sidecar) out.
+        It runs on the driver (``_write_arrow``) or in ``mapInArrow``
+        tasks (``_write_files``)."""
         write_id = uuid.uuid4().hex
         out_dir = os.path.join(self.data_dir, write_id)
         key_col = snap.key_col
@@ -709,79 +881,7 @@ class LakeTable:
                     ),
                 )
 
-        # Driver path, for rows whose optimizer size estimate is at most
-        # DRIVER_WRITE_MAX_BYTES (the measured crossover, above) and at
-        # most one input split (spark.sql.files.maxPartitionBytes). The
-        # rows are collected as Arrow (a JVM-only job) and written here by
-        # the same _write, in bucket order. That skips the bucket exchange
-        # and the Python worker task, whose start-up is most of a small
-        # write's cost: each task spent 150-250 ms in setup_spark_files(),
-        # whose importlib.invalidate_caches() makes Python 3.11 re-read
-        # the central directory of every zip on the worker path. A no-op
-        # mapInArrow over 2,000 rows took ~250 ms against 38 ms without
-        # Python (4-vCPU host). The estimate is of the compressed input
-        # (parquet file sizes): the collected Arrow rows were 0.8-1.6x it
-        # in the measurement (19 MB at a 12 MB estimate, for random token
-        # ids; better-compressing data expands more). The driver holds
-        # them once plus one sorted batch of arrowMaxRecordsPerBatch
-        # rows, not a second sorted copy. An unknown estimate (RDD-backed
-        # frames report Long.MaxValue) takes the executor path.
-        conf = self.spark._jsparkSession.sessionState().conf()
-        if self._size_estimate(bucketed) <= self._driver_max_bytes():
-            import pyarrow.compute as pc
-
-            write_path = "driver"
-            table = bucketed.toArrow()
-            order = pc.sort_indices(table["_bucket"])  # stable
-            # (a limit of 0 or less means one batch, as in Spark)
-            step = conf.arrowMaxRecordsPerBatch()
-            step = step if step > 0 else max(len(order), 1)
-            batches = (
-                b
-                for i in range(0, len(order), step)
-                for b in table.take(order.slice(i, step)).to_batches()
-            )
-            manifest = [r for b in _write(batches) for r in b.to_pylist()]
-        else:
-            # Executor path: one shuffle, hash-partitioned then sorted by
-            # bucket → one file per bucket per write, one open writer at
-            # a time. Task retries are safe: the final file name is
-            # deterministic per (write_id, partition, bucket) and
-            # published by atomic rename, so a re-run attempt overwrites
-            # identical content; orphaned .tmp files of failed attempts
-            # are swept by vacuum. One assumption worth naming: with
-            # speculative execution a duplicate attempt can re-publish a
-            # bucket's file AFTER the winner's manifest row was
-            # collected, and shuffle-order nondeterminism means the
-            # re-published file may compress to a slightly different
-            # size — so FileEntry.bytes is advisory for the on-disk
-            # file. Row content and blooms are equivalent either way
-            # (same rows, set semantics), and the only consumer of
-            # `bytes` (SizeTieredPolicy) tolerates drift: tier
-            # thresholds are ratios over sums, not exact-match checks.
-            write_path = "executors"
-            manifest = (
-                bucketed.repartition(F.col("_bucket"))
-                .sortWithinPartitions("_bucket")
-                .mapInArrow(
-                    _write,
-                    "path string, bucket int, rows long, bytes long, sidecar boolean",
-                )
-                .collect()
-            )
-        files = [
-            FileEntry(
-                path=os.path.relpath(r["path"], self.root),
-                bucket=int(r["bucket"]),
-                kind=kind,
-                rows=int(r["rows"]),
-                schema_fp=fp,
-                bytes=int(r["bytes"]),
-                bloom_sidecar=bool(r["sidecar"]),
-            )
-            for r in manifest
-        ]
-        return files, write_path
+        return _write
 
     # ----------------------------------------------------------------- read
 
@@ -831,6 +931,76 @@ class LakeTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _read_arrow(
+        self,
+        files: Sequence[FileEntry],
+        snap: Snapshot,
+        *,
+        key=None,
+        with_bucket: bool = False,
+    ):
+        """``scan_files`` on the driver: the storage rows of ``files`` as
+        one pyarrow table aligned to ``snap``'s storage schema (a column
+        added after a file was written reads null, a widened type is
+        cast), only those whose key column equals ``key`` if given, and
+        with ``with_bucket`` each row's file bucket as ``_bucket``."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        target = pa.schema(
+            [
+                pa.field(f.name, to_arrow_type(f.dataType))
+                for f in snap.storage_schema().fields
+            ]
+        )
+        storage = list(target)
+        if with_bucket:
+            target = target.append(pa.field("_bucket", pa.int32()))
+        parts = [target.empty_table()]
+        for fe in files:
+            # ParquetFile.read, not read_table: the dataset layer behind
+            # read_table took twice as long over lake_serve's small files.
+            got = pq.ParquetFile(os.path.join(self.root, fe.path)).read()
+            if key is not None:
+                got = got.filter(pc.equal(got[snap.key_col], key))
+            cols = [
+                pa.nulls(got.num_rows, f.type)
+                if f.name not in got.column_names
+                else got[f.name]
+                if got.schema.field(f.name).type == f.type
+                else got[f.name].cast(f.type)
+                for f in storage
+            ]
+            if with_bucket:
+                cols.append(pa.array(np.full(got.num_rows, fe.bucket, np.int32)))
+            parts.append(pa.table(cols, schema=target))
+        return pa.concat_tables(parts)
+
+    def _input_bytes(self, files: Iterable[FileEntry]) -> int:
+        """The on-disk bytes of ``files``, from snapshot metadata (the
+        file's size for entries written before it was recorded)."""
+        return sum(
+            f.bytes or os.path.getsize(os.path.join(self.root, f.path))
+            for f in files
+        )
+
+    def _reduces_on_driver(self, snap: Snapshot, files: Iterable[FileEntry]) -> bool:
+        """Whether a reduce of ``files`` may run on the driver
+        (``_latest_on_driver``): a plain table (a patch table's overlay
+        reduce stays Spark's one copy), keys pyarrow groups as Spark does,
+        and input within ``_driver_max_bytes``, the bound under which
+        ``_write_files`` collects rows onto the driver. Input that fits
+        one split runs as one Spark task anyway, so a job buys it no
+        parallelism."""
+        return (
+            not snap.patch_enabled
+            and all(snap.schema[k].dataType in _DRIVER_KEY_TYPES for k in snap.key_cols)
+            and self._input_bytes(files) <= self._driver_max_bytes()
+        )
 
     @classmethod
     def _reduce(cls, df: DataFrame, snap: Snapshot) -> DataFrame:
@@ -1027,12 +1197,12 @@ class LakeTable:
         payoff (reference analog: the dictionary's keyed access,
         string_cache.rs; bloom analog: parquet/writer.rs:37-41).
 
-        When those files fit in one Spark input split
-        (``spark.sql.files.maxPartitionBytes``) the read and reduce run
-        on the driver and the answer is a local relation: collecting it
-        starts no Spark job. Larger inputs, patch-enabled tables and a
-        max-``_seq`` tie between differing rows take the Spark plan.
-        A composite-key table has no point lookup (``ValueError``)."""
+        When those files are within ``_driver_max_bytes`` the read and
+        reduce run on the driver (``_latest_on_driver``) and the answer is
+        a local relation: collecting it starts no Spark job. Larger
+        inputs, patch-enabled tables and a max-``_seq`` tie between
+        differing rows take the Spark plan. A composite-key table has no
+        point lookup (``ValueError``)."""
         snap = self.refresh()
         if snap.key_rest:
             raise ValueError(
@@ -1040,19 +1210,7 @@ class LakeTable:
                 f"{snap.key_cols}"
             )
         cand = self.lookup_files(key_value, snap=snap)
-        # Input that fits one split would run as a single Spark task
-        # anyway, so a job buys no parallelism and is all of the cost: a
-        # ~300 KB lookup measured ~265 ms through Spark (plan building
-        # over py4j, planning, two stages around the reduce's exchange)
-        # and ~35 ms read here with pyarrow, on a 4-vCPU host.
-        # Patch-enabled tables stay on Spark: their per-column overlay
-        # reduce would be a second copy of _reduce.
-        conf = self.spark._jsparkSession.sessionState().conf()
-        size = sum(
-            f.bytes or os.path.getsize(os.path.join(self.root, f.path))
-            for f in cand
-        )
-        if not snap.patch_enabled and size <= conf.filesMaxPartitionBytes():
+        if self._reduces_on_driver(snap, cand):
             rows = self._lookup_on_driver(key_value, cand, snap)
             if rows is not None:
                 return self.spark.createDataFrame(rows, snap.schema)
@@ -1065,50 +1223,16 @@ class LakeTable:
     def _lookup_on_driver(
         self, key_value, files: Sequence[FileEntry], snap: Snapshot
     ):
-        """``lookup``'s answer as a pyarrow table in the user schema,
-        read and reduced on the driver (non-patch tables): each file's
-        rows for the key, aligned to the current storage schema like
-        ``scan_files`` (added columns null, widened types cast), then
-        the max-``_seq`` row unless it is a tombstone. None when rows
-        that differ tie on the max ``_seq``: Spark's
-        ``max(struct(...))`` breaks such ties field by field."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        target = pa.schema(
-            [
-                pa.field(f.name, to_arrow_type(f.dataType))
-                for f in snap.storage_schema().fields
-            ]
-        )
-        parts = [target.empty_table()]
-        for fe in files:
-            got = pq.read_table(
-                os.path.join(self.root, fe.path),
-                filters=[(snap.key_col, "==", key_value)],
-            )
-            parts.append(
-                pa.table(
-                    [
-                        got[f.name].cast(f.type)
-                        if f.name in got.column_names
-                        else pa.nulls(got.num_rows, f.type)
-                        for f in target
-                    ],
-                    schema=target,
-                )
-            )
-        rows = pa.concat_tables(parts)
-        if rows.num_rows:
-            seq = rows[SEQ_COL]
-            top = rows.filter(pc.equal(seq, pc.max(seq)))
-            winners = top.to_pylist()
-            if any(w != winners[0] for w in winners[1:]):
-                return None
-            rows = top.slice(0, 0 if winners[0][DELETED_COL] else 1)
-        return rows.select(snap.schema.fieldNames())
+        """``lookup``'s answer as a pyarrow table in the user schema, read
+        and reduced on the driver (non-patch tables): the files' rows for
+        the key, then the max-``_seq`` row unless it is a tombstone. None
+        when rows that differ tie on the max ``_seq``."""
+        rows = self._read_arrow(files, snap, key=key_value)
+        got = _latest_on_driver(rows, snap.key_cols)
+        if got is None:
+            return None
+        latest = got[0][~rows[DELETED_COL].to_numpy(zero_copy_only=False)[got[0]]]
+        return rows.take(latest).select(snap.schema.fieldNames())
 
     def _version_expr(self, snap: Snapshot, of: str = ""):
         """Per-row change version: the highest event seq that shaped
@@ -1148,15 +1272,16 @@ class LakeTable:
         (a replica pump and an index sync) can share its rows.
 
         A feed with no other feed of this handle at its cursor gets the
-        lazy ``changes()`` frame, as does any window whose size estimate
-        is above ``_driver_max_bytes``. Otherwise the window is collected
-        once as Arrow and held as a local relation in one slot, replacing
-        the last one, until each of those other feeds has taken it. A hit
-        still reads the base snapshot, so an expired cursor raises
-        ValueError even when its window is held. In perfbench lake_serve
-        (4-vCPU host) the index sync went 0.47 -> 0.21 s and the pump,
-        which pays the collect plus a small job over the held rows, 0.34
-        -> 0.41 s."""
+        ``changes()`` frame as it is. Otherwise a window that ``changes()``
+        computed on the driver, already a local relation, is held in one
+        slot, replacing the last one, until each of those other feeds has
+        taken it. A window that ``changes()`` left to Spark (a patch table,
+        a differing tie) is collected once as Arrow and held when its input
+        is within ``_driver_max_bytes``; one over the bound stays lazy and
+        is never held. A hit still reads the base snapshot, so an expired
+        cursor raises ValueError even when its window is held. In perfbench
+        lake_serve (4-vCPU host) holding the window took the index sync
+        from 0.47 to 0.21 s."""
         key = (since_snapshot_id, until_snap.snapshot_id)
         if self._window is not None and self._window[0] == key:
             self._base_snapshot(since_snapshot_id)
@@ -1170,11 +1295,29 @@ class LakeTable:
         others = weakref.WeakSet(
             f for f in self._feeds if f is not feed and f.cursor == since_snapshot_id
         )
-        if not others or self._size_estimate(rows) > self._driver_max_bytes():
+        if not others:
             return rows
-        rows = self.spark.createDataFrame(rows.toArrow(), rows.schema)
+        if not rows.isLocal():
+            base_files, added = self._window_files(
+                self._base_snapshot(since_snapshot_id), until_snap
+            )
+            if self._input_bytes(base_files + added) > self._driver_max_bytes():
+                return rows
+            rows = self.spark.createDataFrame(rows.toArrow(), rows.schema)
         self._window = (key, rows, others)
         return rows
+
+    @staticmethod
+    def _window_files(
+        base: Snapshot, snap: Snapshot
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
+        """The files a ``changes()`` window from ``base`` to ``snap``
+        reads: the base files of the buckets it touches, and the files
+        added since ``base``."""
+        base_paths = {f.path for f in base.files}
+        added = [f for f in snap.files if f.path not in base_paths]
+        touched = {f.bucket for f in added}
+        return [f for f in base.files if f.bucket in touched], added
 
     def changes(
         self,
@@ -1194,15 +1337,22 @@ class LakeTable:
         Cost is O(new data + touched buckets of the base state), never
         O(table): only files added since the base snapshot are scanned
         for the window, and the base files are read bucket-pruned to
-        the buckets those files touch. Base and window rows go through
-        ONE ``groupBy(key)`` holding two sets of the reduce's maxes:
-        over all rows (the new state) and over base rows only (the old
-        state). Each base file is scanned once and nothing is joined.
+        the buckets those files touch. The new state is the reduce of
+        base and window rows, the old state the reduce of base rows.
         Compaction output files are included in the window scan but
         produce no false changes — a key's change *version*, the max
         event seq shaping its state incl. patch overlays, only moves
         when a new event wins. Downstream training pipelines consume
         this instead of re-reading the table.
+
+        Where it runs: input within ``_driver_max_bytes`` on a plain
+        table is read and reduced on the driver (``_changes_on_driver``)
+        and returned as a local relation, so collecting it starts no
+        Spark job. Patch tables, larger input and a max-``_seq`` tie
+        between differing rows get a lazy Spark plan: base and window rows
+        go through ONE ``groupBy(key)`` holding two sets of the reduce's
+        maxes, over all rows (the new state) and over base rows only (the
+        old state). Each base file is scanned once and nothing is joined.
 
         Correctness precondition: no ``compact(gc_before_seq=...)``
         inside the window may have GC'd a tombstone this feed hasn't
@@ -1217,10 +1367,13 @@ class LakeTable:
         widens the delivered window past the recorded cursor.
         """
         snap = until_snap or self.refresh()
-        base = self._base_snapshot(since_snapshot_id)
-        base_paths = {f.path for f in base.files}
-        added = [f for f in snap.files if f.path not in base_paths]
-        touched = {f.bucket for f in added}
+        base_files, added = self._window_files(
+            self._base_snapshot(since_snapshot_id), snap
+        )
+        if self._reduces_on_driver(snap, base_files + added):
+            rows = self._changes_on_driver(base_files, added, snap)
+            if rows is not None:
+                return rows
         # With nothing added both scans are empty local relations, and
         # the optimizer folds the whole plan to an empty one. The base
         # FILES are scanned under the CURRENT snapshot's storage schema
@@ -1228,7 +1381,6 @@ class LakeTable:
         # sides align even across mid-window schema evolution. The old
         # state keeps tombstones: a delete followed by re-insert must
         # read as a change.
-        base_files = [f for f in base.files if f.bucket in touched]
         rows = (
             self.scan_files(files=base_files, snap=snap)
             .withColumn("_in_base", F.lit(True))
@@ -1272,6 +1424,72 @@ class LakeTable:
                 )
                 for c in snap.payload_cols()
             ],
+        )
+
+    def _changes_on_driver(
+        self, base_files: list[FileEntry], added: list[FileEntry], snap: Snapshot
+    ) -> DataFrame | None:
+        """``changes()``' Spark plan, computed on the driver for a plain
+        table: the new state is the reduce of base and window rows, the
+        old state the reduce of the base rows, aligned to the new one by
+        key; then the same filters and projection. The answer is a local
+        relation with the Spark plan's schema. None on a differing tie
+        (``_latest_on_driver``).
+
+        Measured on perfbench ``lake_serve``'s windows (seed-41 inputs,
+        4-vCPU host, warm cycles 2-5 of 5, alternating in one process;
+        ~2.8 MB of parquet in, 4.3k rows out): the Spark window, built and
+        collected into a local relation as ``_changes_once`` held it, took
+        500-775 ms; this took 54-66 ms, the local relation included, of
+        which the file reads are ~25 ms and ``createDataFrame`` ~30 ms."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        base = self._read_arrow(base_files, snap)
+        rows = pa.concat_tables([base, self._read_arrow(added, snap)])
+        in_base = np.zeros(rows.num_rows, dtype=bool)
+        in_base[: base.num_rows] = True
+        got = _latest_on_driver(rows, snap.key_cols, in_base)
+        if got is None:
+            return None
+        new, old = got
+        seq = rows[SEQ_COL].to_numpy()
+        deleted = rows[DELETED_COL].to_numpy(zero_copy_only=False)
+        has_old = old >= 0
+        old_at = np.where(has_old, old, 0)
+        old_deleted = has_old & deleted[old_at]
+        # the Spark plan's two filters: the version moved (or the key is
+        # new), and the key is not deleted at both ends
+        keep = (~has_old | (seq[new] > seq[old_at])) & ~(
+            deleted[new] & (~has_old | old_deleted)
+        )
+        out = rows.take(new[keep])
+        old_live = pa.array(old[keep], mask=~(has_old & ~old_deleted)[keep])
+        cols = {
+            "op": pc.if_else(out[DELETED_COL], "D", "U"),
+            **{c: out[c] for c in out.column_names},
+            **{f"_old_{c}": rows[c].take(old_live) for c in snap.payload_cols()},
+        }
+        return self.spark.createDataFrame(
+            pa.table(cols), self._changes_schema(snap)
+        )
+
+    @staticmethod
+    def _changes_schema(snap: Snapshot) -> T.StructType:
+        """The schema of ``changes()``' Spark plan: ``op``, never null,
+        then the storage columns and the ``_old_<col>`` columns, all
+        nullable (files are read nullable)."""
+        storage = snap.storage_schema()
+        return T.StructType(
+            [
+                T.StructField("op", T.StringType(), False),
+                *(T.StructField(f.name, f.dataType, True) for f in storage),
+                *(
+                    T.StructField(f"_old_{c}", storage[c].dataType, True)
+                    for c in snap.payload_cols()
+                ),
+            ]
         )
 
     # ---------------------------------------------------------------- merge
@@ -1666,22 +1884,60 @@ class LakeTable:
         victims = [f for f in snap.files if f.bucket in bset]
         if not victims:
             return None
-        reduced = self._reduce(self.scan_files(files=victims, snap=snap), snap)
-        if gc_before_seq is not None:
-            # Keep tombstones whose version (on patch tables the base
-            # OR any overlay seq: a patch-carrier tombstone still guards
-            # its overlays for a late full event) is at/after the
-            # watermark.
-            reduced = reduced.where(
-                (~F.col(DELETED_COL))
-                | (self._version_expr(snap) >= F.lit(gc_before_seq))
+        new_files = (
+            self._compact_on_driver(victims, snap, gc_before_seq)
+            if self._reduces_on_driver(snap, victims)
+            else None
+        )
+        write_path = "driver"
+        if new_files is None:
+            reduced = self._reduce(self.scan_files(files=victims, snap=snap), snap)
+            if gc_before_seq is not None:
+                # Keep tombstones whose version (on patch tables the base
+                # OR any overlay seq: a patch-carrier tombstone still
+                # guards its overlays for a late full event) is at/after
+                # the watermark.
+                reduced = reduced.where(
+                    (~F.col(DELETED_COL))
+                    | (self._version_expr(snap) >= F.lit(gc_before_seq))
+                )
+            new_files, write_path = self._write_files(
+                reduced, kind="base", snap=snap
             )
-        new_files, write_path = self._write_files(reduced, kind="base", snap=snap)
         fp = _schema_fp(snap.storage_schema())
         snap.schemas[fp] = snap.storage_schema().jsonValue()
         keep = [f for f in snap.files if f.bucket not in bset]
         snap.files = keep + new_files
         return write_path
+
+    def _compact_on_driver(
+        self, victims: list[FileEntry], snap: Snapshot, gc_before_seq: int | None
+    ) -> list[FileEntry] | None:
+        """``_compact_into``'s reduce and write on the driver (a plain
+        table): the victims' rows reduced per key, tombstones older than
+        ``gc_before_seq`` dropped, and each bucket written by
+        ``_write_arrow``, with no Spark job. None on a differing tie
+        (``_latest_on_driver``).
+
+        Measured on perfbench ``lake_serve``'s compactions (same run as
+        ``_changes_on_driver``'s figure; ~0.8 MB rewritten): the Spark
+        reduce job plus the driver write's collect took 337-439 ms, this
+        42-58 ms."""
+        import pyarrow.compute as pc
+
+        rows = self._read_arrow(victims, snap, with_bucket=True)
+        got = _latest_on_driver(rows, snap.key_cols)
+        if got is None:
+            return None
+        rows = rows.take(got[0])
+        if gc_before_seq is not None:
+            rows = rows.filter(
+                pc.or_(
+                    pc.invert(rows[DELETED_COL]),
+                    pc.greater_equal(rows[SEQ_COL], gc_before_seq),
+                )
+            )
+        return self._write_arrow(rows, "base", snap)
 
     def compact(
         self,

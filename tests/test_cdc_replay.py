@@ -256,6 +256,37 @@ def test_advisory_fold_race_never_raises(tmp_path, monkeypatch):
     assert not any(f.endswith(".tmp") for f in files)
 
 
+def test_replay_apply_wall_includes_the_metrics_append(spark, tmp_path, monkeypatch):
+    """``apply_wall_s`` is the wall of each whole ``apply_batch`` call, the
+    metrics/lineage append included: with ``_record`` slowed by a known
+    delay it is at least each batch's merge wall (the metrics row's
+    ``wall_ms``, which ends before the append) plus that delay."""
+    import time
+
+    from ml_data_pipeline_spark.cdc import apply as apply_mod
+
+    delay, merge_walls = 0.25, []
+    record = apply_mod._record
+
+    def slow_record(table, res):
+        merge_walls.append(res["wall_ms"] / 1000.0)
+        time.sleep(delay)
+        return record(table, res)
+
+    monkeypatch.setattr(apply_mod, "_record", slow_record)
+    ev_dir = _gen(spark, tmp_path)
+    create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=4)
+    stats = run_replay(
+        spark,
+        str(tmp_path / "tbl"),
+        ev_dir,
+        str(tmp_path / "ckpt"),
+        max_files_per_trigger=8,
+    )
+    assert stats["batches"] == len(merge_walls) >= 2
+    assert stats["apply_wall_s"] >= sum(merge_walls) + delay * len(merge_walls)
+
+
 def test_replay_with_byte_denominated_batches(spark, tmp_path):
     """maxBytesPerTrigger (the memory-budget knob): batch admission by
     input bytes instead of file count — final state identical, and the

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from ml_data_pipeline_spark.cdc.apply import create_docs_table
 from ml_data_pipeline_spark.cdc.events import DOC_SCHEMA, change_events_df
 from ml_data_pipeline_spark.cdc.oracle import expected_state
+from ml_data_pipeline_spark.lake import table as table_mod
 from ml_data_pipeline_spark.lake.table import LakeTable
 
 
@@ -76,11 +77,13 @@ def _plan_nodes(plan: str) -> list[str]:
 
 
 @pytest.mark.parametrize("patch", [False, True])
-def test_changes_feed_scans_only_new_and_touched(spark, tmp_path, patch):
+def test_changes_feed_scans_only_new_and_touched(spark, tmp_path, patch, monkeypatch):
     """O(new data) contract: the changelog plan reads only files added
     since the base snapshot plus the touched buckets' base files —
     never the whole table — and each of those base files once. Base
-    and window rows meet in one aggregate: one exchange, no join."""
+    and window rows meet in one aggregate: one exchange, no join. (The
+    driver bound is 0, so the window is the Spark plan.)"""
+    monkeypatch.setattr(table_mod, "DRIVER_WRITE_MAX_BYTES", 0)
     t = LakeTable.create(
         spark,
         str(tmp_path / "tbl"),
@@ -119,6 +122,41 @@ def test_changes_feed_scans_only_new_and_touched(spark, tmp_path, patch):
     assert nodes.count("FileScan") == 2, plan
     assert not [n for n in nodes if "Join" in n], plan
     assert len([n for n in nodes if n.endswith("Exchange")]) == 1, plan
+
+
+def test_driver_window_reads_only_new_and_touched(spark, tmp_path, monkeypatch):
+    """The O(new data) contract on the driver path: a small window of a
+    plain table reads exactly the files added since the base snapshot plus
+    the touched buckets' base files, each once, starts no Spark job, and
+    equals the Spark window."""
+    t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=8)
+    t.merge_batch(change_events_df(spark, 200, 2000, seed=9), batch_id=0)
+    snap_a = t.snapshot.snapshot_id
+    t.merge_batch(change_events_df(spark, 3, 30, seed=10, seq_start=5000), batch_id=1)
+    base = t.snapshot_by_id(snap_a).files
+    added = [f for f in t.snapshot.files if f.path not in {x.path for x in base}]
+    touched = {f.bucket for f in added}
+    assert len(touched) < 8  # really pruned
+    read, read_arrow = [], t._read_arrow
+
+    def spy(files, snap, **kw):
+        read.extend(f.path for f in files)
+        return read_arrow(files, snap, **kw)
+
+    monkeypatch.setattr(t, "_read_arrow", spy)
+    sc = spark.sparkContext
+    jobs = sc.statusTracker().getJobIdsForGroup(None)
+    rows = t.changes(snap_a)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(None) == jobs
+    assert rows.isLocal()
+    want = [f.path for f in added] + [f.path for f in base if f.bucket in touched]
+    assert sorted(read) == sorted(want)
+    with monkeypatch.context() as m:
+        m.setattr(table_mod, "DRIVER_WRITE_MAX_BYTES", 0)
+        lazy = t.changes(snap_a)
+    assert not lazy.isLocal() and rows.schema == lazy.schema
+    assert sorted(map(tuple, rows.collect())) == sorted(map(tuple, lazy.collect()))
 
 
 def test_poll_window_pinned_to_reported_target(spark, tmp_path):

@@ -2,13 +2,14 @@
 
 ``ChangesFeed.poll`` takes its window from ``LakeTable._changes_once``:
 while another feed of the source handle is at the same cursor, a window
-whose size estimate is within the driver's collect bound is collected
-once and held on the handle, keyed by its (since, until) snapshot ids, so
-that feed reuses it; the slot is released once those feeds have taken
-it. A larger window, or the window of a feed with no other feed at its
-cursor, stays lazy. Truth model: the rows a feed delivers equal the
-lazy ``changes()`` of the same snapshot pair, and the replica and index
-built through a shared handle equal those built through separate ones.
+whose input is within the driver bound (computed on the driver by
+``changes()`` itself, a local relation) is held on the handle, keyed by
+its (since, until) snapshot ids, so that feed reuses it; the slot is
+released once those feeds have taken it. A larger window stays lazy, and
+a feed with no other feed at its cursor gets ``changes()`` as it is.
+Truth model: the rows a feed delivers equal ``changes()`` of the same
+snapshot pair, and the replica and index built through a shared handle
+equal those built through separate ones.
 """
 
 from __future__ import annotations
@@ -153,7 +154,7 @@ def test_window_above_the_bound_stays_lazy(spark, tmp_path, monkeypatch):
 
 
 def test_lone_feed_holds_no_window(spark, tmp_path, monkeypatch):
-    """A feed alone on its handle polls the lazy ``changes()`` frame itself
+    """A feed alone on its handle polls the ``changes()`` frame itself
     and holds nothing; a second feed of the handle at its cursor makes
     windows held, until it is dropped."""
     src = create_docs_table(spark, str(tmp_path / "src"), n_buckets=4)
@@ -178,7 +179,8 @@ def test_lone_feed_holds_no_window(spark, tmp_path, monkeypatch):
     other.commit(1)
     src.merge_batch(_ev(spark, BATCHES[1]), batch_id=1)
     rows, target = feed.poll()
-    assert rows is not frames[-1] and src._window[0] == (1, 2)
+    assert rows is frames[-1] and rows.isLocal()
+    assert src._window[0] == (1, 2) and src._window[1] is rows
     del other
     gc.collect()
     src.merge_batch(_ev(spark, BATCHES[2]), batch_id=2)

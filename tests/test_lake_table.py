@@ -823,22 +823,38 @@ def test_write_paths_agree(spark, tmp_path, split_bytes, patch):
     _assert_same_tables(a, b, keys)
 
 
-def test_small_write_job_counts(spark, tmp_path):
-    """A small parquet-backed merge runs one Spark job: its input fits one
-    split, so the resolve runs in the task of the Arrow collect, with no
-    exchange. A small compaction runs two (the reduce's map stage, then
-    the collect). There is no bucket exchange and no Python stage; a
-    change that adds a job to either fails here."""
-    t = _mk_table(spark, tmp_path)
+def _small_write_job_counts(spark, tmp_path, properties=None) -> tuple[int, int]:
+    """The Spark jobs of a small parquet-backed merge into a table holding
+    one merge, then of its compaction (both written on the driver)."""
+    t = LakeTable.create(
+        spark, str(tmp_path / "tbl"), DOC_SCHEMA, key_col="doc_id", n_buckets=4,
+        properties=properties,
+    )
     rows = [(i, "I", f"d{i}", [i], 1, "web", None) for i in range(200)]
     t.merge_batch(_parquet_events(spark, tmp_path, rows), batch_id=0)
     ev = _parquet_events(spark, tmp_path, [(1000 + s, *r[1:]) for s, r in enumerate(rows)])
     before = _jobs(spark)
     assert t.merge_batch(ev, batch_id=1)["write_path"] == "driver"
-    assert len(_jobs(spark) - before) == 1
+    merge_jobs = len(_jobs(spark) - before)
     before = _jobs(spark)
     assert t.compact()["write_path"] == "driver"
-    assert len(_jobs(spark) - before) == 2
+    return merge_jobs, len(_jobs(spark) - before)
+
+
+def test_small_write_job_counts(spark, tmp_path):
+    """A small parquet-backed merge runs one Spark job: its input fits one
+    split, so the resolve runs in the task of the Arrow collect, with no
+    exchange. A small compaction of a plain table runs none: its files are
+    read, reduced and written on the driver. There is no bucket exchange
+    and no Python stage; a change that adds a job to either fails here."""
+    assert _small_write_job_counts(spark, tmp_path) == (1, 0)
+
+
+def test_small_patch_compaction_job_count(spark, tmp_path):
+    """A patch table's reduce stays on Spark: its small compaction runs two
+    jobs (the reduce's map stage, then the collect of the driver write)."""
+    props = {"patch.enabled": "true"}
+    assert _small_write_job_counts(spark, tmp_path, props) == (1, 2)
 
 
 def test_driver_write_bound(spark, tmp_path, monkeypatch):

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ml_data_pipeline_spark.cdc.apply import apply_batch, create_docs_table
 from ml_data_pipeline_spark.cdc.events import CHANGE_SCHEMA
+from ml_data_pipeline_spark.lake import table as table_mod
 from ml_data_pipeline_spark.lake.feed import ChangesFeed
 from ml_data_pipeline_spark.lake.token_index import TokenIndex
 
@@ -410,7 +411,9 @@ def test_index_merge_input_plans_changes_once(spark, tmp_path, monkeypatch):
     aggregate (partial and final): adds and deletes are one explode,
     not a union of two projections that each plan the aggregate. The
     only union left is the aggregate's own input (base files beside
-    window files); a window from the empty table has none."""
+    window files); a window from the empty table has none. (The driver
+    bound is 0, so each window is the Spark plan.)"""
+    monkeypatch.setattr(table_mod, "DRIVER_WRITE_MAX_BYTES", 0)
     t = create_docs_table(spark, str(tmp_path / "tbl"), n_buckets=4)
     ix = TokenIndex.create(spark, str(tmp_path / "ix"), n_buckets=4)
     feed = ChangesFeed(t, str(tmp_path / "cursor.json"))
